@@ -62,7 +62,8 @@ object Selection {
     val cells = rawHist.withColumn("side", lit("r"))
       .unionByName(tgtHist.withColumnRenamed("tc", "rc")
         .withColumn("side", lit("t")))
-      .collect().map(r => (r.getString(2), r.getString(0), r.getLong(1)))
+      .collect().map(r => (r.getAs[String]("side"), r.getAs[String]("b"),
+        r.getAs[Long]("rc")))
     val rawCells = cells.collect { case ("r", b, c) => b -> c }.toMap
     val tgtCells = cells.collect { case ("t", b, c) => b -> c }.toMap
     val rawTotal = rawCells.values.sum

@@ -434,12 +434,14 @@ object TextAnalysis {
       .getOption("spark.graft.bpe.localVocabRows")
       .map(_.toLong).getOrElse(100000L)
     val merges = Seq.newBuilder[(Int, String, String, Long)]
+    // `sep` is a literal, never a regex
+    val sepRe = java.util.regex.Pattern.quote(sep)
     if (vocab.count() <= localThreshold) {
       var rows = vocab.collect().map(r => (r.getString(0), r.getLong(1)))
       for (r <- 1 to rounds) {
         val cnt = scala.collection.mutable.HashMap.empty[String, Long]
         for ((s, f) <- rows) {
-          val syms = s.split(sep, -1)
+          val syms = s.split(sepRe, -1)
           var i = 0
           while (i < syms.length - 1) {
             val p = syms(i) + sep + syms(i + 1)
@@ -453,7 +455,7 @@ object TextAnalysis {
         for ((p, c) <- cnt)
           if (c > bestCnt || (c == bestCnt && utf8Less(p, bestPair)))
             { bestPair = p; bestCnt = c }
-        val Array(a, b) = bestPair.split(sep)
+        val Array(a, b) = bestPair.split(sepRe)
         merges += ((r, a, b, bestCnt))
         val from = a + sep + b; val to = a + b
         rows = rows.map { case (s, f) => (s.replace(from, to), f) }
@@ -465,7 +467,7 @@ object TextAnalysis {
           .groupBy("pair").agg(sum("freq").as("cnt"))
           .orderBy(col("cnt").desc, col("pair")).limit(1)
           .collect()(0)                  // one row — planner metadata
-        val Array(a, b) = best.getString(0).split(sep)
+        val Array(a, b) = best.getString(0).split(sepRe)
         merges += ((r, a, b, best.getLong(1)))
         vocab = vocab.select(
           replace(col("s"), lit(a + sep + b), lit(a + b)).as("s"),

@@ -19,10 +19,18 @@ import graft.operators.{Merge, SystemColumns}
   *   delta/seg-<batchId>/  // one deduped change segment per micro-batch
   * }}}
   *
-  * Each segment holds ONE row per key (the batch's dedup-keep-latest
-  * survivor) plus delete tombstones (`_op_type = 'd'`), stamped with a
-  * monotone `_delta_seq` (the micro-batch id). A CDC micro-batch
-  * therefore writes O(batch) bytes — never O(base).
+  * A segment is whatever frame `writeSegment` is given — upserts and
+  * delete tombstones (`_op_type = 'd'`), stamped with a monotone
+  * `_delta_seq` (the micro-batch id). `CdcStream.applyBatch` hands it
+  * the batch's dedup-keep-latest survivors, so its segments hold one
+  * row per key. Nothing here checks that: a frame that repeats a key
+  * is written as given. `read` orders changes by `_delta_seq` alone,
+  * so which of a key's occurrences inside one segment it keeps is
+  * unspecified; `IcebergMetadata.publishMoR` keeps the last-written
+  * one through positional deletes, and tells the two shapes apart
+  * from footer row counts, so a key-unique segment pays no positional
+  * pass. A CDC micro-batch therefore writes O(batch) bytes — never
+  * O(base).
   *
   * Read side (`read`): the newest row per key across segments is
   * resolved with a skew-resistant `max_by` aggregate over the (small)

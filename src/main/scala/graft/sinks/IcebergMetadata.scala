@@ -1002,7 +1002,7 @@ object IcebergMetadata {
       p._2.get("current-snapshot-id").asLong))
     snap.put("timestamp-ms", nowMs)
     snap.put("sequence-number", seq)
-    snap.put("schema-id", 0)
+    snap.put("schema-id", schemaId)
     snap.put("manifest-list", listFile.abs)
     val sum = snap.putObject("summary")
     sum.put("operation", operation)
@@ -3082,15 +3082,22 @@ object IcebergMetadata {
     spark.read.parquet(keptFiles: _*)
   }
 
-  /** Publish a `DeltaSegments` table as ONE merge-on-read snapshot:
-    * base files at sequence 1 (in place, zero copy); per delta segment
-    * k (batch order) a derived data file (the segment's non-tombstone
-    * rows, internal columns dropped) and an EQUALITY-DELETE file (every
+  /** Publish a `DeltaSegments` table as ONE merge-on-read snapshot.
+    * With `s` the parent's `last-sequence-number` (0 on the first
+    * publish): base files in place, zero copy, at sequence s+1 (or the
+    * sequence the parent already gave them); per delta segment k
+    * (batch order) at sequence s+k+2 an EQUALITY-DELETE file (every
     * key the segment touched — an upsert is delete+insert at the same
     * sequence, exactly the reference writer's per-batch eq-delete
-    * emission) at sequence k+2. `summary` should carry the 2PC state
-    * (`olake_2pc`), recoverable via `commitState` — the reference's
-    * restart path reads the same property back (iceberg.go:521-545). */
+    * emission) and a derived data file (the segment's non-tombstone
+    * rows, internal columns dropped). A segment that repeats a key
+    * also gets a POSITIONAL-delete file for the occurrences that must
+    * not survive; whether a key repeats is read from footers (the
+    * eq-delete file's row count = distinct keys vs the segment's row
+    * count), so a key-unique segment costs no positional pass. `summary`
+    * should carry the 2PC state (`olake_2pc`), recoverable via
+    * `commitState` — the reference's restart path reads the same
+    * property back (iceberg.go:521-545). */
   def publishMoR(spark: SparkSession, tableDir: String, tablePath: String,
                  summary: Map[String, String] = Map.empty,
                  partitionRegex: Option[String] = None): Commit = withCommitRetry(tableDir) { withMicrosTimestamps(spark) {
@@ -3104,6 +3111,17 @@ object IcebergMetadata {
     // racing commit over (its manifest list is rebuilt whole here, so
     // today that is benign, but only by accident of this code shape)
     val hintBase = currentMetadata(tableDir)
+    // sequence numbers continue the parent's, so they never decrease
+    // across snapshots (a compaction between two publishes would
+    // otherwise restart them): new files number above the parent's
+    // last-sequence-number, and a base file the parent already lists
+    // keeps the data sequence number it was added with, as any carried
+    // file does. Only the order is read back, so readMoR is unchanged.
+    val seqBase = hintBase.fold(0L)(_._2.get("last-sequence-number").asLong)
+    val parentSeqs: Map[String, Long] = hintBase
+      .map(_._2.path("current-snapshot-id").asLong(-1L)).filter(_ >= 0L)
+      .fold(Map.empty[String, Long])(id => dataFileStats(tableDir, Some(id))
+        .collect { case e if e.content == 0 => e.path -> e.seq }.toMap)
     val keyCol = SystemColumns.OlakeId
     val viewSchema = DeltaSegments.read(spark, tablePath).schema
     // the upsert key doubles as the schema's identifier-field-ids (row
@@ -3132,14 +3150,15 @@ object IcebergMetadata {
     // unprunable-but-legal spec-0 shape
     val baseIsPartitioned = parts.nonEmpty && base.exists &&
       base.list.exists(f => f.isDirectory && f.name.startsWith("__p_"))
-    val baseEntries =
+    val baseEntries = (
       if (!base.exists) Nil
       else if (baseIsPartitioned)
         partitionedLeaves(base, parts).flatMap { case (tup, dir) =>
-          entriesFor(spark, dir.abs, seq = 1L, fieldIds = statIds,
+          entriesFor(spark, dir.abs, seq = seqBase + 1, fieldIds = statIds,
             partition = tup)
         }
-      else entriesFor(spark, base.abs, seq = 1L, fieldIds = statIds)
+      else entriesFor(spark, base.abs, seq = seqBase + 1, fieldIds = statIds)
+    ).map(e => parentSeqs.get(e.path).fold(e)(s => e.copy(seq = s)))
 
     val segs = DeltaSegments.listSegments(tablePath)
     // derived files are IMMUTABLE, as the Iceberg spec assumes: each
@@ -3152,10 +3171,18 @@ object IcebergMetadata {
     val derived = TableIO(tableDir).child("data").child(snapshotId.toString)
     derived.mkdirs()
     val segResults = segs.zipWithIndex.map { case (seg, k) =>
-      val seq = k + 2L
+      val seq = seqBase + k + 2L
       val segDf = spark.read.parquet(seg.getPath)
       def projected(df: DataFrame) = df.select(dataCols.map(c =>
         if (df.columns.contains(c)) col(c) else lit(null).as(c)): _*)
+      // the equality-delete file first: its footer row count (distinct
+      // keys) against the segment's footer row count (rows) decides
+      // below whether the positional pass can find anything at all
+      val delDir = derived.child(s"${seg.getName}-deletes")
+      segDf.select(col(keyCol)).distinct()
+        .write.mode("overwrite").parquet(delDir.abs)
+      val eqEntries = entriesFor(spark, delDir.abs, seq, content = 2,
+        equalityIds = eqIds, fieldIds = statIds)
       val dataDir = derived.child(s"${seg.getName}-data")
       val liveRows = projected(segDf.where(col(SystemColumns.OpType) =!=
         SystemColumns.OpDelete))
@@ -3174,10 +3201,18 @@ object IcebergMetadata {
       // (a partitioned all-delete segment writes NO data files — hive
       // layout has no empty-file carrier — so the positional pass has
       // nothing to read and nothing to kill; eq-deletes do all the work)
+      // A key-unique segment (as many distinct keys as rows — the
+      // shape `CdcStream.applyBatch`'s dedup writes) has no earlier
+      // occurrence to kill, and its tombstones carry no data row, so
+      // the pass is skipped; both counts are footer reads, no job.
+      val segRows = segDf.inputFiles.toSeq
+        .map(f => footerInfo(spark, f, Map.empty)._1).sum
+      val keyUnique = eqEntries.map(_.rows).sum == segRows
       val dataLeaves =
         if (parts.isEmpty) Nil else partitionedLeaves(dataDir, parts)
       val writtenOpt =
-        if (parts.isEmpty) Some(spark.read.parquet(dataDir.abs))
+        if (keyUnique) None
+        else if (parts.isEmpty) Some(spark.read.parquet(dataDir.abs))
         else if (dataLeaves.isEmpty) None
         else Some(spark.read.parquet(dataLeaves.map(_._2.abs): _*))
       val posEntries = writtenOpt.toSeq.flatMap { raw =>
@@ -3216,9 +3251,6 @@ object IcebergMetadata {
           entriesFor(spark, posDir.abs, seq, content = 1)
         }
       }
-      val delDir = derived.child(s"${seg.getName}-deletes")
-      segDf.select(col(keyCol)).distinct()
-        .write.mode("overwrite").parquet(delDir.abs)
       val segDataEntries =
         if (parts.isEmpty)
           entriesFor(spark, dataDir.abs, seq, fieldIds = statIds)
@@ -3226,9 +3258,7 @@ object IcebergMetadata {
           entriesFor(spark, dir.abs, seq, fieldIds = statIds,
             partition = tup)
         }
-      (segDataEntries,
-        posEntries ++ entriesFor(spark, delDir.abs, seq, content = 2,
-          equalityIds = eqIds, fieldIds = statIds))
+      (segDataEntries, posEntries ++ eqEntries)
     }
 
     val segDataBySeg = segResults.map(_._1)
@@ -3236,7 +3266,9 @@ object IcebergMetadata {
     val deleteEntries = segResults.flatMap(_._2) // pos + equality
     require(dataEntries.nonEmpty || deleteEntries.nonEmpty,
       s"nothing to publish under $tablePath")
-    val seqMax = (dataEntries ++ deleteEntries).map(_.seq).max
+    // a republish that only carries files still takes a new number
+    val seqMax = ((dataEntries ++ deleteEntries).map(_.seq) :+
+      (seqBase + 1)).max
     val manifests =
       if (parts.isEmpty)
         Seq(ManifestOut(writeManifest(md, dataEntries, snapshotId,

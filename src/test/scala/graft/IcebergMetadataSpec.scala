@@ -3261,4 +3261,157 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(log.collect { case (k, v, "delete") => (k, v) } == v1 -- v2)
     assert(log.exists(_._3 == "delete"), "eq-delete row not emitted")
   }
+
+  /** Spark jobs `body` starts, counted by a listener. A marker job run
+    * after `body` is awaited: listener events arrive in order, so once
+    * the marker is seen every job of `body` has been counted. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val counted = new java.util.concurrent.atomic.AtomicInteger(0)
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .foreach { g =>
+            if (g == group) counted.incrementAndGet()
+            else if (g == marker) done.countDown()
+          }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker job")
+      (out, counted.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("publishMoR: a key-unique segment skips the positional pass " +
+    "(no pos-delete file, at most 6 jobs); a key that repeats only " +
+    "through its tombstone still dies positionally") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.SystemColumns.{OlakeId, OpType, CdcTimestamp}
+    def mk(): (String, String) = {
+      val table = Files.createTempDirectory("graft_uniq").toString
+      spark.range(50).select(
+        col("id").cast("string").as(OlakeId), col("id").as("v"))
+        .write.parquet(s"$table/base")
+      (table, Files.createTempDirectory("graft_uniqice").toString)
+    }
+    def change(ids: Range, op: String, vOff: Long = 0) =
+      spark.range(ids.start, ids.end).select(
+        col("id").cast("string").as(OlakeId), (col("id") + vOff).as("v"),
+        lit(op).as(OpType), current_timestamp().as(CdcTimestamp))
+    def snap(df: org.apache.spark.sql.DataFrame) = df
+      .select(OlakeId, "v").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    def posDirs(ice: String) = new File(s"$ice/data").listFiles
+      .flatMap(_.listFiles).map(_.getName).filter(_.endsWith("-posdeletes"))
+
+    // the CDC apply shape: updates, deletes, inserts, one row per key
+    val (table, ice) = mk()
+    DeltaSegments.writeSegment(change(0 until 10, "u", vOff = 100)
+      .unionByName(change(40 until 50, "d"))
+      .unionByName(change(50 until 60, "c")), table, 1L)
+    val (_, jobs) = jobsOf(IcebergMetadata.publishMoR(spark, ice, table))
+    assert(jobs <= 6, s"key-unique publish ran $jobs Spark jobs")
+    assert(posDirs(ice).isEmpty, "key-unique segment wrote pos deletes")
+    assert(IcebergMetadata.dataFileStats(ice).forall(_.content != 1))
+    assert(snap(IcebergMetadata.readMoR(spark, ice)) ==
+      snap(DeltaSegments.read(spark, table)))
+
+    // key "7" written, then deleted, in ONE segment: the counts differ,
+    // so the positional pass runs and kills its data row
+    val (table2, ice2) = mk()
+    import spark.implicits._
+    val seg = Seq(("7", 700L, "u", 1L), ("7", -1L, "d", 2L),
+        ("8", 800L, "u", 3L))
+      .toDF(OlakeId, "v", OpType, "ord")
+      .withColumn(CdcTimestamp, current_timestamp())
+      .coalesce(1).sortWithinPartitions("ord").drop("ord")
+    DeltaSegments.writeSegment(seg, table2, 1L)
+    IcebergMetadata.publishMoR(spark, ice2, table2): Unit
+    assert(posDirs(ice2).length == 1)
+    val got = snap(IcebergMetadata.readMoR(spark, ice2)).toMap
+    assert(!got.contains("7") && got("8") == 800L && got.size == 49)
+  }
+
+  test("publishMoR: sequence numbers never decrease across a " +
+    "compaction; a carried base file keeps its sequence") {
+    import org.apache.spark.sql.functions._
+    import scala.jdk.CollectionConverters._
+    import graft.operators.SystemColumns.{OlakeId, OpType, CdcTimestamp}
+    val table = Files.createTempDirectory("graft_seqmono").toString
+    val ice = Files.createTempDirectory("graft_seqmonoice").toString
+    spark.range(20).select(
+      col("id").cast("string").as(OlakeId), col("id").as("v"))
+      .write.parquet(s"$table/base")
+    def seg(ids: Range, batch: Long): Unit = DeltaSegments.writeSegment(
+      spark.range(ids.start, ids.end).select(
+        col("id").cast("string").as(OlakeId), (col("id") + batch).as("v"),
+        lit("u").as(OpType), current_timestamp().as(CdcTimestamp)),
+      table, batch)
+    def snap(df: org.apache.spark.sql.DataFrame) = df
+      .select(OlakeId, "v").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    def baseSeqs() = IcebergMetadata.dataFileStats(ice)
+      .filter(_.path.contains("/base/")).map(_.seq).toSet
+    def publish(): IcebergMetadata.Commit = {
+      val c = IcebergMetadata.publishMoR(spark, ice, table)
+      assert(snap(IcebergMetadata.readMoR(spark, ice)) ==
+        snap(DeltaSegments.read(spark, table)))
+      c
+    }
+    seg(0 until 5, 1L)
+    val c1 = publish()
+    assert(c1.sequenceNumber == 2) // first publish: base=1, batch 1=2
+    seg(5 until 10, 2L)
+    publish(): Unit
+    assert(baseSeqs() == Set(1L), "carried base must keep sequence 1")
+    DeltaSegments.compact(spark, table) // base rewritten, segments gone
+    publish(): Unit
+    seg(10 until 15, 3L)
+    val c4 = publish()
+    val (_, meta) = IcebergMetadata.currentMetadata(ice).get
+    val seqs = meta.withArray[com.fasterxml.jackson.databind.node
+        .ArrayNode]("snapshots").asScala.map(_.get("sequence-number").asLong)
+      .toSeq
+    assert(seqs.size == 4)
+    assert(seqs.zip(seqs.tail).forall { case (a, b) => a < b },
+      s"snapshot sequence numbers not increasing: $seqs")
+    assert(meta.get("last-sequence-number").asLong == seqs.last)
+    assert(c4.sequenceNumber == seqs.last)
+    // the compacted base took one number above the parent's and kept
+    // it when the next publish carried it
+    assert(baseSeqs() == Set(seqs(2)))
+  }
+
+  test("snapshot schema-id follows evolution: the current snapshot's " +
+    "schema has the column a later segment added") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.SystemColumns.{OlakeId, OpType, CdcTimestamp}
+    val table = Files.createTempDirectory("graft_snapsid").toString
+    val ice = Files.createTempDirectory("graft_snapsidice").toString
+    spark.range(10).select(
+      col("id").cast("string").as(OlakeId), col("id").as("v"))
+      .write.parquet(s"$table/base")
+    def change(ids: Range) = spark.range(ids.start, ids.end).select(
+      col("id").cast("string").as(OlakeId), (col("id") + 100).as("v"),
+      lit("u").as(OpType), current_timestamp().as(CdcTimestamp))
+    DeltaSegments.writeSegment(change(0 until 2), table, 1L)
+    val c1 = IcebergMetadata.publishMoR(spark, ice, table)
+    DeltaSegments.writeSegment(change(2 until 4)
+      .withColumn("note", lit("n")), table, 2L)
+    val c2 = IcebergMetadata.publishMoR(spark, ice, table)
+    assert(IcebergMetadata.sparkSchemaForSnapshot(ice, c2.snapshotId)
+      .fieldNames.contains("note"))
+    assert(!IcebergMetadata.sparkSchemaForSnapshot(ice, c1.snapshotId)
+      .fieldNames.contains("note"))
+  }
 }

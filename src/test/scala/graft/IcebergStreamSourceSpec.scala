@@ -771,6 +771,20 @@ class IcebergStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("id", "v").collect().map(r => (r.getLong(0), r.getLong(1)))
       .toSet
     assert(stateAfter == expected)
+    // a third publish re-derives segment 1 and adds an update of key 3:
+    // the base rows segment 1 already killed must not die a second time
+    graft.sinks.DeltaSegments.writeSegment(spark.range(3, 4).select(
+        col("id").cast("string").as(SystemColumns.OlakeId),
+        col("id"), lit(333L).as("v"), lit("u").as(SystemColumns.OpType),
+        current_timestamp().as(SystemColumns.CdcTimestamp)), table, 2L)
+    IcebergMetadata.publishMoR(spark, ice, table): Unit
+    val d3 = runToDone(ice, ckpt, Map("mode" -> "changelog")).flatMap(_._2)
+    def rowsOf(t: String) = d3.filter(_.getAs[String]("change_type") == t)
+      .map(r => (r.getLong(1), r.getLong(2)))
+    // key 3's old row, plus segment 1's row moving to its new file
+    assert(rowsOf("delete").toSet == Set((3L, 30L), (2L, 999L)),
+      s"wrong kill set: ${rowsOf("delete")}")
+    assert(rowsOf("insert").toSet == Set((3L, 333L), (2L, 999L)))
   }
 
   // ---- round 17: partitioned SQL/streaming writes, truncate
