@@ -44,7 +44,19 @@ object PgOutput {
                           names: Seq[String], values: Seq[String],
                           typeOids: Seq[Int])
 
+  /** A malformed message: decoding failed at byte `offset` of it. */
+  final case class DecodeError(offset: Int, reason: String)
+      extends RuntimeException(s"pgoutput: $reason at byte $offset")
+
   // ---- byte-level parsing ------------------------------------------------
+
+  /** Run `parse` over `b`, reporting a read past its end as a
+    * [[DecodeError]] at the position it stopped. */
+  private def guarded[T](b: ByteBuffer)(parse: => T): T =
+    try parse
+    catch { case _: java.nio.BufferUnderflowException =>
+      throw DecodeError(b.position(), s"truncated after ${b.limit()} bytes")
+    }
 
   private def cString(b: ByteBuffer): String = {
     val bytes = new java.io.ByteArrayOutputStream
@@ -57,6 +69,7 @@ object PgOutput {
     * 'u' unchanged TOAST, 't' text (Int32 length + bytes). */
   private def tuple(b: ByteBuffer): Array[String] = {
     val n = b.getShort.toInt
+    if (n < 0) throw DecodeError(b.position() - 2, s"column count $n")
     val out = new Array[String](n)
     var i = 0
     while (i < n) {
@@ -65,9 +78,12 @@ object PgOutput {
         case 'u' => out(i) = ToastMarker
         case 't' =>
           val len = b.getInt
+          if (len < 0 || len > b.remaining())
+            throw DecodeError(b.position() - 4,
+              s"value length $len with ${b.remaining()} bytes left")
           val bytes = new Array[Byte](len); b.get(bytes)
           out(i) = new String(bytes, StandardCharsets.UTF_8)
-        case k => throw new IllegalArgumentException(s"bad tuple kind '$k'")
+        case k => throw DecodeError(b.position() - 1, s"bad tuple kind '$k'")
       }
       i += 1
     }
@@ -85,9 +101,10 @@ object PgOutput {
     private val relations = scala.collection.mutable.Map.empty[Int, Relation]
     private var commitTs: Long = 0L
 
+    /** Decode one message; a malformed one raises [[DecodeError]]. */
     def decode(msg: Array[Byte], lsn: Long): Iterator[Change] = {
       val b = ByteBuffer.wrap(msg)
-      b.get().toChar match {
+      guarded(b)(b.get().toChar match {
         case 'R' =>
           val id = b.getInt
           val ns = cString(b); val name = cString(b)
@@ -104,15 +121,16 @@ object PgOutput {
           Iterator.empty
         case 'C' => Iterator.empty
         case 'I' =>
-          val rel = relations(b.getInt)
-          require(b.get().toChar == 'N', "insert must carry a new tuple")
+          val rel = relation(b)
+          expect(b, "N", "insert must carry a new tuple")
           emit("insert", rel, tuple(b), lsn)
         case 'U' =>
-          val rel = relations(b.getInt)
+          val rel = relation(b)
           var old: Array[String] = null
-          var marker = b.get().toChar
-          if (marker == 'K' || marker == 'O') { old = tuple(b); marker = b.get().toChar }
-          require(marker == 'N', "update must carry a new tuple")
+          if (expect(b, "KON", "update must carry a new tuple") != 'N') {
+            old = tuple(b)
+            expect(b, "N", "update must carry a new tuple")
+          }
           val nw = tuple(b)
           // Unchanged TOAST columns: take the old value when available
           // (REPLICA IDENTITY FULL), else null — pgoutput.go:152-159.
@@ -123,12 +141,25 @@ object PgOutput {
           }
           emit("update", rel, resolved, lsn)
         case 'D' =>
-          val rel = relations(b.getInt)
-          val marker = b.get().toChar
-          require(marker == 'K' || marker == 'O', "delete carries old/key tuple")
+          val rel = relation(b)
+          expect(b, "KO", "delete carries old/key tuple")
           emit("delete", rel, tuple(b), lsn)
         case _ => Iterator.empty // Origin/Type/Truncate: ignored, like the reference
-      }
+      })
+    }
+
+    private def relation(b: ByteBuffer): Relation = {
+      val id = b.getInt
+      relations.getOrElse(id,
+        throw DecodeError(b.position() - 4, s"unknown relation id $id"))
+    }
+
+    /** The next byte, which must be one of `allowed`. */
+    private def expect(b: ByteBuffer, allowed: String, what: String): Char = {
+      val c = b.get().toChar
+      if (!allowed.contains(c))
+        throw DecodeError(b.position() - 1, s"$what, got '$c'")
+      c
     }
 
     private def emit(kind: String, rel: Relation, vals: Array[String],
@@ -145,13 +176,13 @@ object PgOutput {
     * (the reference only advances its LSN on those — pgoutput.go:93-103). */
   def unframe(frame: Array[Byte]): Option[(Long, Array[Byte])] = {
     val b = ByteBuffer.wrap(frame)
-    b.get().toChar match {
+    guarded(b)(b.get().toChar match {
       case 'w' =>
         val walStart = b.getLong; b.getLong; b.getLong
         val body = new Array[Byte](b.remaining()); b.get(body)
         Some((walStart, body))
       case _ => None
-    }
+    })
   }
 
   // ---- DataFrame surface -------------------------------------------------

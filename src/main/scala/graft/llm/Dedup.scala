@@ -208,9 +208,8 @@ object Dedup {
     // materialized off-cache once. The crossover costs one cheap
     // column-pruned count; `spark.graft.jaccardPrefix.materializeRows`
     // overrides the default for cluster tuning.
-    val matThreshold = df.sparkSession.conf
-      .getOption("spark.graft.jaccardPrefix.materializeRows")
-      .map(_.toLong).getOrElse(2000L)
+    val matThreshold = longConf(df.sparkSession,
+      "spark.graft.jaccardPrefix.materializeRows", 2000L)
     val materialize = df.count() > matThreshold
     val toks0 = df.select(col(idCol).as("id"),
       explode(array_distinct(tokens(col(textCol)))).as("tok"))

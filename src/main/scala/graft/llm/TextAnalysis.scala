@@ -430,9 +430,8 @@ object TextAnalysis {
     // and the q_bpe_train/q_bpe_pairs oracles pin the equality. Above
     // the threshold the per-round jobs still touch only the vocab
     // table, never the corpus.
-    val localThreshold = df.sparkSession.conf
-      .getOption("spark.graft.bpe.localVocabRows")
-      .map(_.toLong).getOrElse(100000L)
+    val localThreshold = longConf(df.sparkSession,
+      "spark.graft.bpe.localVocabRows", 100000L)
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     // `sep` is a literal, never a regex
     val sepRe = java.util.regex.Pattern.quote(sep)

@@ -51,6 +51,19 @@ import org.apache.spark.sql.types._
   *
   * Sequence numbers follow v2 semantics: `last-sequence-number` is the
   * highest stamped; every manifest entry carries its own.
+  *
+  * Every new table version — snapshot commits and metadata-only ops
+  * alike — goes through ONE transition, shaped like Iceberg's
+  * `TableMetadata.buildFrom(base)` ([[Base.write]]): the base version
+  * is read once per commit attempt, deep-copied (a fresh root for a
+  * new table), patched, given its `metadata-log` entry and
+  * `last-updated-ms`, and written one of two ways — the filesystem CAS
+  * (claim `v<base+1>.metadata.json`, then flip the version hint) or,
+  * for [[commitAgainst]], the catalog proposal
+  * `v<base+1>-<snapshotId>.metadata.json` a catalog pointer swap
+  * commits. Snapshot producers share one patch ([[addSnapshot]]), so
+  * whatever they do not touch — refs, properties, sort orders, schemas
+  * and logs — carries forward as is.
   */
 object IcebergMetadata {
 
@@ -103,7 +116,13 @@ object IcebergMetadata {
                           addedSnapshotId: Long = 0L,
                           sizeBytes: Long = 0L,
                           specId: Int = 0,
-                          equalityIds: Seq[Int] = Nil)
+                          equalityIds: Seq[Int] = Nil) {
+    /** This file carried into a new manifest: an EXISTING entry with
+      * its original snapshot id, sequence, stats and tuple. */
+    def existing: FileEntry = FileEntry(path, sizeBytes, recordCount, seq,
+      content, equalityIds, stats, partition, entryStatus = 0,
+      entrySnapshotId = Some(addedSnapshotId))
+  }
 
   /** One partition-spec field as written to metadata + manifests:
     * `avroType` is the transform RESULT type ("int" | "long" |
@@ -127,13 +146,13 @@ object IcebergMetadata {
                               lower: Option[Array[Byte]],
                               upper: Option[Array[Byte]])
 
-  /** Decode a numeric bound from Iceberg single-value serialization
-    * (4-byte LE int / 8-byte LE long). */
   /** Manifest paths and Spark's `_metadata.file_path` render the URI
     * scheme differently ("/x" vs "file:///x"); every path join
     * normalizes BOTH sides to the path part with this one regex. */
   private[graft] val SchemeRe = "^[A-Za-z][A-Za-z0-9+.-]*:/+"
 
+  /** Decode a numeric bound from Iceberg single-value serialization
+    * (4-byte LE int / 8-byte LE long). */
   def boundLong(b: Array[Byte]): Long = {
     val buf = java.nio.ByteBuffer.wrap(b)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -735,214 +754,207 @@ object IcebergMetadata {
     f
   }
 
-  /** Write vN.metadata.json + flip version-hint (the atomic commit
-    * point). Carries forward table-uuid, snapshots and snapshot-log. */
-  private[sinks] def writeMetadataJson(tableDir: String, schemaStr: String,
-                                snapshotId: Long, seq: Long, listFile: TPath,
-                                operation: String,
-                                summary: Map[String, String],
-                                addedFiles: Int, addedRows: Long,
-                                specs: Seq[Seq[PartSpecField]] = Seq(Nil),
-                                baseMetadata: Option[Option[String]] = None,
-                                sortOrder: Option[Seq[Int]] = None,
-                                hintBase: Option[Option[(Int, JsonNode)]] =
-                                  None)
-      : Int = {
-    val md = metaDir(tableDir)
-    // `baseMetadata` (catalog-pointer path): history builds on the
-    // COMMITTED base the catalog names, never on the version-hint —
-    // after a failed catalog CAS the hint points at an ORPHANED
-    // metadata file whose uncommitted snapshot must not leak into the
-    // retry's history (Iceberg retries re-read the committed base).
-    // The new version number still skips past every existing file so
-    // orphans are never overwritten.
-    // `hintBase` (filesystem-CAS path): the caller's OWN base read —
-    // the snapshot it built its manifest list and sequence number on.
-    // The claim at base+1 then catches any commit that landed after
-    // that read; re-reading currentMetadata here instead would let a
-    // racing commit slip between the caller's read and the claim and
-    // silently drop its files from the new manifest list.
-    val prev = hintBase.getOrElse(baseMetadata match {
-      case None => currentMetadata(tableDir)
-      case Some(base) => base.map { p =>
-        val f = TableIO(p)
-        // both name shapes: a hint-claimed `vN.metadata.json` (a table
-        // registered into a catalog from its filesystem history) and a
-        // catalog-staged `vN-<snapshotId>.metadata.json`
-        val v = f.name.stripPrefix("v").stripSuffix(".metadata.json")
-          .takeWhile(_.isDigit)
-        (v.toInt, mapper.readTree(f.readString))
+  private def newSnapshotId(): Long =
+    java.util.UUID.randomUUID().getMostSignificantBits.abs
+
+  /** The current schema node of a table's metadata. */
+  private def currentSchema(meta: JsonNode): JsonNode = {
+    val id = meta.get("current-schema-id").asInt
+    meta.withArray[ArrayNode]("schemas").asScala
+      .find(_.get("schema-id").asInt == id).getOrElse(
+        throw new IllegalStateException(s"schema $id missing"))
+  }
+
+  /** `root`'s object under `key`, created when absent. */
+  private def objectAt(root: ObjectNode, key: String): ObjectNode =
+    root.get(key) match {
+      case o: ObjectNode => o
+      case _ => root.putObject(key)
+    }
+
+  /** One commit attempt's base: the committed version (`head`, None for
+    * a table with no version yet) the new version is built from. It is
+    * read ONCE per attempt inside [[withCommitRetry]] and the new
+    * version is claimed at exactly head+1, so a commit that lands after
+    * the read surfaces as [[CommitConflictException]] and the retry
+    * re-reads; reading the head again later in the attempt would let a
+    * racing commit slip in between and drop its files from the new
+    * manifest list. Also carries what snapshot producers derive from
+    * the base: the new snapshot's id and sequence number, the current
+    * schema, the partition specs and the live file entries. */
+  private final class Base(val tableDir: String,
+                           val head: Option[(Int, JsonNode)],
+                           headFile: Option[String] = None) {
+    val md: TPath = metaDir(tableDir)
+    lazy val snapshotId: Long = newSnapshotId()
+    val seq: Long =
+      head.fold(0L)(_._2.get("last-sequence-number").asLong) + 1
+    def meta: JsonNode = head.getOrElse(throw new IllegalStateException(
+      s"no committed version at $tableDir"))._2
+    lazy val schemaStr: String = currentSchema(meta).toString
+    lazy val specs: Seq[Seq[PartSpecField]] = specsFromMeta(meta)
+    private def currentId: Long = meta.get("current-snapshot-id").asLong
+    /** Manifest-list rows of the current snapshot (fast-append carry). */
+    def headManifests: Seq[GenericRecord] = readAvro(TableIO(
+      snapshotNode(meta, currentId, tableDir).get("manifest-list").asText))
+    /** Live manifest entries of a snapshot, the current one by default. */
+    def stats(snapshot: Long = currentId): Seq[DataFileStat] =
+      snapshotStats(snapshotNode(meta, snapshot, tableDir))
+
+    /** The one transition to a new table version, see the object
+      * header: copy the head (or [[freshRoot]]), stamp
+      * `last-updated-ms`, apply `patch`, log the head in
+      * `metadata-log`, then claim head+1 ([[claimVersion]] +
+      * [[flipHint]]) or, with `stage`, write the catalog proposal
+      * [[stagedMetadataPath]]. Returns the version written. */
+    def write(stage: Boolean = false)(patch: ObjectNode => Unit): Int = {
+      val root = head.fold(freshRoot(tableDir))(_._2.deepCopy[ObjectNode]())
+      root.put("last-updated-ms", System.currentTimeMillis())
+      patch(root)
+      head.foreach { case (v, m) =>
+        appendMetadataLog(root,
+          headFile.getOrElse(md.child(s"v$v.metadata.json").abs),
+          m.get("last-updated-ms").asLong)
       }
-    })
-    // Hint-arbitrated commits claim EXACTLY prev+1: the version file
-    // is the chain-linked CAS (HadoopTableOperations semantics), so a
-    // concurrent committer surfaces as CommitConflictException and
-    // retries on the fresh base — numbering past a concurrent claim
-    // would build on a stale parent and LOSE the claimed commit.
-    // Catalog-arbitrated stagings also number prev+1, but their file
-    // NAME is snapshot-qualified (see below) so two concurrent
-    // stagers — or a stager racing a filesystem claim — can never
-    // collide on a name, whatever number each computed.
-    val version = prev.map(_._1).getOrElse(0) + 1
-    val nowMs = System.currentTimeMillis()
+      val content = mapper.writerWithDefaultPrettyPrinter
+        .writeValueAsString(root)
+      val version = head.fold(0)(_._1) + 1
+      if (stage) {
+        val staged = TableIO(stagedMetadataPath(tableDir, version,
+          snapshotId))
+        require(staged.createExclusive(content),
+          s"catalog staging name already taken: ${staged.abs}")
+        version
+      } else {
+        // the claimed NAME may land past head+1 when unlinked orphan
+        // files occupy names in between
+        val claimed = claimVersion(md, version - 1, content)
+        flipHint(md, claimed)
+        claimed
+      }
+    }
+
+    /** Data manifests for `entries` under the default spec: one
+      * unpartitioned manifest, or partitioned ones of `groupSize`
+      * tuples each. */
+    def dataManifests(entries: Seq[FileEntry],
+                      groupSize: Int): Seq[ManifestOut] =
+      if (specs.last.isEmpty)
+        Seq(ManifestOut(writeManifest(md, entries, snapshotId, schemaStr,
+          "data", 0), 0, entries))
+      else partitionedManifests(md, entries, specs.last, specs.length - 1,
+        snapshotId, schemaStr, groupSize, 0)
+
+    /** Commit this base's snapshot through [[addSnapshot]]; `added` are
+      * the files its summary counts. */
+    def commit(manifest: TPath, list: TPath, operation: String,
+               summary: Map[String, String], added: Seq[FileEntry],
+               schema: String = schemaStr, sequence: Long = seq,
+               specs: Option[Seq[Seq[PartSpecField]]] = None,
+               sortOrder: Option[Seq[Int]] = None,
+               branch: String = "main", stage: Boolean = false): Commit = {
+      val rows = added.map(_.rows).sum
+      val version = write(stage)(addSnapshot(_, schema, snapshotId,
+        sequence, list, operation, summary, added.length, rows, specs,
+        sortOrder, branch))
+      Commit(version, snapshotId, sequence, manifest.abs, list.abs,
+        added.length, rows)
+    }
+  }
+
+  /** The base of a commit that may create the table. */
+  private def headOf(tableDir: String): Base =
+    new Base(tableDir, currentMetadata(tableDir))
+
+  /** The base of a commit that needs a committed table. */
+  private def committedHead(tableDir: String): Base =
+    currentMetadata(tableDir) match {
+      case None => throw new IllegalStateException(
+        s"no committed version at $tableDir")
+      case head => new Base(tableDir, head)
+    }
+
+  /** Root of a new table: uuid, location, no schema yet, the
+    * unpartitioned spec 0, the unsorted order 0, and the CREATE
+    * marker's declared properties. */
+  private def freshRoot(tableDir: String): ObjectNode = {
     val root = mapper.createObjectNode()
     root.put("format-version", 2)
-    root.put("table-uuid", prev.map(_._2.get("table-uuid").asText)
-      .getOrElse(java.util.UUID.randomUUID().toString))
+    root.put("table-uuid", java.util.UUID.randomUUID().toString)
     root.put("location", TableIO(tableDir).abs)
-    root.put("last-sequence-number", seq)
-    root.put("last-updated-ms", nowMs)
-    // SCHEMA EVOLUTION with Iceberg's field-id stability contract
-    // (spec §Schemas; the reference's EVOLVE_SCHEMA path adds columns
-    // the same way, IcebergTableOperator/typeutils): a column that
-    // already exists keeps its field id verbatim; only NEW columns take
-    // fresh ids above the table's last-column-id; an unchanged schema
-    // keeps its schema-id and the carried-forward history gains nothing.
-    val freshNode = mapper.readTree(schemaStr).asInstanceOf[ObjectNode]
-    freshNode.remove("x-last-column-id")
-    val prevSchemas: Seq[ObjectNode] = prev.toSeq.flatMap(
-      _._2.withArray[ArrayNode]("schemas").asScala
-        .map(_.asInstanceOf[ObjectNode]))
-    val prevCurrent: Option[ObjectNode] = prev.map { case (_, m) =>
-      val id = m.get("current-schema-id").asInt
-      prevSchemas.find(_.get("schema-id").asInt == id).get
-    }
-    val prevLastCol = prev.map(_._2.get("last-column-id").asInt).getOrElse(0)
-    def stripIds(n: JsonNode): JsonNode = {
-      val c = n.deepCopy[JsonNode]()
-      def walk(x: JsonNode): Unit = x match {
-        case o: ObjectNode =>
-          o.remove("id"); o.remove("schema-id")
-          o.remove("element-id"); o.remove("key-id"); o.remove("value-id")
-          o.fields().asScala.foreach(e => walk(e.getValue))
-        case a: ArrayNode => a.asScala.foreach(walk)
-        case _ => ()
-      }
-      walk(c); c
-    }
-    // rebuild the fresh schema reusing prior field nodes (ids included)
-    // for columns whose name+shape are unchanged; renumber new columns
-    var nextId = prevLastCol
-    val evolved = mapper.createObjectNode()
-    evolved.put("type", "struct")
-    val evolvedFields = evolved.putArray("fields")
-    // a legal Iceberg primitive type promotion (spec §Schema Evolution:
-    // int→long, float→double, decimal precision widening at the same
-    // scale — the reference's promotionTransitions in
-    // destination/iceberg/iceberg.go) keeps the field id and widens the
-    // type; treating it as drop+add would renumber the column and make
-    // readers resolve pre-promotion data files to null
-    def promotable(from: String, to: String): Boolean =
-      (from == "int" && to == "long") ||
-        (from == "float" && to == "double") || {
-          val dec = """decimal\((\d+),\s*(\d+)\)""".r
-          (from, to) match {
-            case (dec(p1, s1), dec(p2, s2)) =>
-              s1 == s2 && p2.toInt >= p1.toInt
-            case _ => false
-          }
+    root.putArray("schemas")
+    root.put("default-spec-id", 0)
+    root.putArray("partition-specs").addObject()
+      .put("spec-id", 0).putArray("fields")
+    root.put("last-partition-id", 999)
+    root.putArray("sort-orders").addObject()
+      .put("order-id", 0).putArray("fields")
+    root.put("default-sort-order-id", 0)
+    val props = root.putObject("properties")
+    val marker = metaDir(tableDir).child("created.properties.json")
+    if (marker.exists)
+      mapper.readTree(marker.readString).fields().asScala
+        .foreach(e => props.put(e.getKey, e.getValue.asText()): Unit)
+    root
+  }
+
+  /** The patch every snapshot producer commits through: make
+    * `schemaStr` the current schema ([[evolveSchema]]), add the
+    * snapshot node parented on the ref's head, advance
+    * last-sequence-number and move the ref — `main` takes
+    * current-snapshot-id and a snapshot-log entry with it, an audit
+    * `branch` leaves both alone (the log tracks current-state changes
+    * only). Every other ref, property, sort order and log of the base
+    * carries forward untouched, except the engine's merge-on-read write
+    * modes, which every snapshot pins (its writes are always MoR).
+    *
+    * `specs` None keeps the base's partition specs; Some replaces them,
+    * the LAST being the default (spec-ids are the list positions).
+    * `sortOrder` (spec §Sort Orders, append-only): None keeps the
+    * default order, so the clustering advertisement planners read
+    * survives later appends; Some(Nil) is a layout rewrite that voids
+    * identity clustering (z-order) and reverts to order 0; Some(ids) is
+    * a sort rewrite, whose identity/asc/nulls-first order is appended
+    * (or an identical one reused) and made the default. */
+  private def addSnapshot(root: ObjectNode, schemaStr: String,
+                          snapshotId: Long, seq: Long, listFile: TPath,
+                          operation: String,
+                          summary: Map[String, String],
+                          addedFiles: Int, addedRows: Long,
+                          specs: Option[Seq[Seq[PartSpecField]]],
+                          sortOrder: Option[Seq[Int]],
+                          branch: String): Unit = {
+    val nowMs = root.get("last-updated-ms").asLong
+    val schemaId = evolveSchema(root, schemaStr)
+    val props = objectAt(root, "properties")
+    Seq("delete", "update", "merge").foreach(op =>
+      props.put(s"write.$op.mode", "merge-on-read"))
+    specs.foreach { specs =>
+      root.put("default-spec-id", specs.length - 1)
+      val specArr = root.putArray("partition-specs")
+      specs.zipWithIndex.foreach { case (parts, sid) =>
+        val spec = specArr.addObject()
+        spec.put("spec-id", sid)
+        val specFields = spec.putArray("fields")
+        parts.zipWithIndex.foreach { case (p, i) =>
+          val fNode = specFields.addObject()
+          fNode.put("name", p.name); fNode.put("transform", p.transform)
+          fNode.put("source-id", p.sourceId)
+          fNode.put("field-id", specFieldId(p, i))
         }
-    freshNode.withArray[ArrayNode]("fields").asScala.foreach { f =>
-      val name = f.get("name").asText
-      val byName = prevCurrent.toSeq.flatMap(
-        _.withArray[ArrayNode]("fields").asScala.filter(
-          _.get("name").asText == name))
-      val prior = byName.find(p => stripIds(p) == stripIds(f))
-      val promoted = byName.find { p =>
-        p.get("type").isTextual && f.get("type").isTextual &&
-          promotable(p.get("type").asText, f.get("type").asText) &&
-          p.get("required").asBoolean == f.get("required").asBoolean
       }
-      (prior, promoted) match {
-        case (Some(p), _) => evolvedFields.add(p.deepCopy[JsonNode]()): Unit
-        case (None, Some(p)) =>
-          val c = f.deepCopy[ObjectNode]()
-          c.put("id", p.get("id").asInt) // keep the id, emit the widened type
-          evolvedFields.add(c): Unit
-        case (None, None) =>
-          val c = f.deepCopy[ObjectNode]()
-          def renumber(x: JsonNode): Unit = x match {
-            case o: ObjectNode =>
-              Seq("id", "element-id", "key-id", "value-id").foreach { k =>
-                if (o.has(k)) { nextId += 1; o.put(k, nextId): Unit }
-              }
-              o.fields().asScala.foreach(e => renumber(e.getValue))
-            case a: ArrayNode => a.asScala.foreach(renumber)
-            case _ => ()
-          }
-          renumber(c)
-          evolvedFields.add(c): Unit
-      }
+      // spec: 1000 is the first partition field id; evolved specs may
+      // carry explicit ids above it (never recycled across specs)
+      root.put("last-partition-id", (999 +: specs.flatMap(parts =>
+        parts.zipWithIndex.map { case (p, i) => specFieldId(p, i) })).max)
     }
-    val schemaChanged =
-      prevCurrent.forall(p => stripIds(p) != stripIds(evolved))
-    val schemaId =
-      if (!schemaChanged) prev.map(_._2.get("current-schema-id").asInt).get
-      else prevSchemas.map(_.get("schema-id").asInt).maxOption
-        .map(_ + 1).getOrElse(0)
-    evolved.put("schema-id", schemaId)
-    root.put("last-column-id",
-      if (prev.isEmpty) // first commit: schemaJson's own counter
-        mapper.readTree(schemaStr).get("x-last-column-id").asInt
-      else math.max(prevLastCol, nextId))
-    root.put("current-schema-id", schemaId)
-    val schemasArr = root.putArray("schemas")
-    prevSchemas.foreach(s => schemasArr.add(s.deepCopy[JsonNode]()): Unit)
-    if (schemaChanged || prev.isEmpty) {
-      val node = if (prev.isEmpty) {
-        val n = mapper.readTree(schemaStr).asInstanceOf[ObjectNode]
-        n.remove("x-last-column-id"); n.put("schema-id", 0); n
-      } else evolved
-      schemasArr.add(node): Unit
-    }
-    // the LAST spec is the default (a table that evolved from an
-    // unpartitioned base to partitioned writes lists both; spec-ids
-    // are the list positions)
-    root.put("default-spec-id", specs.length - 1)
-    val specArr = root.putArray("partition-specs")
-    specs.zipWithIndex.foreach { case (parts, sid) =>
-      val spec = specArr.addObject()
-      spec.put("spec-id", sid)
-      val specFields = spec.putArray("fields")
-      parts.zipWithIndex.foreach { case (p, i) =>
-        val fNode = specFields.addObject()
-        fNode.put("name", p.name); fNode.put("transform", p.transform)
-        fNode.put("source-id", p.sourceId)
-        fNode.put("field-id", specFieldId(p, i))
-      }
-    }
-    // spec: 1000 is the first partition field id; evolved specs may
-    // carry explicit ids above it (never recycled across specs)
-    root.put("last-partition-id", (999 +: specs.flatMap(parts =>
-      parts.zipWithIndex.map { case (p, i) => specFieldId(p, i) })).max)
-    // spec §Sort Orders: APPEND-ONLY table metadata — every previous
-    // order carries forward verbatim (order 0 is the required
-    // "unsorted"). `sortOrder` semantics: None = an ordinary commit,
-    // which PRESERVES the previous default (the clustering
-    // advertisement planners read must survive later appends instead
-    // of resetting to unsorted); Some(Nil) = a layout rewrite that
-    // VOIDS identity clustering (z-order) — default reverts to 0;
-    // Some(ids) = a sort rewrite, which appends its
-    // identity/asc/nulls-first order (or reuses an identical existing
-    // one) and makes it the default.
-    val orders = root.putArray("sort-orders")
-    val prevOrderNodes = prev.toSeq.flatMap(p =>
-      Option(p._2.get("sort-orders")).map(_.asScala.toSeq).getOrElse(Nil))
-    if (prevOrderNodes.isEmpty) {
-      val o0 = orders.addObject()
-      o0.put("order-id", 0); o0.putArray("fields"): Unit
-    } else prevOrderNodes.foreach(o => orders.add(o.deepCopy[JsonNode]()): Unit)
-    val prevDefaultOrder =
-      prev.map(_._2.path("default-sort-order-id").asInt(0)).getOrElse(0)
-    sortOrder match {
-      case None =>
-        root.put("default-sort-order-id", prevDefaultOrder): Unit
-      case Some(Nil) =>
-        root.put("default-sort-order-id", 0): Unit
-      case Some(ids) =>
+    sortOrder.foreach {
+      case Nil => root.put("default-sort-order-id", 0)
+      case ids =>
         // reuse comparison covers the FULL field identity incl.
         // null-order: an order differing only in null-order is a
         // different order and must not silently alias an existing id
+        val orders = root.withArray[ArrayNode]("sort-orders")
         def fieldsOf(o: JsonNode): Seq[(Int, String, String, String)] =
           o.withArray[ArrayNode]("fields").asScala.toSeq.map(f =>
             (f.get("source-id").asInt, f.get("transform").asText,
@@ -961,45 +973,15 @@ object IcebergMetadata {
             }
             next
           }
-        root.put("default-sort-order-id", oid): Unit
+        root.put("default-sort-order-id", oid)
     }
-    val props = root.putObject("properties")
-    // user properties carry FORWARD across commits (SET TBLPROPERTIES
-    // / CREATE TBLPROPERTIES — spec: `properties` rides every
-    // metadata.json); the first version adopts the CREATE marker's
-    // declared map. Engine MoR modes are pinned after, never lost.
-    prev.foreach { case (_, pm) =>
-      Option(pm.get("properties")).foreach(_.fields().asScala.foreach(
-        e => props.put(e.getKey, e.getValue.asText()): Unit))
-    }
-    if (prev.isEmpty) {
-      val marker = md.child("created.properties.json")
-      if (marker.exists)
-        mapper.readTree(marker.readString).fields().asScala
-          .foreach(e => props.put(e.getKey, e.getValue.asText()): Unit)
-    }
-    props.put("write.delete.mode", "merge-on-read")
-    props.put("write.update.mode", "merge-on-read")
-    props.put("write.merge.mode", "merge-on-read")
-    // spec §Table Metadata `metadata-log`: every previous metadata
-    // file with its timestamp — what catalogs walk for metadata time
-    // travel and stale-file cleanup
-    val mlog = root.putArray("metadata-log")
-    prev.foreach { case (pv, pm) =>
-      Option(pm.get("metadata-log"))
-        .foreach(_.forEach(e => mlog.add(e): Unit))
-      val e = mlog.addObject()
-      e.put("metadata-file", md.child(s"v$pv.metadata.json").abs)
-      e.put("timestamp-ms", pm.get("last-updated-ms").asLong)
-    }
-    root.put("current-snapshot-id", snapshotId)
-    val snaps = root.putArray("snapshots")
-    prev.foreach(_._2.withArray[ArrayNode]("snapshots")
-      .forEach(s => snaps.add(s): Unit))
-    val snap = snaps.addObject()
+    val refs = objectAt(root, "refs")
+    val parent = Option(refs.get(branch)).map(_.get("snapshot-id"))
+      .orElse(Option(root.get("current-snapshot-id")))
+    root.put("last-sequence-number", seq)
+    val snap = root.withArray[ArrayNode]("snapshots").addObject()
     snap.put("snapshot-id", snapshotId)
-    prev.foreach(p => snap.put("parent-snapshot-id",
-      p._2.get("current-snapshot-id").asLong))
+    parent.foreach(p => snap.put("parent-snapshot-id", p.asLong))
     snap.put("timestamp-ms", nowMs)
     snap.put("sequence-number", seq)
     snap.put("schema-id", schemaId)
@@ -1009,60 +991,171 @@ object IcebergMetadata {
     sum.put("added-data-files", addedFiles.toString)
     sum.put("added-records", addedRows.toString)
     summary.foreach { case (k, v) => sum.put(k, v) }
-    val log = root.putArray("snapshot-log")
-    prev.foreach(_._2.withArray[ArrayNode]("snapshot-log")
-      .forEach(s => log.add(s): Unit))
-    val logEntry = log.addObject()
-    logEntry.put("snapshot-id", snapshotId)
-    logEntry.put("timestamp-ms", nowMs)
-    // refs: main moves to the new snapshot; every OTHER ref (tags,
-    // audit branches) carries forward verbatim — a commit must never
-    // silently drop a tag (spec §References)
-    val refs = root.putObject("refs")
-    prev.foreach(_._2.path("refs").fields().asScala
-      .filter(_.getKey != "main")
-      .foreach(e => refs.set[ObjectNode](e.getKey,
-        e.getValue.deepCopy[JsonNode]()): Unit))
-    val mainRef = refs.putObject("main")
-    mainRef.put("snapshot-id", snapshotId); mainRef.put("type", "branch")
-
-    val content = mapper.writerWithDefaultPrettyPrinter
-      .writeValueAsString(root)
-    if (baseMetadata.isEmpty) {
-      // the commit "happens" at the exclusive create; the hint flip
-      // after it is a monotonic cache (a racing winner's higher flip
-      // is never clobbered). The claimed NAME may land past `version`
-      // when unlinked orphan files occupy names in between.
-      val claimed = claimVersion(md, version - 1, content)
-      flipHint(md, claimed)
-      claimed
-    } else {
-      // CATALOG-arbitrated staging: the file is a PROPOSAL — the
-      // commit happens only when the catalog CAS flips its pointer to
-      // this path (Iceberg's own catalog tables use UUID-qualified
-      // metadata names for the same reason). The snapshot-qualified
-      // name means (a) two concurrent stagers can never overwrite
-      // each other however they raced the directory listing, and
-      // (b) the filesystem-hint machinery (claimVersion's
-      // `v\d+\.metadata\.json` claims, healHint's chain walk) can
-      // never claim, conflict on, or ADOPT a catalog staging — the
-      // two arbitration modes cannot interleave on one table. The
-      // hint is deliberately NOT written: a catalog table's truth is
-      // the pointer, and a hint naming a catalog-rejected staging
-      // would fork read state from the catalog.
-      val staged = md.child(s"v$version-$snapshotId.metadata.json")
-      require(staged.createExclusive(content),
-        s"catalog staging name already taken: ${staged.abs}")
-      version
+    val ref = refs.putObject(branch)
+    ref.put("snapshot-id", snapshotId); ref.put("type", "branch")
+    if (branch == "main") {
+      root.put("current-snapshot-id", snapshotId)
+      val log = root.withArray[ArrayNode]("snapshot-log").addObject()
+      log.put("snapshot-id", snapshotId)
+      log.put("timestamp-ms", nowMs)
     }
   }
 
-  /** Path of the metadata file staged for a catalog CAS by
-    * [[writeMetadataJson]]'s catalog branch — snapshot-qualified, see
-    * there. */
+  /** A copy of a schema node without its id slots — the shape two
+    * schemas or fields are compared by. */
+  private def stripIds(n: JsonNode): JsonNode = {
+    val c = n.deepCopy[JsonNode]()
+    def walk(x: JsonNode): Unit = x match {
+      case o: ObjectNode =>
+        o.remove("id"); o.remove("schema-id")
+        o.remove("element-id"); o.remove("key-id"); o.remove("value-id")
+        o.fields().asScala.foreach(e => walk(e.getValue))
+      case a: ArrayNode => a.asScala.foreach(walk)
+      case _ => ()
+    }
+    walk(c); c
+  }
+
+  /** Give every id slot of `x` (field, element, key and value ids) a
+    * fresh id above `last`, depth-first; returns the last id used. */
+  private def renumber(x: JsonNode, last: Int): Int = {
+    var id = last
+    def walk(n: JsonNode): Unit = n match {
+      case o: ObjectNode =>
+        Seq("id", "element-id", "key-id", "value-id").foreach { k =>
+          if (o.has(k)) { id += 1; o.put(k, id): Unit }
+        }
+        o.fields().asScala.foreach(e => walk(e.getValue))
+      case a: ArrayNode => a.asScala.foreach(walk)
+      case _ => ()
+    }
+    walk(x); id
+  }
+
+  /** A legal Iceberg primitive type promotion (spec §Schema Evolution:
+    * int→long, float→double, decimal precision widening at the same
+    * scale — the reference's promotionTransitions in
+    * destination/iceberg/iceberg.go). It keeps the field id; treating
+    * it as drop+add would renumber the column and make readers resolve
+    * pre-promotion data files to null. */
+  private def promotable(from: String, to: String): Boolean =
+    (from == "int" && to == "long") ||
+      (from == "float" && to == "double") || {
+        val dec = """decimal\((\d+),\s*(\d+)\)""".r
+        (from, to) match {
+          case (dec(p1, s1), dec(p2, s2)) =>
+            s1 == s2 && p2.toInt >= p1.toInt
+          case _ => false
+        }
+      }
+
+  /** Make `schemaStr` (a [[schemaJson]] result) the root's current
+    * schema under Iceberg's field-id stability contract (spec §Schemas;
+    * the reference's EVOLVE_SCHEMA path adds columns the same way): a
+    * column whose name and shape are unchanged keeps its field node, a
+    * [[promotable]] column keeps its id and takes the wider type, any
+    * other column takes fresh ids above last-column-id. The
+    * `identifier-field-ids` are the schema's own identifier columns,
+    * else the current schema's that are still present, which keep
+    * their current nullability (a data file's footer does not carry
+    * it). An unchanged schema keeps its schema-id and adds nothing; a
+    * new table takes the schema's fresh ids as schema 0. Returns the
+    * current schema-id. */
+  private def evolveSchema(root: ObjectNode, schemaStr: String): Int = {
+    val fresh = mapper.readTree(schemaStr).asInstanceOf[ObjectNode]
+    val freshLastId = fresh.path("x-last-column-id").asInt
+    fresh.remove("x-last-column-id")
+    val schemas = root.withArray[ArrayNode]("schemas")
+    if (schemas.isEmpty) {
+      fresh.put("schema-id", 0)
+      schemas.add(fresh)
+      root.put("last-column-id", freshLastId)
+      root.put("current-schema-id", 0)
+      return 0
+    }
+    val cur = currentSchema(root)
+    def fields(s: JsonNode) = s.withArray[ArrayNode]("fields").asScala.toSeq
+    def identifierNames(s: JsonNode): Seq[String] = {
+      val byId = fields(s).map(f => f.get("id").asInt -> f.get("name").asText)
+        .toMap
+      Option(s.get("identifier-field-ids")).toSeq
+        .flatMap(_.asScala.map(_.asInt)).flatMap(byId.get)
+    }
+    val declared = identifierNames(fresh)
+    val identifiers =
+      if (declared.nonEmpty) declared else identifierNames(cur)
+    var lastId = root.get("last-column-id").asInt
+    val evolved = mapper.createObjectNode()
+    evolved.put("type", "struct")
+    val evolvedFields = evolved.putArray("fields")
+    fields(fresh).foreach { f0 =>
+      val f = f0.deepCopy[ObjectNode]()
+      val name = f.get("name").asText
+      val byName = fields(cur).filter(_.get("name").asText == name)
+      if (declared.isEmpty && identifiers.contains(name))
+        f.put("required", byName.head.get("required").asBoolean)
+      val prior = byName.find(p => stripIds(p) == stripIds(f))
+      val promoted = byName.find { p =>
+        p.get("type").isTextual && f.get("type").isTextual &&
+          promotable(p.get("type").asText, f.get("type").asText) &&
+          p.get("required").asBoolean == f.get("required").asBoolean
+      }
+      (prior, promoted) match {
+        case (Some(p), _) => evolvedFields.add(p.deepCopy[JsonNode]())
+        case (None, Some(p)) =>
+          f.put("id", p.get("id").asInt) // keep the id, widen the type
+          evolvedFields.add(f)
+        case (None, None) =>
+          lastId = renumber(f, lastId)
+          evolvedFields.add(f)
+      }
+    }
+    val idByName = fields(evolved)
+      .map(f => f.get("name").asText -> f.get("id").asInt).toMap
+    val identifierIds = identifiers.flatMap(idByName.get)
+    if (identifierIds.nonEmpty) {
+      val arr = evolved.putArray("identifier-field-ids")
+      identifierIds.foreach(arr.add(_))
+    }
+    val schemaId =
+      if (stripIds(cur) == stripIds(evolved)) cur.get("schema-id").asInt
+      else {
+        val id = schemas.asScala.map(_.get("schema-id").asInt).max + 1
+        evolved.put("schema-id", id)
+        schemas.add(evolved)
+        id
+      }
+    root.put("current-schema-id", schemaId)
+    root.put("last-column-id", lastId)
+    schemaId
+  }
+
+  /** Name of the metadata file [[Base.write]] stages for a catalog CAS:
+    * snapshot-qualified, so two concurrent stagers never overwrite each
+    * other and the filesystem-hint machinery ([[claimVersion]]'s
+    * `vN.metadata.json` claims, [[chainHead]]'s walk) never claims,
+    * conflicts on or adopts a staging. */
   private def stagedMetadataPath(tableDir: String, version: Int,
                                  snapshotId: Long): String =
     metaDir(tableDir).child(s"v$version-$snapshotId.metadata.json").abs
+
+  /** Write one data manifest for `dataDir`'s parquet files (`onlyFiles`
+    * of them when set) at `seq`, and a manifest list holding it after
+    * the `carried` rows: the body every plain data commit shares. */
+  private def dataSnapshot(spark: SparkSession, md: TPath, snapshotId: Long,
+                           seq: Long, dataDir: String, schemaStr: String,
+                           onlyFiles: Option[Set[String]] = None,
+                           carried: Seq[GenericRecord] = Nil)
+      : (TPath, TPath, Seq[FileEntry]) = {
+    val entries = entriesFor(spark, dataDir, seq,
+      fieldIds = topLevelFieldIds(schemaStr), onlyFiles = onlyFiles)
+    require(entries.nonEmpty, s"no parquet data files under $dataDir")
+    val manifest = writeManifest(md, entries, snapshotId, schemaStr,
+      "data", 0)
+    val list = writeManifestList(md, snapshotId,
+      Seq(ManifestOut(manifest, 0, entries)), carryForward = carried)
+    (manifest, list, entries)
+  }
 
   private def stripInternal(schemaStr: String): String = {
     val node = mapper.readTree(schemaStr).asInstanceOf[ObjectNode]
@@ -1070,13 +1163,6 @@ object IcebergMetadata {
     mapper.writeValueAsString(node)
   }
 
-  /** Commit the parquet files under `dataDir` as the next snapshot of
-    * the Iceberg table rooted at `tableDir`. `operation` is the spec's
-    * snapshot summary operation (`append` for incremental segments,
-    * `overwrite` after a compaction rewrote the base); `summary` extras
-    * land in the snapshot summary — the reference stores its 2PC state
-    * there via the `olake_2pc` property (iceberg.go:521-545), so pass
-    * `Map("olake_2pc" -> stateJson)` for the commit-position analog. */
   /** A staged-but-uncommitted snapshot: the CLIENT half of a
     * REST-catalog commit. Manifests and the manifest list are written
     * (the engine owns those, spec-wise), `metadata.json` deliberately
@@ -1087,6 +1173,14 @@ object IcebergMetadata {
                             manifestListPath: String, schemaStr: String,
                             addedFiles: Int, addedRows: Long)
 
+  /** Iceberg schema JSON of `dataDir`'s parquet files (`onlyFiles` of
+    * them when set): positional field ids, which [[evolveSchema]]
+    * reconciles against the committed schema. */
+  private def filesSchema(spark: SparkSession, dataDir: String,
+                          onlyFiles: Option[Set[String]] = None): String =
+    schemaJson(onlyFiles.fold(spark.read.parquet(dataDir))(fs =>
+      spark.read.parquet(fs.toSeq: _*)).schema)
+
   /** Stage `dataDir`'s parquet files as a snapshot at `sequenceNumber`
     * without touching metadata.json — pair with
     * [[IcebergRestCatalog.Client.commitSnapshot]]. */
@@ -1094,15 +1188,10 @@ object IcebergMetadata {
                     sequenceNumber: Long): StagedSnapshot = {
     val md = metaDir(tableDir)
     md.mkdirs()
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
-    val schemaStr = schemaJson(spark.read.parquet(dataDir).schema)
-    val entries = entriesFor(spark, dataDir, sequenceNumber,
-      fieldIds = topLevelFieldIds(schemaStr))
-    require(entries.nonEmpty, s"no parquet data files under $dataDir")
-    val manifest = writeManifest(md, entries, snapshotId, schemaStr,
-      "data", 0)
-    val list = writeManifestList(md, snapshotId,
-      Seq(ManifestOut(manifest, 0, entries)))
+    val snapshotId = newSnapshotId()
+    val schemaStr = filesSchema(spark, dataDir)
+    val (_, list, entries) = dataSnapshot(spark, md, snapshotId,
+      sequenceNumber, dataDir, schemaStr)
     StagedSnapshot(snapshotId, sequenceNumber, list.abs,
       schemaStr, entries.length, entries.map(_.rows).sum)
   }
@@ -1114,9 +1203,11 @@ object IcebergMetadata {
                                        staged: StagedSnapshot,
                                        operation: String,
                                        summary: Map[String, String]): Int =
-    writeMetadataJson(tableDir, staged.schemaStr, staged.snapshotId,
-      staged.sequenceNumber, TableIO(staged.manifestListPath), operation,
-      summary, staged.addedFiles, staged.addedRows)
+    headOf(tableDir).write()(addSnapshot(_, staged.schemaStr,
+      staged.snapshotId, staged.sequenceNumber,
+      TableIO(staged.manifestListPath), operation, summary,
+      staged.addedFiles, staged.addedRows, specs = Some(Seq(Nil)),
+      sortOrder = None, branch = "main"))
 
   /** Roll the main branch back to an EXISTING snapshot: a new metadata
     * version whose current-snapshot-id / refs point at `toSnapshotId`
@@ -1124,36 +1215,24 @@ object IcebergMetadata {
     * is a ref move, spec §References). Server half of a REST
     * `set-snapshot-ref`-only commit. */
   private[sinks] def applyRollback(tableDir: String,
-                                   toSnapshotId: Long): Int = {
-    val md = metaDir(tableDir)
-    val (version, prev) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    require(prev.withArray[ArrayNode]("snapshots").asScala
+                                   toSnapshotId: Long): Int =
+    moveMain(committedHead(tableDir), toSnapshotId)
+
+  private def moveMain(b: Base, toSnapshotId: Long): Int = {
+    require(b.meta.withArray[ArrayNode]("snapshots").asScala
       .exists(_.get("snapshot-id").asLong == toSnapshotId),
       s"snapshot $toSnapshotId not in table history")
-    val root = prev.deepCopy().asInstanceOf[ObjectNode]
-    val nowMs = System.currentTimeMillis()
-    appendMetadataLog(root, md, version, prev.get("last-updated-ms").asLong)
-    root.put("current-snapshot-id", toSnapshotId)
-    root.put("last-updated-ms", nowMs)
-    // refs: every non-main ref (tags, audit branches) carries forward
-    // verbatim — a rollback / WAP fast-forward is a MAIN move and must
-    // never silently drop a tag (spec §References; same invariant the
-    // commit path holds). Replacing the whole refs object here would
-    // make previously pinned snapshots expirable after any publish.
-    val refsObj = root.path("refs") match {
-      case o: ObjectNode => o
-      case _ => root.putObject("refs")
+    b.write() { root =>
+      root.put("current-snapshot-id", toSnapshotId)
+      // every non-main ref (tags, audit branches) carries forward: a
+      // rollback / WAP fast-forward is a MAIN move and must never drop
+      // a tag (spec §References)
+      val main = objectAt(root, "refs").putObject("main")
+      main.put("snapshot-id", toSnapshotId); main.put("type", "branch")
+      val log = root.withArray[ArrayNode]("snapshot-log").addObject()
+      log.put("snapshot-id", toSnapshotId)
+      log.put("timestamp-ms", root.get("last-updated-ms").asLong)
     }
-    val refs = refsObj.putObject("main")
-    refs.put("snapshot-id", toSnapshotId); refs.put("type", "branch")
-    val log = root.withArray[ArrayNode]("snapshot-log").addObject()
-    log.put("snapshot-id", toSnapshotId)
-    log.put("timestamp-ms", nowMs)
-    val next = claimVersion(md, version,
-      mapper.writerWithDefaultPrettyPrinter.writeValueAsString(root))
-    flipHint(md, next)
-    next
   }
 
   /** Catalog-pointer variant of [[commit]]: the previous metadata is
@@ -1167,27 +1246,22 @@ object IcebergMetadata {
                     baseMetadata: Option[String],
                     operation: String = "append",
                     summary: Map[String, String] = Map.empty): Commit = {
-    val md = metaDir(tableDir)
-    md.mkdirs()
-    val prevMeta = baseMetadata.map(p =>
-      mapper.readTree(TableIO(p).readString))
-    val seq = prevMeta.map(_.get("last-sequence-number").asLong)
-      .getOrElse(0L) + 1
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
-    val schemaStr = schemaJson(spark.read.parquet(dataDir).schema)
-    val entries = entriesFor(spark, dataDir, seq,
-      fieldIds = topLevelFieldIds(schemaStr))
-    require(entries.nonEmpty, s"no parquet data files under $dataDir")
-    val manifest = writeManifest(md, entries, snapshotId, schemaStr,
-      "data", 0)
-    val list = writeManifestList(md, snapshotId,
-      Seq(ManifestOut(manifest, 0, entries)))
-    val version = writeMetadataJson(tableDir, schemaStr, snapshotId, seq,
-      list, operation, summary, entries.length, entries.map(_.rows).sum,
-      baseMetadata = Some(baseMetadata))
-    Commit(version, snapshotId, seq, manifest.abs,
-      list.abs, entries.length, entries.map(_.rows).sum,
-      metadataPath = stagedMetadataPath(tableDir, version, snapshotId))
+    // both name shapes: a hint-claimed `vN.metadata.json` (a table
+    // registered into a catalog from its filesystem history) and a
+    // catalog-staged `vN-<snapshotId>.metadata.json`, which is also the
+    // file the new version's metadata-log names
+    val base = baseMetadata.map(TableIO(_))
+    val b = new Base(tableDir, base.map(f =>
+      (f.name.stripPrefix("v").takeWhile(_.isDigit).toInt,
+        mapper.readTree(f.readString))), base.map(_.abs))
+    b.md.mkdirs()
+    val schemaStr = filesSchema(spark, dataDir)
+    val (manifest, list, entries) = dataSnapshot(spark, b.md,
+      b.snapshotId, b.seq, dataDir, schemaStr)
+    val c = b.commit(manifest, list, operation, summary, entries,
+      schema = schemaStr, specs = Some(Seq(Nil)), stage = true)
+    c.copy(metadataPath =
+      stagedMetadataPath(tableDir, c.version, c.snapshotId))
   }
 
   /** FAST-APPEND commit — Iceberg's `newFastAppend` shape, the only
@@ -1204,40 +1278,14 @@ object IcebergMetadata {
   def appendCommit(spark: SparkSession, tableDir: String, dataDir: String,
                    summary: Map[String, String] = Map.empty,
                    onlyFiles: Option[Set[String]] = None): Commit = withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (prevVer, prevMeta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"appendCommit needs a committed table; use commit() first"))
-    val specs = specsFromMeta(prevMeta)
-    require(specs.last.isEmpty,
+    val b = committedHead(tableDir)
+    require(b.specs.last.isEmpty,
       "table's default spec is partitioned: append through " +
         "appendCommitPartitioned so the new manifest carries tuples")
-    val prevSnapId = prevMeta.get("current-snapshot-id").asLong
-    val prevSnap = prevMeta.withArray[ArrayNode]("snapshots").asScala
-      .find(_.get("snapshot-id").asLong == prevSnapId).getOrElse(
-        throw new IllegalStateException("current snapshot missing"))
-    val carried = readAvro(TableIO(prevSnap.get("manifest-list").asText))
-    val seq = prevMeta.get("last-sequence-number").asLong + 1
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
-    // same schema derivation as commit(): field ids are positional and
-    // writeMetadataJson reconciles them against the committed schema
-    // (unchanged columns keep their ids; evolution renumbers new ones)
-    val schemaStr = schemaJson(onlyFiles
-      .fold(spark.read.parquet(dataDir))(fs =>
-        spark.read.parquet(fs.toSeq: _*)).schema)
-    val entries = entriesFor(spark, dataDir, seq,
-      fieldIds = topLevelFieldIds(schemaStr), onlyFiles = onlyFiles)
-    require(entries.nonEmpty, s"no parquet data files under $dataDir")
-    val manifest = writeManifest(md, entries, snapshotId, schemaStr,
-      "data", 0)
-    val list = writeManifestList(md, snapshotId,
-      Seq(ManifestOut(manifest, 0, entries)), carryForward = carried)
-    val version = writeMetadataJson(tableDir, schemaStr, snapshotId, seq,
-      list, "append", summary, entries.length, entries.map(_.rows).sum,
-      specs = specs,
-      hintBase = Some(Some((prevVer, prevMeta))))
-    Commit(version, snapshotId, seq, manifest.abs,
-      list.abs, entries.length, entries.map(_.rows).sum)
+    val schemaStr = filesSchema(spark, dataDir, onlyFiles)
+    val (manifest, list, entries) = dataSnapshot(spark, b.md,
+      b.snapshotId, b.seq, dataDir, schemaStr, onlyFiles, b.headManifests)
+    b.commit(manifest, list, "append", summary, entries, schema = schemaStr)
   }
 
   /** [[appendCommit]] for a PARTITIONED table: `df`'s rows land under
@@ -1250,44 +1298,21 @@ object IcebergMetadata {
                               df: DataFrame, groupSize: Int = 8,
                               summary: Map[String, String] = Map.empty)
       : Commit = withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (prevVer, prevMeta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"appendCommitPartitioned needs a committed table"))
-    val specs = specsFromMeta(prevMeta)
-    val parts = specs.last
+    val b = committedHead(tableDir)
+    val parts = b.specs.last
     require(parts.nonEmpty,
       "table's default spec is unpartitioned: use appendCommit")
-    val curSchemaId = prevMeta.get("current-schema-id").asInt
-    val schemaStr = prevMeta.withArray[ArrayNode]("schemas").asScala
-      .find(_.get("schema-id").asInt == curSchemaId).get.toString
-    val statIds = topLevelFieldIds(schemaStr)
-    val prevSnapId = prevMeta.get("current-snapshot-id").asLong
-    val prevSnap = prevMeta.withArray[ArrayNode]("snapshots").asScala
-      .find(_.get("snapshot-id").asLong == prevSnapId).get
-    val carried = readAvro(TableIO(prevSnap.get("manifest-list").asText))
-    val seq = prevMeta.get("last-sequence-number").asLong + 1
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
-    val outDir = TableIO(tableDir).child("data").child(s"$snapshotId-append")
-    val fields = partitionFieldsFor(prevMeta, parts)
-    writePartitionedFiles(df, fields, parts, outDir.abs)
-    val entries = partitionedLeaves(outDir, parts).flatMap {
-      case (tup, dir) =>
-        entriesFor(spark, dir.abs, seq, fieldIds = statIds,
-          partition = tup)
-    }
+    val outDir =
+      TableIO(tableDir).child("data").child(s"${b.snapshotId}-append")
+    writePartitionedFiles(df, partitionFieldsFor(b.meta, parts), parts,
+      outDir.abs)
+    val entries = leafEntries(spark, outDir, parts, b.seq,
+      topLevelFieldIds(b.schemaStr))
     require(entries.nonEmpty, "nothing to append")
-    val manifests = partitionedManifests(md, entries, parts,
-      specs.length - 1, snapshotId, schemaStr, groupSize, 0)
-    val list = writeManifestList(md, snapshotId, manifests,
-      carryForward = carried)
-    val version = writeMetadataJson(tableDir, schemaStr, snapshotId, seq,
-      list, "append", summary, entries.length, entries.map(_.rows).sum,
-      specs = specs,
-      hintBase = Some(Some((prevVer, prevMeta))))
-    Commit(version, snapshotId, seq,
-      manifests.head.file.abs,
-      list.abs, entries.length, entries.map(_.rows).sum)
+    val manifests = b.dataManifests(entries, groupSize)
+    val list = writeManifestList(b.md, b.snapshotId, manifests,
+      carryForward = b.headManifests)
+    b.commit(manifests.head.file, list, "append", summary, entries)
   }
 
   /** The table's DEFAULT (write-target) partition spec as the
@@ -1341,47 +1366,22 @@ object IcebergMetadata {
                               regexIfFirst: Option[String] = None,
                               groupSize: Int = 8): Commit =
       withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    md.mkdirs()
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
-    currentMetadata(tableDir) match {
-      case Some((prevVer, prevMeta)) =>
-        val specs = specsFromMeta(prevMeta)
-        val parts = specs.last
+    val b = headOf(tableDir)
+    b.md.mkdirs()
+    b.head match {
+      case Some(_) =>
+        val parts = b.specs.last
         require(parts.nonEmpty,
           s"$tableDir default spec is unpartitioned: stage through the " +
             "plain append path")
-        val curSchemaId = prevMeta.get("current-schema-id").asInt
-        val schemaStr = prevMeta.withArray[ArrayNode]("schemas").asScala
-          .find(_.get("schema-id").asInt == curSchemaId).get.toString
-        val statIds = topLevelFieldIds(schemaStr)
-        val seq = prevMeta.get("last-sequence-number").asLong + 1
-        val entries = partitionedLeaves(TableIO(stagedRoot), parts)
-          .flatMap { case (tup, dir) =>
-            entriesFor(spark, dir.abs, seq, fieldIds = statIds,
-              partition = tup, onlyFiles = onlyFiles)
-          }
+        val entries = leafEntries(spark, TableIO(stagedRoot), parts, b.seq,
+          topLevelFieldIds(b.schemaStr), onlyFiles)
         require(entries.nonEmpty, s"no staged files under $stagedRoot")
-        val manifests = partitionedManifests(md, entries, parts,
-          specs.length - 1, snapshotId, schemaStr, groupSize, 0)
-        val carried =
-          if (overwrite) Nil
-          else {
-            val prevSnap = prevMeta.withArray[ArrayNode]("snapshots")
-              .asScala.find(_.get("snapshot-id").asLong ==
-                prevMeta.get("current-snapshot-id").asLong).getOrElse(
-                  throw new IllegalStateException(
-                    "current snapshot missing"))
-            readAvro(TableIO(prevSnap.get("manifest-list").asText))
-          }
-        val list = writeManifestList(md, snapshotId, manifests,
-          carryForward = carried)
-        val version = writeMetadataJson(tableDir, schemaStr, snapshotId,
-          seq, list, if (overwrite) "overwrite" else "append", summary,
-          entries.length, entries.map(_.rows).sum, specs = specs,
-          hintBase = Some(Some((prevVer, prevMeta))))
-        Commit(version, snapshotId, seq, manifests.head.file.abs,
-          list.abs, entries.length, entries.map(_.rows).sum)
+        val manifests = b.dataManifests(entries, groupSize)
+        val list = writeManifestList(b.md, b.snapshotId, manifests,
+          carryForward = if (overwrite) Nil else b.headManifests)
+        b.commit(manifests.head.file, list,
+          if (overwrite) "overwrite" else "append", summary, entries)
       case None =>
         val regex = regexIfFirst.getOrElse(
           throw new IllegalStateException(
@@ -1391,23 +1391,14 @@ object IcebergMetadata {
         require(fields.nonEmpty, s"no partition fields in '$regex'")
         val schemaStr = schemaJson(schema)
         val parts = specFieldsFor(schema, schemaStr, fields)
-        val statIds = topLevelFieldIds(schemaStr)
-        val seq = 1L
-        val entries = partitionedLeaves(TableIO(stagedRoot), parts)
-          .flatMap { case (tup, dir) =>
-            entriesFor(spark, dir.abs, seq, fieldIds = statIds,
-              partition = tup, onlyFiles = onlyFiles)
-          }
+        val entries = leafEntries(spark, TableIO(stagedRoot), parts, b.seq,
+          topLevelFieldIds(schemaStr), onlyFiles)
         require(entries.nonEmpty, s"no staged files under $stagedRoot")
-        val manifests = partitionedManifests(md, entries, parts, 0,
-          snapshotId, schemaStr, groupSize, 0)
-        val list = writeManifestList(md, snapshotId, manifests)
-        val version = writeMetadataJson(tableDir, schemaStr, snapshotId,
-          seq, list, "append", summary, entries.length,
-          entries.map(_.rows).sum, specs = Seq(parts),
-          hintBase = Some(None))
-        Commit(version, snapshotId, seq, manifests.head.file.abs,
-          list.abs, entries.length, entries.map(_.rows).sum)
+        val manifests = partitionedManifests(b.md, entries, parts, 0,
+          b.snapshotId, schemaStr, groupSize, 0)
+        val list = writeManifestList(b.md, b.snapshotId, manifests)
+        b.commit(manifests.head.file, list, "append", summary, entries,
+          schema = schemaStr, specs = Some(Seq(parts)))
     }
   }
 
@@ -1455,63 +1446,37 @@ object IcebergMetadata {
       }
     }
     withCommitRetry(tableDir) {
-      val md = metaDir(tableDir)
-      val (prevVer, prevMeta) = currentMetadata(tableDir).get
-      val specs = specsFromMeta(prevMeta)
-      val parts = specs.last
-      val curSchemaId = prevMeta.get("current-schema-id").asInt
-      val schemaStr = prevMeta.withArray[ArrayNode]("schemas").asScala
-        .find(_.get("schema-id").asInt == curSchemaId).get.toString
-      val statIds = topLevelFieldIds(schemaStr)
-      val seq = prevMeta.get("last-sequence-number").asLong + 1
-      val snapshotId =
-        java.util.UUID.randomUUID().getMostSignificantBits.abs
+      val b = committedHead(tableDir)
+      val parts = b.specs.last
+      val statIds = topLevelFieldIds(b.schemaStr)
       val dataEntries = stagedDataRoot.toSeq.flatMap { root =>
         if (parts.nonEmpty)
-          partitionedLeaves(TableIO(root), parts).flatMap {
-            case (tup, dir) =>
-              entriesFor(spark, dir.abs, seq, fieldIds = statIds,
-                partition = tup, onlyFiles = onlyData)
-          }
-        else entriesFor(spark, root, seq, fieldIds = statIds,
+          leafEntries(spark, TableIO(root), parts, b.seq, statIds, onlyData)
+        else entriesFor(spark, root, b.seq, fieldIds = statIds,
           onlyFiles = onlyData)
       }
       val deleteEntries = deleteDir.toSeq.flatMap(dir =>
-        entriesFor(spark, dir, seq, content = deleteContent,
+        entriesFor(spark, dir, b.seq, content = deleteContent,
           equalityIds = equalityIds, onlyFiles = onlyDeletes))
       require(dataEntries.nonEmpty || deleteEntries.nonEmpty,
         "empty row delta")
       val dataManifests =
         if (dataEntries.isEmpty) Nil
-        else if (parts.nonEmpty)
-          partitionedManifests(md, dataEntries, parts, specs.length - 1,
-            snapshotId, schemaStr, groupSize, 0)
-        else Seq(ManifestOut(writeManifest(md, dataEntries, snapshotId,
-          schemaStr, "data", 0), 0, dataEntries))
+        else b.dataManifests(dataEntries, groupSize)
       val deleteManifests =
         if (deleteEntries.isEmpty) Nil
-        else Seq(ManifestOut(writeManifest(md, deleteEntries, snapshotId,
-          schemaStr, "deletes", dataManifests.length), 1, deleteEntries))
-      val prevSnap = prevMeta.withArray[ArrayNode]("snapshots").asScala
-        .find(_.get("snapshot-id").asLong ==
-          prevMeta.get("current-snapshot-id").asLong).getOrElse(
-            throw new IllegalStateException("current snapshot missing"))
-      val carried = readAvro(TableIO(prevSnap.get("manifest-list").asText))
-      val list = writeManifestList(md, snapshotId,
-        dataManifests ++ deleteManifests, carryForward = carried)
+        else Seq(ManifestOut(writeManifest(b.md, deleteEntries, b.snapshotId,
+          b.schemaStr, "deletes", dataManifests.length), 1, deleteEntries))
+      val list = writeManifestList(b.md, b.snapshotId,
+        dataManifests ++ deleteManifests, carryForward = b.headManifests)
       val fullSummary = summary ++ Map(
         "added-delete-files" -> deleteEntries.size.toString,
         (if (deleteContent == 2) "added-equality-deletes"
          else "added-position-deletes") ->
           deleteEntries.map(_.rows).sum.toString)
-      val version = writeMetadataJson(tableDir, schemaStr, snapshotId,
-        seq, list, operation, fullSummary, dataEntries.length,
-        dataEntries.map(_.rows).sum, specs = specs,
-        hintBase = Some(Some((prevVer, prevMeta))))
-      Commit(version, snapshotId, seq,
-        (dataManifests ++ deleteManifests).head.file.abs, list.abs,
-        dataEntries.length + deleteEntries.length,
-        dataEntries.map(_.rows).sum)
+      b.commit((dataManifests ++ deleteManifests).head.file, list,
+        operation, fullSummary, dataEntries)
+        .copy(addedFiles = dataEntries.length + deleteEntries.length)
     }
   }
 
@@ -1523,20 +1488,9 @@ object IcebergMetadata {
   def truncateCommit(spark: SparkSession, tableDir: String,
                      summary: Map[String, String] = Map.empty): Commit =
       withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (prevVer, prevMeta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"truncate needs a committed table at $tableDir"))
-    val curSchemaId = prevMeta.get("current-schema-id").asInt
-    val schemaStr = prevMeta.withArray[ArrayNode]("schemas").asScala
-      .find(_.get("schema-id").asInt == curSchemaId).get.toString
-    val seq = prevMeta.get("last-sequence-number").asLong + 1
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
-    val list = writeManifestList(md, snapshotId, Nil)
-    val version = writeMetadataJson(tableDir, schemaStr, snapshotId, seq,
-      list, "delete", summary, 0, 0L, specs = specsFromMeta(prevMeta),
-      hintBase = Some(Some((prevVer, prevMeta))))
-    Commit(version, snapshotId, seq, list.abs, list.abs, 0, 0L)
+    val b = committedHead(tableDir)
+    val list = writeManifestList(b.md, b.snapshotId, Nil)
+    b.commit(list, list, "delete", summary, Nil)
   }
 
   /** REWRITE MANIFESTS — Iceberg's RewriteManifests action, the
@@ -1552,63 +1506,28 @@ object IcebergMetadata {
   def rewriteManifests(spark: SparkSession, tableDir: String,
                        groupSize: Int = 8,
                        summary: Map[String, String] = Map.empty): Commit = withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (prevVer, prevMeta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    val specs = specsFromMeta(prevMeta)
-    val parts = specs.last
-    val curSchemaId = prevMeta.get("current-schema-id").asInt
-    val schemaStr = prevMeta.withArray[ArrayNode]("schemas").asScala
-      .find(_.get("schema-id").asInt == curSchemaId).get.toString
-    val prevSnapId = prevMeta.get("current-snapshot-id").asLong
-    val prevSnap = prevMeta.withArray[ArrayNode]("snapshots").asScala
-      .find(_.get("snapshot-id").asLong == prevSnapId).get
+    val b = committedHead(tableDir)
     // delete manifests (content 1) ride along untouched — their rows
     // re-emit verbatim from the old list
-    val prevListRows =
-      readAvro(TableIO(prevSnap.get("manifest-list").asText))
+    val prevListRows = b.headManifests
     val deleteRows = prevListRows.filter(
       _.get("content").asInstanceOf[Int] == 1)
-    val dataStats = dataFileStats(tableDir).filter(_.content == 0)
+    val dataStats = b.stats().filter(_.content == 0)
     require(dataStats.nonEmpty, "nothing to rewrite")
-    def existing(e: DataFileStat): FileEntry =
-      FileEntry(e.path, e.sizeBytes, e.recordCount, e.seq,
-        0, Nil, e.stats, e.partition,
-        entryStatus = 0, entrySnapshotId = Some(e.addedSnapshotId))
-    val seq = prevMeta.get("last-sequence-number").asLong + 1
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
     // spec membership from each manifest's partition-spec-id (arity
     // cannot distinguish same-arity specs after day→hour evolution)
     val (tupledStats, otherStats) =
-      dataStats.partition(_.specId == specs.length - 1)
-    val tupled = tupledStats.map(existing)
+      dataStats.partition(_.specId == b.specs.length - 1)
+    val partM = b.dataManifests(tupledStats.map(_.existing), groupSize)
     val manifests =
-      if (parts.isEmpty && otherStats.isEmpty)
-        Seq(ManifestOut(writeManifest(md, tupled, snapshotId,
-          schemaStr, "data", 0), 0, tupled))
-      else {
-        val partM =
-          if (parts.isEmpty)
-            Seq(ManifestOut(writeManifest(md, tupled, snapshotId,
-              schemaStr, "data", 0), 0, tupled))
-          else partitionedManifests(md, tupled, parts,
-            specs.length - 1, snapshotId, schemaStr, groupSize, 0)
-        partM ++ otherSpecManifests(md, otherStats, specs, snapshotId,
-          schemaStr, groupSize, partM.length)
-      }
-    val list = writeManifestList(md, snapshotId, manifests,
+      partM ++ otherSpecManifests(b, otherStats, groupSize, partM.length)
+    val list = writeManifestList(b.md, b.snapshotId, manifests,
       carryForward = deleteRows)
-    val version = writeMetadataJson(tableDir, schemaStr, snapshotId, seq,
-      list, "replace",
+    b.commit(manifests.head.file, list, "replace",
       summary ++ Map(
         "manifests-replaced" ->
           (prevListRows.length - deleteRows.length).toString,
-        "manifests-created" -> manifests.length.toString),
-      0, 0L, specs = specs,
-      hintBase = Some(Some((prevVer, prevMeta))))
-    Commit(version, snapshotId, seq,
-      manifests.head.file.abs,
-      list.abs, 0, 0L)
+        "manifests-created" -> manifests.length.toString), Nil)
   }
 
   /** MINOR delete compaction (Iceberg's
@@ -1633,10 +1552,8 @@ object IcebergMetadata {
   def rewritePositionDeletes(spark: SparkSession, tableDir: String,
                              summary: Map[String, String] = Map.empty)
       : Option[Commit] = withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (prevVer, prevMeta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    val stats = dataFileStats(tableDir)
+    val b = committedHead(tableDir)
+    val stats = b.stats()
     val posStats = stats.filter(_.content == 1)
     if (posStats.isEmpty) return None
     import spark.implicits._
@@ -1657,51 +1574,33 @@ object IcebergMetadata {
       kept.unpersist(): Unit
       return None
     }
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
-    val curSchemaId = prevMeta.get("current-schema-id").asInt
-    val schemaStr = prevMeta.withArray[ArrayNode]("schemas").asScala
-      .find(_.get("schema-id").asInt == curSchemaId).get.toString
-    val prevSnap = prevMeta.withArray[ArrayNode]("snapshots").asScala
-      .find(_.get("snapshot-id").asLong ==
-        prevMeta.get("current-snapshot-id").asLong).getOrElse(
-        throw new IllegalStateException("current snapshot missing"))
-    val dataListRows =
-      readAvro(TableIO(prevSnap.get("manifest-list").asText))
-        .filter(_.get("content").asInstanceOf[Int] == 0)
     val posEntries =
       if (keptN == 0) Nil
       else {
         val outDir = TableIO(tableDir).child("data")
-          .child(snapshotId.toString).child("posdeletes")
+          .child(b.snapshotId.toString).child("posdeletes")
         kept.orderBy("file_path", "pos") // spec: sorted by position
           .coalesce(1).write.mode("overwrite").parquet(outDir.abs)
         entriesFor(spark, outDir.abs, posStats.map(_.seq).max,
           content = 1)
       }
     kept.unpersist(): Unit
-    val eqEntries = stats.filter(_.content == 2).map(e =>
-      FileEntry(e.path, e.sizeBytes, e.recordCount, e.seq, 2,
-        e.equalityIds, e.stats, e.partition, entryStatus = 0,
-        entrySnapshotId = Some(e.addedSnapshotId)))
-    val delEntries = eqEntries ++ posEntries
+    val delEntries = stats.filter(_.content == 2).map(_.existing) ++
+      posEntries
     val manifests =
       if (delEntries.isEmpty) Nil
-      else Seq(ManifestOut(writeManifest(md, delEntries, snapshotId,
-        schemaStr, "deletes", 0), 1, delEntries))
-    val seq = prevMeta.get("last-sequence-number").asLong + 1
-    val list = writeManifestList(md, snapshotId, manifests,
-      carryForward = dataListRows)
-    val version = writeMetadataJson(tableDir, schemaStr, snapshotId, seq,
-      list, "replace",
+      else Seq(ManifestOut(writeManifest(b.md, delEntries, b.snapshotId,
+        b.schemaStr, "deletes", 0), 1, delEntries))
+    val list = writeManifestList(b.md, b.snapshotId, manifests,
+      carryForward = b.headManifests.filter(
+        _.get("content").asInstanceOf[Int] == 0))
+    Some(b.commit(manifests.headOption.map(_.file).getOrElse(list), list,
+      "replace",
       summary ++ Map(
         "position-delete-files-removed" -> posStats.size.toString,
         "position-delete-files-added" -> posEntries.size.toString,
-        "dangling-position-deletes-dropped" -> dangling.toString),
-      0, 0L, specs = specsFromMeta(prevMeta),
-      hintBase = Some(Some((prevVer, prevMeta))))
-    Some(Commit(version, snapshotId, seq,
-      manifests.headOption.map(_.file.abs).getOrElse(list.abs),
-      list.abs, posEntries.size, keptN))
+        "dangling-position-deletes-dropped" -> dangling.toString), Nil)
+      .copy(addedFiles = posEntries.size, addedRows = keptN))
   }
 
   /** EQUALITY-DELETE minor compaction — the cadence op a long CDC run
@@ -1729,17 +1628,14 @@ object IcebergMetadata {
   def rewriteEqualityDeletes(spark: SparkSession, tableDir: String,
                              summary: Map[String, String] = Map.empty)
       : Option[Commit] = withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (prevVer, prevMeta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    val stats = dataFileStats(tableDir)
+    val b = committedHead(tableDir)
+    val stats = b.stats()
     val eqStats = stats.filter(_.content == 2)
     if (eqStats.size < 2) return None
     val groups = eqStats.groupBy(e =>
       (e.equalityIds, e.partition, e.specId))
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
     val outRoot = TableIO(tableDir).child("data")
-      .child(snapshotId.toString).child("eqdeletes")
+      .child(b.snapshotId.toString).child("eqdeletes")
     var produced = 0
     // files-removed counts ONLY groups that actually rewrote — a
     // mixed table's non-subsumed groups carry forward as EXISTING
@@ -1770,51 +1666,26 @@ object IcebergMetadata {
               equalityIds = ids, partition = part)
           }
         dedup.unpersist(): Unit
-        if (entries.isEmpty)
-          fs.map(e => FileEntry(e.path, e.sizeBytes, e.recordCount,
-            e.seq, 2, e.equalityIds, e.stats, e.partition,
-            entryStatus = 0, entrySnapshotId = Some(e.addedSnapshotId)))
+        if (entries.isEmpty) fs.map(_.existing)
         else { produced += entries.size; removedFiles += fs.size; entries }
-      case ((_, _, _), fs) =>
-        fs.map(e => FileEntry(e.path, e.sizeBytes, e.recordCount,
-          e.seq, 2, e.equalityIds, e.stats, e.partition,
-          entryStatus = 0, entrySnapshotId = Some(e.addedSnapshotId)))
+      case ((_, _, _), fs) => fs.map(_.existing)
     }
     if (produced == 0) return None
-    val curSchemaId = prevMeta.get("current-schema-id").asInt
-    val schemaStr = prevMeta.withArray[ArrayNode]("schemas").asScala
-      .find(_.get("schema-id").asInt == curSchemaId).get.toString
-    val prevSnap = prevMeta.withArray[ArrayNode]("snapshots").asScala
-      .find(_.get("snapshot-id").asLong ==
-        prevMeta.get("current-snapshot-id").asLong).getOrElse(
-        throw new IllegalStateException("current snapshot missing"))
-    val dataListRows =
-      readAvro(TableIO(prevSnap.get("manifest-list").asText))
-        .filter(_.get("content").asInstanceOf[Int] == 0)
-    val posEntries = stats.filter(_.content == 1).map(e =>
-      FileEntry(e.path, e.sizeBytes, e.recordCount, e.seq, 1,
-        Nil, e.stats, e.partition, entryStatus = 0,
-        entrySnapshotId = Some(e.addedSnapshotId)))
-    val delEntries = newEntries ++ posEntries
-    val manifests = Seq(ManifestOut(writeManifest(md, delEntries,
-      snapshotId, schemaStr, "deletes", 0), 1, delEntries))
-    val seq = prevMeta.get("last-sequence-number").asLong + 1
-    val list = writeManifestList(md, snapshotId, manifests,
-      carryForward = dataListRows)
-    val version = writeMetadataJson(tableDir, schemaStr, snapshotId, seq,
-      list, "replace",
-      summary ++ Map(
-        "equality-delete-files-removed" -> removedFiles.toString,
-        "equality-delete-files-added" ->
-          newEntries.count(_.entryStatus == 1).toString),
-      0, 0L, specs = specsFromMeta(prevMeta),
-      hintBase = Some(Some((prevVer, prevMeta))))
+    val delEntries = newEntries ++ stats.filter(_.content == 1).map(_.existing)
+    val manifests = Seq(ManifestOut(writeManifest(b.md, delEntries,
+      b.snapshotId, b.schemaStr, "deletes", 0), 1, delEntries))
+    val list = writeManifestList(b.md, b.snapshotId, manifests,
+      carryForward = b.headManifests.filter(
+        _.get("content").asInstanceOf[Int] == 0))
     // report ADDED consolidation outputs only — carried-forward
     // EXISTING entries of non-subsumed groups are not work done, and
     // the CLI verb prints these counts
     val addedOnly = newEntries.filter(_.entryStatus == 1)
-    Some(Commit(version, snapshotId, seq, manifests.head.file.abs,
-      list.abs, addedOnly.size, addedOnly.map(_.rows).sum))
+    Some(b.commit(manifests.head.file, list, "replace",
+      summary ++ Map(
+        "equality-delete-files-removed" -> removedFiles.toString,
+        "equality-delete-files-added" -> addedOnly.size.toString), Nil)
+      .copy(addedFiles = addedOnly.size, addedRows = addedOnly.map(_.rows).sum))
   }
 
   /** INSERT-INTO semantics for a table that may not exist yet: the
@@ -1840,33 +1711,26 @@ object IcebergMetadata {
         appendCommit(spark, tableDir, dataDir, summary, onlyFiles)
       }
 
+  /** Commit the parquet files under `dataDir` as the next snapshot of
+    * the Iceberg table rooted at `tableDir`. `operation` is the spec's
+    * snapshot summary operation (`append` for incremental segments,
+    * `overwrite` after a compaction rewrote the base); `summary` extras
+    * land in the snapshot summary — the reference stores its 2PC state
+    * there via the `olake_2pc` property (iceberg.go:521-545), so pass
+    * `Map("olake_2pc" -> stateJson)` for the commit-position analog. */
   def commit(spark: SparkSession, tableDir: String, dataDir: String,
              operation: String = "append",
              summary: Map[String, String] = Map.empty,
              retryAttempts: Int = 12,
              onlyFiles: Option[Set[String]] = None): Commit =
       withCommitRetry(tableDir, retryAttempts) {
-    val md = metaDir(tableDir)
-    md.mkdirs()
-    val prev = currentMetadata(tableDir)
-    val seq = prev.map(_._2.get("last-sequence-number").asLong)
-      .getOrElse(0L) + 1
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
-    val schemaStr = schemaJson(onlyFiles
-      .fold(spark.read.parquet(dataDir))(fs =>
-        spark.read.parquet(fs.toSeq: _*)).schema)
-    val entries = entriesFor(spark, dataDir, seq,
-      fieldIds = topLevelFieldIds(schemaStr), onlyFiles = onlyFiles)
-    require(entries.nonEmpty, s"no parquet data files under $dataDir")
-    val manifest = writeManifest(md, entries, snapshotId, schemaStr,
-      "data", 0)
-    val list = writeManifestList(md, snapshotId,
-      Seq(ManifestOut(manifest, 0, entries)))
-    val version = writeMetadataJson(tableDir, schemaStr, snapshotId, seq,
-      list, operation, summary, entries.length, entries.map(_.rows).sum,
-      hintBase = Some(prev))
-    Commit(version, snapshotId, seq, manifest.abs,
-      list.abs, entries.length, entries.map(_.rows).sum)
+    val b = headOf(tableDir)
+    b.md.mkdirs()
+    val schemaStr = filesSchema(spark, dataDir, onlyFiles)
+    val (manifest, list, entries) = dataSnapshot(spark, b.md,
+      b.snapshotId, b.seq, dataDir, schemaStr, onlyFiles)
+    b.commit(manifest, list, operation, summary, entries,
+      schema = schemaStr, specs = Some(Seq(Nil)))
   }
 
   /** WRITE-AUDIT-PUBLISH, the write half: commit `dataDir` as a new
@@ -1886,67 +1750,28 @@ object IcebergMetadata {
                      onlyFiles: Option[Set[String]] = None,
                      carryForward: Boolean = false): Commit = withCommitRetry(tableDir) {
     require(branch != "main", "main moves via commit/fastForward")
-    val md = metaDir(tableDir)
-    val (version, meta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    val curSchemaId = meta.get("current-schema-id").asInt
-    val schemaStr = meta.withArray[ArrayNode]("schemas").asScala
-      .find(_.get("schema-id").asInt == curSchemaId).get.toString
-    val seq = meta.get("last-sequence-number").asLong + 1
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
-    val entries = entriesFor(spark, dataDir, seq,
-      fieldIds = topLevelFieldIds(schemaStr), onlyFiles = onlyFiles)
-    require(entries.nonEmpty, s"no parquet data files under $dataDir")
-    // successive stages CHAIN on the branch: parent = the branch's own
-    // head when the ref exists (a multi-commit audit is one lineage a
-    // branch tail can walk), main's head only for the FIRST stage
-    val parentId = Option(meta.path("refs").get(branch))
-      .map(_.get("snapshot-id").asLong)
-      .getOrElse(meta.get("current-snapshot-id").asLong)
-    val manifest = writeManifest(md, entries, snapshotId, schemaStr,
-      "data", 0)
-    // `carryForward` makes the branch snapshot a FAST-APPEND on its
-    // parent (Iceberg's wap.branch INSERT shape: branch state = parent
-    // state + new files); default false keeps the auditor's
-    // stage-only (replace-style) lists
+    val b = committedHead(tableDir)
+    // successive stages CHAIN on the branch: the snapshot's parent is
+    // the branch's own head when the ref exists, main's for the FIRST
+    // stage. `carryForward` makes it a FAST-APPEND on that parent
+    // (Iceberg's wap.branch INSERT shape: branch state = parent state +
+    // new files); the default keeps the auditor's stage-only lists
     val carried =
       if (!carryForward) Nil
-      else meta.withArray[ArrayNode]("snapshots").asScala
-        .find(_.get("snapshot-id").asLong == parentId)
-        .map(s => readAvro(TableIO(s.get("manifest-list").asText)))
-        .getOrElse(Nil)
-    val list = writeManifestList(md, snapshotId,
-      Seq(ManifestOut(manifest, 0, entries)), carryForward = carried)
-    val nowMs = System.currentTimeMillis()
-    val root = meta.deepCopy[ObjectNode]()
-    root.put("last-sequence-number", seq)
-    val snap = root.withArray[ArrayNode]("snapshots").addObject()
-    snap.put("snapshot-id", snapshotId)
-    snap.put("parent-snapshot-id", parentId)
-    snap.put("timestamp-ms", nowMs)
-    snap.put("sequence-number", seq)
-    snap.put("schema-id", curSchemaId)
-    snap.put("manifest-list", list.abs)
-    val sum = snap.putObject("summary")
-    sum.put("operation", "append")
-    sum.put("added-data-files", entries.length.toString)
-    sum.put("added-records", entries.map(_.rows).sum.toString)
-    summary.foreach { case (k, v) => sum.put(k, v): Unit }
-    val refs =
-      if (root.has("refs")) root.get("refs").asInstanceOf[ObjectNode]
-      else root.putObject("refs")
-    val r = refs.putObject(branch)
-    r.put("snapshot-id", snapshotId); r.put("type", "branch")
-    appendMetadataLog(root, md, version, meta.get("last-updated-ms").asLong)
-    root.put("last-updated-ms", nowMs)
-    val nv = writeVersionFiles(md, root, version + 1)
-    Commit(nv, snapshotId, seq, manifest.abs,
-      list.abs, entries.length, entries.map(_.rows).sum)
+      else {
+        val parentId = Option(b.meta.path("refs").get(branch))
+          .map(_.get("snapshot-id").asLong)
+          .getOrElse(b.meta.get("current-snapshot-id").asLong)
+        b.meta.withArray[ArrayNode]("snapshots").asScala
+          .find(_.get("snapshot-id").asLong == parentId)
+          .map(s => readAvro(TableIO(s.get("manifest-list").asText)))
+          .getOrElse(Nil)
+      }
+    val (manifest, list, entries) = dataSnapshot(spark, b.md,
+      b.snapshotId, b.seq, dataDir, b.schemaStr, onlyFiles, carried)
+    b.commit(manifest, list, "append", summary, entries, branch = branch)
   }
 
-  /** WRITE-AUDIT-PUBLISH, the publish half: move `main` (and the
-    * current snapshot) to a branch head — a ref-only metadata commit,
-    * atomic at the version-hint flip, no data movement. */
   /** ROLLBACK main to a prior snapshot in history (Iceberg's
     * `rollback_to_snapshot`): a ref-only metadata commit — the
     * abandoned commits stay in the array for time travel until
@@ -1955,10 +1780,14 @@ object IcebergMetadata {
   def rollbackTo(tableDir: String, snapshotId: Long): Int =
     withCommitRetry(tableDir) { applyRollback(tableDir, snapshotId) }
 
+  /** WRITE-AUDIT-PUBLISH, the publish half: move `main` (and the
+    * current snapshot) to a branch head — a ref-only metadata commit,
+    * atomic at the version-hint flip, no data movement. */
   def fastForward(tableDir: String, branch: String): Int = withCommitRetry(tableDir) {
-    val target = refSnapshotId(tableDir, branch).getOrElse(
-      throw new IllegalArgumentException(s"no ref $branch"))
-    applyRollback(tableDir, target)
+    val b = committedHead(tableDir)
+    moveMain(b, Option(b.meta.path("refs").get(branch))
+      .map(_.get("snapshot-id").asLong)
+      .getOrElse(throw new IllegalArgumentException(s"no ref $branch")))
   }
 
   /** CHERRY-PICK (Iceberg's `cherrypick_snapshot`): apply an APPEND
@@ -1984,53 +1813,33 @@ object IcebergMetadata {
   def cherrypickSnapshot(tableDir: String, sourceSnapshotId: Long,
                          summary: Map[String, String] = Map.empty)
       : Commit = withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (baseVer, meta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    val snaps = meta.withArray[ArrayNode]("snapshots").asScala.toSeq
-    val src = snaps.find(_.get("snapshot-id").asLong == sourceSnapshotId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot $sourceSnapshotId not in table history at $tableDir"))
+    val b = committedHead(tableDir)
+    val src = snapshotNode(b.meta, sourceSnapshotId, tableDir)
     val op = src.get("summary").get("operation").asText
     require(op == "append",
       s"cherry-pick source is '$op': only append snapshots transplant " +
         "(an overwrite's file removals don't apply onto a moved head)")
-    val picked = dataFileStats(tableDir, Some(sourceSnapshotId))
+    val picked = b.stats(sourceSnapshotId)
       .filter(e => e.content == 0 &&
         e.addedSnapshotId == sourceSnapshotId)
     require(picked.nonEmpty, s"snapshot $sourceSnapshotId added no files")
     require(picked.forall(_.partition.isEmpty),
       "cherry-pick of a partitioned-spec snapshot is not supported: " +
         "fast-forward the branch or re-append through the table's spec")
-    val headLive = dataFileStats(tableDir).collect {
+    val headLive = b.stats().collect {
       case e if e.content == 0 => e.path }.toSet
     require(!picked.exists(e => headLive.contains(e.path)),
       s"snapshot $sourceSnapshotId is already applied at the current " +
         "head (its files are live) — nothing to cherry-pick")
-    val curSchemaId = meta.get("current-schema-id").asInt
-    val schemaStr = meta.withArray[ArrayNode]("schemas").asScala
-      .find(_.get("schema-id").asInt == curSchemaId).get.toString
-    val headSnap = snaps.find(_.get("snapshot-id").asLong ==
-      meta.get("current-snapshot-id").asLong).getOrElse(
-        throw new IllegalStateException("current snapshot missing"))
-    val carried = readAvro(TableIO(headSnap.get("manifest-list").asText))
-    val seq = meta.get("last-sequence-number").asLong + 1
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
     val entries = picked.map(e =>
-      FileEntry(e.path, e.sizeBytes, e.recordCount, seq, 0, Nil,
+      FileEntry(e.path, e.sizeBytes, e.recordCount, b.seq, 0, Nil,
         e.stats, Nil))
-    val manifest = writeManifest(md, entries, snapshotId, schemaStr,
+    val manifest = writeManifest(b.md, entries, b.snapshotId, b.schemaStr,
       "data", 0)
-    val list = writeManifestList(md, snapshotId,
-      Seq(ManifestOut(manifest, 0, entries)), carryForward = carried)
-    val version = writeMetadataJson(tableDir, schemaStr, snapshotId, seq,
-      list, "append",
-      summary + ("source-snapshot-id" -> sourceSnapshotId.toString),
-      entries.length, entries.map(_.rows).sum,
-      specs = specsFromMeta(meta),
-      hintBase = Some(Some((baseVer, meta))))
-    Commit(version, snapshotId, seq, manifest.abs,
-      list.abs, entries.length, entries.map(_.rows).sum)
+    val list = writeManifestList(b.md, b.snapshotId,
+      Seq(ManifestOut(manifest, 0, entries)), carryForward = b.headManifests)
+    b.commit(manifest, list, "append",
+      summary + ("source-snapshot-id" -> sourceSnapshotId.toString), entries)
   }
 
   /** Small-file BINPACK rewrite — the RewriteDataFiles maintenance
@@ -2075,14 +1884,12 @@ object IcebergMetadata {
                      groupSize: Int = 8,
                      maxConcurrentGroups: Int = 0)
       : Option[Commit] = withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (prevVer, prevMeta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    val all = dataFileStats(tableDir)
+    val b = committedHead(tableDir)
+    val all = b.stats()
     require(all.forall(_.content == 0),
       "binpack over a delete-bearing (MoR) table would orphan its " +
         "positional deletes: compact the segment view first")
-    val specs = specsFromMeta(prevMeta)
+    val specs = b.specs
     val parts = specs.last // the default spec (writers keep it last)
     val threshold = if (minFileBytes > 0) minFileBytes else targetBytes * 3 / 4
     // spec membership comes from each manifest's partition-spec-id,
@@ -2105,14 +1912,9 @@ object IcebergMetadata {
       // the TABLE's committed current schema, not a re-derived one —
       // field ids must survive the rewrite verbatim (an evolved table's
       // stat maps would otherwise key on the wrong ids)
-      val curSchemaId = prevMeta.get("current-schema-id").asInt
-      val schemaStr = prevMeta.withArray[ArrayNode]("schemas").asScala
-        .find(_.get("schema-id").asInt == curSchemaId).get.toString
-      val statIds = topLevelFieldIds(schemaStr)
-      val seq = prevMeta.get("last-sequence-number").asLong + 1
-      val snapshotId =
-        java.util.UUID.randomUUID().getMostSignificantBits.abs
-      val outDir = TableIO(tableDir).child("data").child(s"$snapshotId-binpack")
+      val statIds = topLevelFieldIds(b.schemaStr)
+      val outDir =
+        TableIO(tableDir).child("data").child(s"${b.snapshotId}-binpack")
       // each rewritten group round-robins its victim bytes into
       // ceil(bytes/target) outputs — the rewrite reads ONLY victim
       // files, so cost ∝ small-file set, not the table. Groups are
@@ -2143,50 +1945,39 @@ object IcebergMetadata {
             spark.read.parquet(v.map(_.path): _*)
               .repartition(bins)
               .write.mode("overwrite").parquet(dir.abs)
-            entriesFor(spark, dir.abs, seq, fieldIds = statIds,
+            entriesFor(spark, dir.abs, b.seq, fieldIds = statIds,
               partition = tuple)
           }.seq.flatten.toSeq
         } finally pool.shutdown()
       // kept files: EXISTING entries rebuilt from the MANIFESTS alone
       // (zero footer reads) — original sequence numbers, original
       // adding-snapshot ids, original stats and tuples, all verbatim
-      def keptEntry(e: DataFileStat): FileEntry =
-        FileEntry(e.path, e.sizeBytes, e.recordCount, e.seq,
-          0, Nil, e.stats, e.partition,
-          entryStatus = 0, entrySnapshotId = Some(e.addedSnapshotId))
-      val keptTupled = planned.flatMap(_._3).map(keptEntry)
+      val keptTupled = planned.flatMap(_._3).map(_.existing)
       val victimBytes = victims.map(_.sizeBytes).sum
       val manifests =
         if (parts.isEmpty)
           Seq(ManifestOut(
-            writeManifest(md, newEntries, snapshotId, schemaStr, "data", 0),
+            writeManifest(b.md, newEntries, b.snapshotId, b.schemaStr,
+              "data", 0),
             0, newEntries)) ++
             (if (keptTupled.isEmpty) Nil
              else Seq(ManifestOut(
-               writeManifest(md, keptTupled, snapshotId, schemaStr,
+               writeManifest(b.md, keptTupled, b.snapshotId, b.schemaStr,
                  "data", 1), 0, keptTupled)))
         else {
-          val partM = partitionedManifests(md, newEntries ++ keptTupled,
-            parts, specs.length - 1, snapshotId, schemaStr, groupSize, 0)
+          val partM = partitionedManifests(b.md, newEntries ++ keptTupled,
+            parts, specs.length - 1, b.snapshotId, b.schemaStr, groupSize, 0)
           // files of EVERY other spec carry forward verbatim — each
           // spec keeps its own manifests, tuples intact, so per-spec
           // pruning survives the rewrite
-          partM ++ otherSpecManifests(md, otherSpec,
-            specs, snapshotId, schemaStr, groupSize, partM.length)
+          partM ++ otherSpecManifests(b, otherSpec, groupSize, partM.length)
         }
-      val list = writeManifestList(md, snapshotId, manifests)
-      val version = writeMetadataJson(tableDir, schemaStr, snapshotId, seq,
-        list, "replace",
+      val list = writeManifestList(b.md, b.snapshotId, manifests)
+      Some(b.commit(manifests.head.file, list, "replace",
         summary ++ Map(
           "rewritten-data-files" -> victims.size.toString,
           "added-data-files" -> newEntries.size.toString,
-          "rewritten-bytes" -> victimBytes.toString),
-        newEntries.length, newEntries.map(_.rows).sum, specs = specs,
-      hintBase = Some(Some((prevVer, prevMeta))))
-      Some(Commit(version, snapshotId, seq,
-        manifests.head.file.abs,
-        list.abs, newEntries.length,
-        newEntries.map(_.rows).sum))
+          "rewritten-bytes" -> victimBytes.toString), newEntries))
     }
   }
 
@@ -2207,32 +1998,24 @@ object IcebergMetadata {
                         graft.operators.SystemColumns.OlakeId,
                       summary: Map[String, String] = Map.empty,
                       groupSize: Int = 8): Commit = withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (prevVer, prevMeta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    val allStats = dataFileStats(tableDir)
+    val b = committedHead(tableDir)
+    val allStats = b.stats()
     val dataFiles = allStats.collect {
       case e if e.content == 0 => (e.path, e.seq) }
-    val specs = specsFromMeta(prevMeta)
-    val parts = specs.last
-    val curSchemaId = prevMeta.get("current-schema-id").asInt
-    val schemaStr = prevMeta.withArray[ArrayNode]("schemas").asScala
-      .find(_.get("schema-id").asInt == curSchemaId).get.toString
-    val statIds = topLevelFieldIds(schemaStr)
+    val parts = b.specs.last
+    val statIds = topLevelFieldIds(b.schemaStr)
     // sizes from the manifests (field 104) — zero per-file stat calls
     val totalBytes = allStats.filter(_.content == 0).map(_.sizeBytes).sum
     val bins =
       math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val seq = prevMeta.get("last-sequence-number").asLong + 1
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
     val outDir =
-      TableIO(tableDir).child("data").child(s"$snapshotId-compacted")
+      TableIO(tableDir).child("data").child(s"${b.snapshotId}-compacted")
     val resolved = readMoR(spark, tableDir, keyCol)
     val entries =
       if (parts.isEmpty) {
         resolved.repartition(bins)
           .write.mode("overwrite").parquet(outDir.abs)
-        entriesFor(spark, outDir.abs, seq, fieldIds = statIds)
+        entriesFor(spark, outDir.abs, b.seq, fieldIds = statIds)
       } else {
         // PARTITIONED compaction: partition values recompute from the
         // source columns (the tuple is derived metadata), outputs land
@@ -2242,31 +2025,17 @@ object IcebergMetadata {
         // table to prunable files. Specs carry forward verbatim; new
         // manifests write under the default spec with tuples +
         // field_summary bounds intact.
-        val fields = partitionFieldsFor(prevMeta, parts)
-        writePartitionedFiles(resolved, fields, parts, outDir.abs,
-          overwrite = true, bins = bins, clusterCols = Seq(keyCol))
-        partitionedLeaves(outDir, parts).flatMap { case (tup, dir) =>
-          entriesFor(spark, dir.abs, seq, fieldIds = statIds,
-            partition = tup)
-        }
+        writePartitionedFiles(resolved, partitionFieldsFor(b.meta, parts),
+          parts, outDir.abs, overwrite = true, bins = bins,
+          clusterCols = Seq(keyCol))
+        leafEntries(spark, outDir, parts, b.seq, statIds)
       }
-    val manifests =
-      if (parts.isEmpty)
-        Seq(ManifestOut(writeManifest(md, entries, snapshotId, schemaStr,
-          "data", 0), 0, entries))
-      else partitionedManifests(md, entries, parts, specs.length - 1,
-        snapshotId, schemaStr, groupSize, 0)
-    val list = writeManifestList(md, snapshotId, manifests)
-    val version = writeMetadataJson(tableDir, schemaStr, snapshotId, seq,
-      list, "replace",
+    val manifests = b.dataManifests(entries, groupSize)
+    val list = writeManifestList(b.md, b.snapshotId, manifests)
+    b.commit(manifests.head.file, list, "replace",
       summary ++ Map(
         "compacted-data-files" -> dataFiles.size.toString,
-        "added-data-files" -> entries.size.toString),
-      entries.length, entries.map(_.rows).sum, specs = specs,
-      hintBase = Some(Some((prevVer, prevMeta))))
-    Commit(version, snapshotId, seq,
-      manifests.head.file.abs,
-      list.abs, entries.length, entries.map(_.rows).sum)
+        "added-data-files" -> entries.size.toString), entries)
   }
 
   /** SORT / Z-ORDER rewrite — the clustering counterpart to
@@ -2294,28 +2063,21 @@ object IcebergMetadata {
     require(sortCols.nonEmpty, "sortRewrite needs at least one column")
     require(!zorder || (sortCols.size >= 2 && sortCols.size <= 4),
       "z-order clusters 2..4 columns")
-    val md = metaDir(tableDir)
-    val (prevVer, prevMeta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    val allStats = dataFileStats(tableDir)
+    val b = committedHead(tableDir)
+    val allStats = b.stats()
     val dataFiles = allStats.collect {
       case e if e.content == 0 => (e.path, e.seq) }
     require(allStats.forall(_.content == 0),
       "sort rewrite over a delete-bearing (MoR) table would orphan its " +
         "positional deletes: compact the segment view first")
-    val specs = specsFromMeta(prevMeta)
-    val parts = specs.last
-    val curSchemaId = prevMeta.get("current-schema-id").asInt
-    val schemaStr = prevMeta.withArray[ArrayNode]("schemas").asScala
-      .find(_.get("schema-id").asInt == curSchemaId).get.toString
-    val statIds = topLevelFieldIds(schemaStr)
+    val parts = b.specs.last
+    val statIds = topLevelFieldIds(b.schemaStr)
     // sizes from the manifests (field 104) — zero per-file stat calls
     val totalBytes = allStats.map(_.sizeBytes).sum
     val bins =
       math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val seq = prevMeta.get("last-sequence-number").asLong + 1
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
-    val outDir = TableIO(tableDir).child("data").child(s"$snapshotId-sorted")
+    val outDir =
+      TableIO(tableDir).child("data").child(s"${b.snapshotId}-sorted")
     val df = spark.read.parquet(dataFiles.map(_._1): _*)
     val entries =
       if (parts.nonEmpty) {
@@ -2329,7 +2091,7 @@ object IcebergMetadata {
         // __z column never lands in the data files). Partition values
         // recompute from the source columns; specs carry forward
         // verbatim.
-        val fields = partitionFieldsFor(prevMeta, parts)
+        val fields = partitionFieldsFor(b.meta, parts)
         val (src, clusterCols, scratch) =
           if (!zorder) (df, sortCols, Nil)
           else {
@@ -2347,10 +2109,7 @@ object IcebergMetadata {
         writePartitionedFiles(src, fields, parts, outDir.abs,
           overwrite = true, bins = bins, clusterCols = clusterCols,
           dropCols = scratch)
-        partitionedLeaves(outDir, parts).flatMap { case (tup, dir) =>
-          entriesFor(spark, dir.abs, seq, fieldIds = statIds,
-            partition = tup)
-        }
+        leafEntries(spark, outDir, parts, b.seq, statIds)
       } else {
         val clustered =
           if (zorder) {
@@ -2371,48 +2130,20 @@ object IcebergMetadata {
             df.repartitionByRange(bins, sortCols.map(col): _*)
               .sortWithinPartitions(sortCols.map(col): _*)
         clustered.write.mode("overwrite").parquet(outDir.abs)
-        entriesFor(spark, outDir.abs, seq, fieldIds = statIds)
+        entriesFor(spark, outDir.abs, b.seq, fieldIds = statIds)
       }
-    val manifests =
-      if (parts.isEmpty)
-        Seq(ManifestOut(writeManifest(md, entries, snapshotId, schemaStr,
-          "data", 0), 0, entries))
-      else partitionedManifests(md, entries, parts, specs.length - 1,
-        snapshotId, schemaStr, groupSize, 0)
-    val list = writeManifestList(md, snapshotId, manifests)
+    val manifests = b.dataManifests(entries, groupSize)
+    val list = writeManifestList(b.md, b.snapshotId, manifests)
     val sortIds =
-      if (zorder) Nil else sortCols.map(c => fieldId(schemaStr, c))
-    val version = writeMetadataJson(tableDir, schemaStr, snapshotId, seq,
-      list, "replace",
+      if (zorder) Nil else sortCols.map(c => fieldId(b.schemaStr, c))
+    b.commit(manifests.head.file, list, "replace",
       summary ++ Map(
         "rewritten-data-files" -> dataFiles.size.toString,
         "added-data-files" -> entries.size.toString,
         (if (zorder) "zorder-columns" else "sort-columns") ->
-          sortCols.mkString(",")),
-      entries.length, entries.map(_.rows).sum, sortOrder = Some(sortIds),
-      specs = specs,
-      hintBase = Some(Some((prevVer, prevMeta))))
-    Commit(version, snapshotId, seq,
-      manifests.head.file.abs,
-      list.abs, entries.length, entries.map(_.rows).sum)
+          sortCols.mkString(",")), entries, sortOrder = Some(sortIds))
   }
 
-  /** Commit `df` as a PARTITIONED first snapshot: the K5 transforms
-    * (`PartitionTransforms.parseRegex` syntax, e.g. `/{ts,day}`) drive
-    * the file layout, each data file's partition tuple lands in its
-    * manifest entry (r102, spec field-ids 1000+), the partition spec in
-    * `metadata.json`, and — the piece that matters at 100 TB — the
-    * manifest LIST rows carry per-field `field_summary` bounds over
-    * sorted partition-value groups of `groupSize`, so a planner skips
-    * whole manifests (thousands of files each) without opening them.
-    * The reference's Java writer gets the same summaries from the
-    * Iceberg library on its partitioned tables
-    * (`destination/iceberg/iceberg.go:521-545` partition_regex path).
-    *
-    * Data layout: one file per partition tuple under hive-style
-    * `__p_<name>=<value>` dirs (the `__p_` prefix keeps identity
-    * source columns IN the data files, as the spec expects — the
-    * partition tuple is derived metadata, not a dropped column). */
   /** Resolve a parsed partition-regex field list against a frame's
     * schema into spec fields (transform result type + source ids). */
   private def specFieldsFor(schema: StructType, schemaStr: String,
@@ -2440,12 +2171,6 @@ object IcebergMetadata {
       avroTypeOf(f), fieldId(schemaStr, f.column), f.transform))
   }
 
-  /** Write `df` under hive-style `__p_<name>=<value>` dirs — one file
-    * per partition tuple (at real scale the same layout comes from
-    * repartitioning on the transform columns, whatever the file count
-    * per tuple). The `__p_` prefix keeps identity source columns IN
-    * the data files; the transform's own output column is dropped so
-    * files hold exactly the source schema. */
   /** Iceberg spec conformance for the engine's OWN data-file writes:
     * timestamps are int64 MICROS. Spark's default parquet output for
     * TimestampType is INT96, which (a) is outside the Iceberg spec and
@@ -2467,6 +2192,12 @@ object IcebergMetadata {
     }
   }
 
+  /** Write `df` under hive-style `__p_<name>=<value>` dirs — one file
+    * per partition tuple (at real scale the same layout comes from
+    * repartitioning on the transform columns, whatever the file count
+    * per tuple). The `__p_` prefix keeps identity source columns IN
+    * the data files; the transform's own output column is dropped so
+    * files hold exactly the source schema. */
   private def writePartitionedFiles(df: DataFrame,
                                     fields: Seq[PartitionTransforms.PartitionField],
                                     parts: Seq[PartSpecField],
@@ -2534,10 +2265,7 @@ object IcebergMetadata {
     * default (last) spec. Transform result types re-derive from the
     * current schema exactly as [[specFieldsFor]] derived them. */
   private def specsFromMeta(meta: JsonNode): Seq[Seq[PartSpecField]] = {
-    val curId = meta.get("current-schema-id").asInt
-    val schema = meta.withArray[ArrayNode]("schemas").asScala
-      .find(_.get("schema-id").asInt == curId).get
-    val typeById = schema.withArray[ArrayNode]("fields").asScala
+    val typeById = currentSchema(meta).withArray[ArrayNode]("fields").asScala
       .map(f => f.get("id").asInt ->
         (if (f.get("type").isTextual) f.get("type").asText else "")).toMap
     val argRe = """(bucket|truncate)\[(\d+)\]""".r
@@ -2585,10 +2313,7 @@ object IcebergMetadata {
     * sources ride in the data files). */
   private def partitionFieldsFor(meta: JsonNode, parts: Seq[PartSpecField])
       : Seq[PartitionTransforms.PartitionField] = {
-    val curId = meta.get("current-schema-id").asInt
-    val schema = meta.withArray[ArrayNode]("schemas").asScala
-      .find(_.get("schema-id").asInt == curId).get
-    val nameById = schema.withArray[ArrayNode]("fields").asScala
+    val nameById = currentSchema(meta).withArray[ArrayNode]("fields").asScala
       .map(f => f.get("id").asInt -> f.get("name").asText).toMap
     parts.map(p =>
       PartitionTransforms.PartitionField(nameById(p.sourceId), p.transform))
@@ -2631,25 +2356,19 @@ object IcebergMetadata {
     * OWN spec (entry schema, tuples, field summaries intact) as
     * EXISTING entries with original snapshot ids and sequences — the
     * multi-spec invariant partition evolution relies on. */
-  private def otherSpecManifests(md: TPath, stats: Seq[DataFileStat],
-                                 specs: Seq[Seq[PartSpecField]],
-                                 snapshotId: Long, schemaStr: String,
+  private def otherSpecManifests(b: Base, stats: Seq[DataFileStat],
                                  groupSize: Int, startIndex: Int)
       : Seq[ManifestOut] = {
-    def existing(e: DataFileStat): FileEntry =
-      FileEntry(e.path, e.sizeBytes, e.recordCount, e.seq, 0, Nil,
-        e.stats, e.partition,
-        entryStatus = 0, entrySnapshotId = Some(e.addedSnapshotId))
     var idx = startIndex
     stats.groupBy(_.specId).toSeq.sortBy(_._1).flatMap { case (sid, ss) =>
-      val theirParts = specs(sid)
-      val es = ss.map(existing)
+      val theirParts = b.specs(sid)
+      val es = ss.map(_.existing)
       val out =
         if (theirParts.isEmpty)
-          Seq(ManifestOut(writeManifest(md, es, snapshotId, schemaStr,
+          Seq(ManifestOut(writeManifest(b.md, es, b.snapshotId, b.schemaStr,
             "data", idx), 0, es))
-        else partitionedManifests(md, es, theirParts, sid, snapshotId,
-          schemaStr, groupSize, idx)
+        else partitionedManifests(b.md, es, theirParts, sid, b.snapshotId,
+          b.schemaStr, groupSize, idx)
       idx += out.length
       out
     }
@@ -2675,6 +2394,18 @@ object IcebergMetadata {
           startIndex + i, parts, specId), 0, es, parts, specId)
     }
   }
+
+  /** Manifest entries at `seq` of the hive-laid-out files under `root`,
+    * each carrying its leaf's partition tuple. */
+  private def leafEntries(spark: SparkSession, root: TPath,
+                          parts: Seq[PartSpecField], seq: Long,
+                          statIds: Map[String, Int],
+                          onlyFiles: Option[Set[String]] = None)
+      : Seq[FileEntry] =
+    partitionedLeaves(root, parts).flatMap { case (tup, dir) =>
+      entriesFor(spark, dir.abs, seq, fieldIds = statIds, partition = tup,
+        onlyFiles = onlyFiles)
+    }
 
   /** Walk hive-style dirs back into (partition tuple, leaf dir). */
   private def partitionedLeaves(root: TPath, parts: Seq[PartSpecField])
@@ -2713,42 +2444,15 @@ object IcebergMetadata {
     * layout. Returns the new spec id. */
   def evolvePartitionSpec(tableDir: String,
                           partitionRegex: String): Int = withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (version, meta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
+    val b = committedHead(tableDir)
     val fields = PartitionTransforms.parseRegex(partitionRegex)
     require(fields.nonEmpty, s"no partition fields in '$partitionRegex'")
     // transform result types derive against the COMMITTED current
     // schema — field ids must reference committed columns
-    val curSchemaId = meta.get("current-schema-id").asInt
-    val schemaNode = meta.withArray[ArrayNode]("schemas").asScala
-      .find(_.get("schema-id").asInt == curSchemaId).get
-    val byName = schemaNode.withArray[ArrayNode]("fields").asScala
-      .map(f => f.get("name").asText -> (f.get("id").asInt,
-        if (f.get("type").isTextual) f.get("type").asText else "")).toMap
-    val argRe = """(bucket|truncate)\[(\d+)\]""".r
-    val parts = fields.map { f =>
-      val (srcId, srcType) = byName.getOrElse(f.column,
-        throw new IllegalArgumentException(s"no column ${f.column}"))
-      val avroType = f.transform match {
-        case "year" | "month" | "day" | "hour" => "int"
-        case argRe("bucket", _) => "int"
-        case argRe("truncate", _) =>
-          if (srcType == "string") "string" else "long"
-        case "identity" => srcType match {
-          case "int" | "long" | "string" => srcType
-          case other => throw new IllegalArgumentException(
-            s"identity partition on unsupported type $other")
-        }
-        case other =>
-          throw new IllegalArgumentException(s"unsupported transform $other")
-      }
-      PartSpecField(
-        if (f.transform == "identity") s"${f.column}_id" else f.outputName,
-        avroType, srcId, f.transform)
-    }
-    val root = meta.deepCopy[ObjectNode]()
-    val specArr = root.withArray[ArrayNode]("partition-specs")
+    val cur = currentSchema(b.meta)
+    val parts = specFieldsFor(sparkType(cur).asInstanceOf[StructType],
+      cur.toString, fields)
+    val specArr = b.meta.withArray[ArrayNode]("partition-specs")
     val newSid = specArr.size
     // v2: partition field-ids are unique ACROSS specs (external
     // readers build the common partition struct keyed on them) —
@@ -2761,7 +2465,7 @@ object IcebergMetadata {
           (f.get("transform").asText, f.get("source-id").asInt) ->
             Option(f.get("field-id")).map(_.asInt).getOrElse(1000 + i)
       }).toMap
-    var nextId = math.max(meta.path("last-partition-id").asInt(999),
+    var nextId = math.max(b.meta.path("last-partition-id").asInt(999),
       (999 +: existing.values.toSeq).max)
     val withIds = parts.map { p =>
       existing.get((p.transform, p.sourceId)) match {
@@ -2769,19 +2473,17 @@ object IcebergMetadata {
         case None => nextId += 1; p.copy(fieldId = nextId)
       }
     }
-    val spec = specArr.addObject()
-    spec.put("spec-id", newSid)
-    val fArr = spec.putArray("fields")
-    withIds.foreach { p =>
-      val fNode = fArr.addObject()
-      fNode.put("name", p.name); fNode.put("transform", p.transform)
-      fNode.put("source-id", p.sourceId); fNode.put("field-id", p.fieldId)
+    b.write() { root =>
+      val fArr = root.withArray[ArrayNode]("partition-specs").addObject()
+        .put("spec-id", newSid).putArray("fields")
+      withIds.foreach { p =>
+        val fNode = fArr.addObject()
+        fNode.put("name", p.name); fNode.put("transform", p.transform)
+        fNode.put("source-id", p.sourceId); fNode.put("field-id", p.fieldId)
+      }
+      root.put("default-spec-id", newSid)
+      root.put("last-partition-id", nextId)
     }
-    root.put("default-spec-id", newSid)
-    root.put("last-partition-id", nextId)
-    appendMetadataLog(root, md, version, meta.get("last-updated-ms").asLong)
-    root.put("last-updated-ms", System.currentTimeMillis())
-    writeVersionFiles(md, root, version + 1): Unit
     newSid
   }
 
@@ -2796,25 +2498,10 @@ object IcebergMetadata {
                         adds: Seq[StructField] = Nil,
                         widens: Seq[(String, String)] = Nil): Int =
       withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (version, meta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    val curId = meta.get("current-schema-id").asInt
-    val schemas = meta.withArray[ArrayNode]("schemas").asScala
-    val cur = schemas.find(_.get("schema-id").asInt == curId).get
-    val evolved = cur.deepCopy[ObjectNode]()
+    val b = committedHead(tableDir)
+    val evolved = currentSchema(b.meta).deepCopy[ObjectNode]()
     val fields = evolved.withArray[ArrayNode]("fields")
-    var lastCol = meta.get("last-column-id").asInt
-    def promotable(from: String, to: String): Boolean =
-      (from == "int" && to == "long") ||
-        (from == "float" && to == "double") || {
-          val dec = """decimal\((\d+),\s*(\d+)\)""".r
-          (from, to) match {
-            case (dec(p1, s1), dec(p2, s2)) =>
-              s1 == s2 && p2.toInt >= p1.toInt
-            case _ => false
-          }
-        }
+    var lastCol = b.meta.get("last-column-id").asInt
     widens.foreach { case (name, toType) =>
       val f = fields.asScala.find(_.get("name").asText == name)
         .getOrElse(throw new IllegalArgumentException(
@@ -2836,27 +2523,17 @@ object IcebergMetadata {
       // ADD COLUMN is always nullable in Iceberg (existing rows have
       // no value for it)
       node.put("required", false)
-      def renumber(x: JsonNode): Unit = x match {
-        case o: ObjectNode =>
-          Seq("id", "element-id", "key-id", "value-id").foreach { k =>
-            if (o.has(k)) { lastCol += 1; o.put(k, lastCol): Unit }
-          }
-          o.fields().asScala.foreach(e => renumber(e.getValue))
-        case a: ArrayNode => a.asScala.foreach(renumber)
-        case _ => ()
-      }
-      renumber(node)
+      lastCol = renumber(node, lastCol)
       fields.add(node): Unit
     }
-    val newId = schemas.map(_.get("schema-id").asInt).max + 1
+    val newId = b.meta.withArray[ArrayNode]("schemas").asScala
+      .map(_.get("schema-id").asInt).max + 1
     evolved.put("schema-id", newId)
-    val root = meta.deepCopy[ObjectNode]()
-    root.withArray[ArrayNode]("schemas").add(evolved)
-    root.put("current-schema-id", newId)
-    root.put("last-column-id", lastCol)
-    appendMetadataLog(root, md, version, meta.get("last-updated-ms").asLong)
-    root.put("last-updated-ms", System.currentTimeMillis())
-    writeVersionFiles(md, root, version + 1): Unit
+    b.write() { root =>
+      root.withArray[ArrayNode]("schemas").add(evolved)
+      root.put("current-schema-id", newId)
+      root.put("last-column-id", lastCol)
+    }
     newId
   }
 
@@ -2880,83 +2557,58 @@ object IcebergMetadata {
 
   /** ALTER TABLE SET/UNSET TBLPROPERTIES: a METADATA-ONLY version
     * bump (no snapshot, files untouched) through the same commit
-    * retry the schema evolution uses — [[writeMetadataJson]] then
-    * carries the map forward on every subsequent commit. */
+    * retry the schema evolution uses — every later version carries
+    * the map forward. */
   def setTableProperties(tableDir: String, set: Map[String, String],
                          unset: Seq[String] = Nil): Unit =
       withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (version, meta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    val root = meta.deepCopy[ObjectNode]()
-    val props =
-      if (root.has("properties"))
-        root.get("properties").asInstanceOf[ObjectNode]
-      else root.putObject("properties")
-    set.foreach { case (k, v) => props.put(k, v): Unit }
-    unset.foreach(k => props.remove(k): Unit)
-    appendMetadataLog(root, md, version, meta.get("last-updated-ms").asLong)
-    root.put("last-updated-ms", System.currentTimeMillis())
-    writeVersionFiles(md, root, version + 1): Unit
+    committedHead(tableDir).write() { root =>
+      val props = objectAt(root, "properties")
+      set.foreach { case (k, v) => props.put(k, v): Unit }
+      unset.foreach(k => props.remove(k): Unit)
+    }: Unit
   }
 
+  /** Commit `df` as a PARTITIONED first snapshot: the K5 transforms
+    * (`PartitionTransforms.parseRegex` syntax, e.g. `/{ts,day}`) drive
+    * the file layout, each data file's partition tuple lands in its
+    * manifest entry (r102, spec field-ids 1000+), the partition spec in
+    * `metadata.json`, and — the piece that matters at 100 TB — the
+    * manifest LIST rows carry per-field `field_summary` bounds over
+    * sorted partition-value groups of `groupSize`, so a planner skips
+    * whole manifests (thousands of files each) without opening them.
+    * The reference's Java writer gets the same summaries from the
+    * Iceberg library on its partitioned tables
+    * (`destination/iceberg/iceberg.go:521-545` partition_regex path).
+    *
+    * Data layout: one file per partition tuple under hive-style
+    * `__p_<name>=<value>` dirs (the `__p_` prefix keeps identity
+    * source columns IN the data files, as the spec expects — the
+    * partition tuple is derived metadata, not a dropped column). */
   def publishPartitioned(spark: SparkSession, tableDir: String,
                          df: DataFrame, partitionRegex: String,
                          groupSize: Int = 8,
                          summary: Map[String, String] = Map.empty): Commit = withCommitRetry(tableDir) {
-    import PartitionTransforms.parseRegex
-    val md = metaDir(tableDir)
-    md.mkdirs()
-    require(currentMetadata(tableDir).isEmpty,
+    // the claim at v1 makes a commit racing the long partitioned write
+    // surface as CommitConflictException instead of being built over
+    val b = headOf(tableDir)
+    b.md.mkdirs()
+    require(b.head.isEmpty,
       s"publishPartitioned writes the FIRST snapshot; $tableDir has history")
-    val fields = parseRegex(partitionRegex)
+    val fields = PartitionTransforms.parseRegex(partitionRegex)
     require(fields.nonEmpty, s"no partition fields in '$partitionRegex'")
-    // the base read this publish builds on (None — asserted empty
-    // above); passed as hintBase so a commit racing the long
-    // partitioned write surfaces as CommitConflictException at claim
-    // time instead of being silently built over
-    val hintBase: Option[(Int, JsonNode)] = None
     val schemaStr = schemaJson(df.schema)
     val parts = specFieldsFor(df.schema, schemaStr, fields)
     val dataRoot = TableIO(tableDir).child("data")
     writePartitionedFiles(df, fields, parts, dataRoot.abs)
-    val seq = 1L
-    val statIds = topLevelFieldIds(schemaStr)
-    val tuples = partitionedLeaves(dataRoot, parts)
-    require(tuples.nonEmpty, s"no partitioned files under $dataRoot")
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
-    // sorted tuples → groups of `groupSize` → one manifest per group:
-    // contiguous partition ranges per manifest are what make the
-    // field summaries selective (random assignment would give every
-    // manifest the full range and nothing would ever prune)
-    implicit val anyOrd: Ordering[Seq[Any]] = (a, b) => {
-      val cmp = a.zip(b).iterator.map {
-        case (null, null) => 0
-        case (null, _) => -1
-        case (_, null) => 1
-        case (x: Int, y: Int) => x.compare(y)
-        case (x: Long, y: Long) => x.compare(y)
-        case (x, y) => x.toString.compare(y.toString)
-      }.find(_ != 0)
-      cmp.getOrElse(0)
-    }
-    val groups = tuples.sortBy(_._1).grouped(math.max(1, groupSize)).toSeq
-    val manifests = groups.zipWithIndex.map { case (grp, i) =>
-      val entries = grp.flatMap { case (tup, dir) =>
-        entriesFor(spark, dir.abs, seq, fieldIds = statIds,
-          partition = tup)
-      }
-      ManifestOut(writeManifest(md, entries, snapshotId, schemaStr,
-        "data", i, parts), 0, entries, parts)
-    }
-    val allEntries = manifests.flatMap(_.entries)
-    val list = writeManifestList(md, snapshotId, manifests)
-    val version = writeMetadataJson(tableDir, schemaStr, snapshotId, seq,
-      list, "append", summary, allEntries.length,
-      allEntries.map(_.rows).sum, specs = Seq(parts),
-      hintBase = Some(hintBase))
-    Commit(version, snapshotId, seq, manifests.head.file.abs,
-      list.abs, allEntries.length, allEntries.map(_.rows).sum)
+    val entries = leafEntries(spark, dataRoot, parts, b.seq,
+      topLevelFieldIds(schemaStr))
+    require(entries.nonEmpty, s"no partitioned files under $dataRoot")
+    val manifests = partitionedManifests(b.md, entries, parts, 0,
+      b.snapshotId, schemaStr, groupSize, 0)
+    val list = writeManifestList(b.md, b.snapshotId, manifests)
+    b.commit(manifests.head.file, list, "append", summary, entries,
+      schema = schemaStr, specs = Some(Seq(parts)))
   }
 
   /** One manifest-list row of the current snapshot, with its decoded
@@ -3102,26 +2754,21 @@ object IcebergMetadata {
                  summary: Map[String, String] = Map.empty,
                  partitionRegex: Option[String] = None): Commit = withCommitRetry(tableDir) { withMicrosTimestamps(spark) {
     import graft.operators.SystemColumns
-    val md = metaDir(tableDir)
-    md.mkdirs()
-    // this publish's OWN base read, passed to the claim as hintBase: a
-    // commit landing during the (long) segment rewrite below then
-    // surfaces as CommitConflictException and the retry rebuilds on
-    // the fresh base — without it the claim would silently build the
-    // racing commit over (its manifest list is rebuilt whole here, so
-    // today that is benign, but only by accident of this code shape)
-    val hintBase = currentMetadata(tableDir)
+    // the base is read once: a commit landing during the (long) segment
+    // rewrite below surfaces as CommitConflictException at the claim
+    // and the retry rebuilds on the fresh base
+    val b = headOf(tableDir)
+    b.md.mkdirs()
     // sequence numbers continue the parent's, so they never decrease
     // across snapshots (a compaction between two publishes would
     // otherwise restart them): new files number above the parent's
     // last-sequence-number, and a base file the parent already lists
     // keeps the data sequence number it was added with, as any carried
     // file does. Only the order is read back, so readMoR is unchanged.
-    val seqBase = hintBase.fold(0L)(_._2.get("last-sequence-number").asLong)
-    val parentSeqs: Map[String, Long] = hintBase
-      .map(_._2.path("current-snapshot-id").asLong(-1L)).filter(_ >= 0L)
-      .fold(Map.empty[String, Long])(id => dataFileStats(tableDir, Some(id))
-        .collect { case e if e.content == 0 => e.path -> e.seq }.toMap)
+    val seqBase = b.seq - 1
+    val parentSeqs: Map[String, Long] = b.head.fold(Map.empty[String, Long])(
+      _ => b.stats().collect { case e if e.content == 0 => e.path -> e.seq }
+        .toMap)
     val keyCol = SystemColumns.OlakeId
     val viewSchema = DeltaSegments.read(spark, tablePath).schema
     // the upsert key doubles as the schema's identifier-field-ids (row
@@ -3129,7 +2776,6 @@ object IcebergMetadata {
     // reader knows how to interpret the equality deletes
     val schemaStr = schemaJson(viewSchema, identifierFields = Seq(keyCol))
     val eqIds = Seq(fieldId(schemaStr, keyCol))
-    val snapshotId = java.util.UUID.randomUUID().getMostSignificantBits.abs
     val dataCols = viewSchema.fieldNames.toSeq
     // partitioned tables are MULTI-SPEC: the base published in place
     // stays at spec 0 (unpartitioned — its layout predates the spec,
@@ -3153,10 +2799,7 @@ object IcebergMetadata {
     val baseEntries = (
       if (!base.exists) Nil
       else if (baseIsPartitioned)
-        partitionedLeaves(base, parts).flatMap { case (tup, dir) =>
-          entriesFor(spark, dir.abs, seq = seqBase + 1, fieldIds = statIds,
-            partition = tup)
-        }
+        leafEntries(spark, base, parts, seqBase + 1, statIds)
       else entriesFor(spark, base.abs, seq = seqBase + 1, fieldIds = statIds)
     ).map(e => parentSeqs.get(e.path).fold(e)(s => e.copy(seq = s)))
 
@@ -3168,7 +2811,7 @@ object IcebergMetadata {
     // valid, and a reader concurrent with a re-publish never sees its
     // files vanish. Old snapshots are expired explicitly
     // (`expireSnapshots`), never silently orphaned.
-    val derived = TableIO(tableDir).child("data").child(snapshotId.toString)
+    val derived = TableIO(tableDir).child("data").child(b.snapshotId.toString)
     derived.mkdirs()
     val segResults = segs.zipWithIndex.map { case (seg, k) =>
       val seq = seqBase + k + 2L
@@ -3271,10 +2914,10 @@ object IcebergMetadata {
       (seqBase + 1)).max
     val manifests =
       if (parts.isEmpty)
-        Seq(ManifestOut(writeManifest(md, dataEntries, snapshotId,
+        Seq(ManifestOut(writeManifest(b.md, dataEntries, b.snapshotId,
           schemaStr, "data", 0), 0, dataEntries)) ++
         (if (deleteEntries.nonEmpty)
-          Seq(ManifestOut(writeManifest(md, deleteEntries, snapshotId,
+          Seq(ManifestOut(writeManifest(b.md, deleteEntries, b.snapshotId,
             schemaStr, "deletes", 1), 1, deleteEntries))
         else Nil)
       else {
@@ -3286,32 +2929,27 @@ object IcebergMetadata {
         val baseM =
           if (baseEntries.isEmpty) Nil
           else if (baseIsPartitioned)
-            Seq(ManifestOut(writeManifest(md, baseEntries, snapshotId,
+            Seq(ManifestOut(writeManifest(b.md, baseEntries, b.snapshotId,
               schemaStr, "data", 0, parts, specId = 1), 0, baseEntries,
               parts, specId = 1))
-          else Seq(ManifestOut(writeManifest(md, baseEntries, snapshotId,
+          else Seq(ManifestOut(writeManifest(b.md, baseEntries, b.snapshotId,
             schemaStr, "data", 0), 0, baseEntries))
         val segM = segDataBySeg.zipWithIndex
           .filter(_._1.nonEmpty).map { case (es, i) =>
-            ManifestOut(writeManifest(md, es, snapshotId, schemaStr,
+            ManifestOut(writeManifest(b.md, es, b.snapshotId, schemaStr,
               "data", i + 1, parts, specId = 1), 0, es, parts, specId = 1)
           }
         val delM =
           if (deleteEntries.isEmpty) Nil
-          else Seq(ManifestOut(writeManifest(md, deleteEntries, snapshotId,
+          else Seq(ManifestOut(writeManifest(b.md, deleteEntries, b.snapshotId,
             schemaStr, "deletes", segDataBySeg.length + 1), 1,
             deleteEntries))
         baseM ++ segM ++ delM
       }
-    val list = writeManifestList(md, snapshotId, manifests)
-    val version = writeMetadataJson(tableDir, schemaStr, snapshotId,
-      seqMax, list, "overwrite", summary,
-      dataEntries.length, dataEntries.map(_.rows).sum,
-      specs = if (parts.isEmpty) Seq(Nil) else Seq(Nil, parts),
-      hintBase = Some(hintBase))
-    Commit(version, snapshotId, seqMax, manifests.head.file.abs,
-      list.abs, dataEntries.length,
-      dataEntries.map(_.rows).sum)
+    val list = writeManifestList(b.md, b.snapshotId, manifests)
+    b.commit(manifests.head.file, list, "overwrite", summary, dataEntries,
+      schema = schemaStr, sequence = seqMax,
+      specs = Some(if (parts.isEmpty) Seq(Nil) else Seq(Nil, parts)))
   } }
 
   /** Merge-on-read READ from the manifests alone — the v2 algebra an
@@ -3622,24 +3260,19 @@ object IcebergMetadata {
     * number of files removed; writes nothing when there is nothing to
     * drop. */
   def expireMetadataVersions(tableDir: String, keepLast: Int = 5): Int = withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (version, meta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
+    val b = committedHead(tableDir)
     val floor = math.max(1, keepLast)
     // guard on the COMMITTED predecessor count so a steady-state
     // service pass is a no-op (no version written), not a
     // version-per-pass treadmill
-    if (Option(meta.get("metadata-log")).map(_.size).getOrElse(0) <= floor)
-      return 0
-    val root = meta.deepCopy[ObjectNode]()
-    appendMetadataLog(root, md, version, meta.get("last-updated-ms").asLong)
-    val log = root.withArray[ArrayNode]("metadata-log").asScala.toSeq
-    val (dropped, kept) = log.splitAt(log.size - floor)
-    val newLog = mapper.createArrayNode()
-    kept.foreach(newLog.add(_): Unit)
-    root.set[ObjectNode]("metadata-log", newLog)
-    root.put("last-updated-ms", System.currentTimeMillis())
-    writeVersionFiles(md, root, version + 1)
+    val log = b.meta.withArray[ArrayNode]("metadata-log").asScala.toSeq
+    if (log.size <= floor) return 0
+    // the write logs the head itself, so floor-1 entries stay before it
+    val (dropped, kept) = log.splitAt(log.size - floor + 1)
+    b.write() { root =>
+      val newLog = root.putArray("metadata-log")
+      kept.foreach(newLog.add(_): Unit)
+    }
     // physical deletes only AFTER the trimmed version is live
     var n = 0
     dropped.foreach { e =>
@@ -3658,37 +3291,25 @@ object IcebergMetadata {
              refType: String = "tag"): Int = withCommitRetry(tableDir) {
     require(name != "main", "main moves via commit/rollback")
     require(refType == "tag" || refType == "branch", s"bad type $refType")
-    val md = metaDir(tableDir)
-    val (version, meta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    require(meta.withArray[ArrayNode]("snapshots").asScala
+    val b = committedHead(tableDir)
+    require(b.meta.withArray[ArrayNode]("snapshots").asScala
       .exists(_.get("snapshot-id").asLong == snapshotId),
       s"snapshot $snapshotId not in table history")
-    val root = meta.deepCopy[ObjectNode]()
-    val refs =
-      if (root.has("refs")) root.get("refs").asInstanceOf[ObjectNode]
-      else root.putObject("refs")
-    val r = refs.putObject(name)
-    r.put("snapshot-id", snapshotId); r.put("type", refType)
-    appendMetadataLog(root, md, version, meta.get("last-updated-ms").asLong)
-    root.put("last-updated-ms", System.currentTimeMillis())
-    writeVersionFiles(md, root, version + 1)
+    b.write() { root =>
+      val r = objectAt(root, "refs").putObject(name)
+      r.put("snapshot-id", snapshotId); r.put("type", refType)
+    }
   }
 
   /** Drop a named ref (the snapshot becomes expirable again). */
   def dropRef(tableDir: String, name: String): Int = withCommitRetry(tableDir) {
     require(name != "main", "main cannot be dropped")
-    val md = metaDir(tableDir)
-    val (version, meta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    val root = meta.deepCopy[ObjectNode]()
-    root.path("refs") match {
-      case o: ObjectNode if o.has(name) => o.remove(name): Unit
-      case _ => throw new IllegalArgumentException(s"no ref $name")
+    committedHead(tableDir).write() { root =>
+      root.path("refs") match {
+        case o: ObjectNode if o.has(name) => o.remove(name): Unit
+        case _ => throw new IllegalArgumentException(s"no ref $name")
+      }
     }
-    appendMetadataLog(root, md, version, meta.get("last-updated-ms").asLong)
-    root.put("last-updated-ms", System.currentTimeMillis())
-    writeVersionFiles(md, root, version + 1)
   }
 
   /** Resolve a ref name to its snapshot id (time travel by name:
@@ -3699,30 +3320,15 @@ object IcebergMetadata {
     Option(meta.path("refs").get(name)).map(_.get("snapshot-id").asLong)
   }
 
-  /** Append the predecessor version to a deep-copied root's
-    * `metadata-log` (commit writes do this inline; every other
-    * mutation — refs, rollback, snapshot removal — must too, or the
-    * log skips versions). */
-  private def appendMetadataLog(root: ObjectNode, md: TPath,
-                                prevVersion: Int,
+  /** Append the predecessor's metadata file to a new root's
+    * `metadata-log` (spec §Table Metadata: every previous metadata file
+    * with its timestamp — what catalogs walk for metadata time travel
+    * and stale-file cleanup, and what [[chainHead]] links versions by). */
+  private def appendMetadataLog(root: ObjectNode, prevFile: String,
                                 prevUpdatedMs: Long): Unit = {
-    val log =
-      if (root.has("metadata-log")) root.withArray[ArrayNode]("metadata-log")
-      else root.putArray("metadata-log")
-    val e = log.addObject()
-    e.put("metadata-file", md.child(s"v$prevVersion.metadata.json").abs)
+    val e = root.withArray[ArrayNode]("metadata-log").addObject()
+    e.put("metadata-file", prevFile)
     e.put("timestamp-ms", prevUpdatedMs): Unit
-  }
-
-  /** Write vN.metadata.json + flip the version hint (the shared atomic
-    * tail of every metadata mutation). The version file is CLAIMED
-    * with an exclusive create — the filesystem-table commit CAS. */
-  private def writeVersionFiles(md: TPath, root: ObjectNode,
-                                nv: Int): Int = {
-    val claimed = claimVersion(md, nv - 1,
-      mapper.writerWithDefaultPrettyPrinter.writeValueAsString(root))
-    flipHint(md, claimed)
-    claimed
   }
 
   /** Thrown when a concurrent committer claimed the next metadata
@@ -3865,12 +3471,9 @@ object IcebergMetadata {
     * `remove-snapshots` update action; the current snapshot is always
     * retained). Returns how many were dropped. */
   def removeSnapshotIds(tableDir: String, ids: Set[Long]): Int = withCommitRetry(tableDir) {
-    val md = metaDir(tableDir)
-    val (version, meta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    val root = meta.deepCopy[ObjectNode]()
-    val snaps = root.withArray[ArrayNode]("snapshots").asScala.toSeq
-    val currentId = root.get("current-snapshot-id").asLong
+    val b = committedHead(tableDir)
+    val snaps = b.meta.withArray[ArrayNode]("snapshots").asScala.toSeq
+    val currentId = b.meta.get("current-snapshot-id").asLong
     val (dropped, kept) = snaps.partition(s =>
       ids.contains(s.get("snapshot-id").asLong) &&
         s.get("snapshot-id").asLong != currentId)
@@ -3881,29 +3484,22 @@ object IcebergMetadata {
       readAvro(TableIO(s.get("manifest-list").asText))
         .map(_.get("manifest_path").toString)).toSet
 
-    val newSnaps = mapper.createArrayNode()
-    kept.foreach(newSnaps.add(_): Unit)
-    root.set[ObjectNode]("snapshots", newSnaps)
-    // refs pointing at removed snapshots would dangle — drop them
-    // (spec: cleaning refs is part of snapshot removal)
     val droppedIds = dropped.map(_.get("snapshot-id").asLong).toSet
-    root.path("refs") match {
-      case o: ObjectNode =>
-        o.fields().asScala
-          .filter(e => droppedIds.contains(
-            e.getValue.get("snapshot-id").asLong))
-          .map(_.getKey).toList.foreach(o.remove(_): Unit)
-      case _ => ()
+    b.write() { root =>
+      val newSnaps = root.putArray("snapshots")
+      kept.foreach(newSnaps.add(_): Unit)
+      // refs pointing at removed snapshots would dangle — drop them
+      // (spec: cleaning refs is part of snapshot removal)
+      val refs = objectAt(root, "refs")
+      refs.fields().asScala
+        .filter(e => droppedIds.contains(
+          e.getValue.get("snapshot-id").asLong))
+        .map(_.getKey).toList.foreach(refs.remove(_): Unit)
+      val newLog = root.putArray("snapshot-log")
+      b.meta.withArray[ArrayNode]("snapshot-log").asScala
+        .filter(e => keptIds.contains(e.get("snapshot-id").asLong))
+        .foreach(newLog.add(_): Unit)
     }
-    val newLog = mapper.createArrayNode()
-    meta.withArray[ArrayNode]("snapshot-log").asScala
-      .filter(e => keptIds.contains(e.get("snapshot-id").asLong))
-      .foreach(newLog.add(_): Unit)
-    root.set[ObjectNode]("snapshot-log", newLog)
-    appendMetadataLog(root, md, version, meta.get("last-updated-ms").asLong)
-    root.put("last-updated-ms", System.currentTimeMillis())
-    val nv = version + 1
-    writeVersionFiles(md, root, nv)
 
     // physical cleanup only AFTER the trimmed metadata is live
     dropped.foreach { s =>
@@ -3920,16 +3516,6 @@ object IcebergMetadata {
     dropped.length
   }
 
-  /** Remove ORPHAN files under `tableDir/data` — the complement of
-    * [[expireSnapshots]]: a publish that crashed between writing its
-    * parquet and committing its metadata leaves data files no
-    * snapshot references (the reference's Java writer inherits the
-    * same hazard and leans on Iceberg's `remove_orphan_files`). Walks
-    * every snapshot in the CURRENT metadata (data + delete files),
-    * deletes unreferenced parquet older than `minAgeMs` (the grace
-    * window that protects an in-flight publish, same rule as the
-    * Iceberg procedure), and prunes emptied snapshot dirs. Returns the
-    * number of files deleted. */
   /** Orphan DETECTION alone — the `--dry-run` an operator runs before
     * trusting a sweep on a production table: the same referenced-set
     * walk as [[removeOrphans]], nothing deleted. */
@@ -3958,6 +3544,16 @@ object IcebergMetadata {
     }
   }
 
+  /** Remove ORPHAN files under `tableDir/data` — the complement of
+    * [[expireSnapshots]]: a publish that crashed between writing its
+    * parquet and committing its metadata leaves data files no
+    * snapshot references (the reference's Java writer inherits the
+    * same hazard and leans on Iceberg's `remove_orphan_files`). Walks
+    * every snapshot in the CURRENT metadata (data + delete files),
+    * deletes unreferenced parquet older than `minAgeMs` (the grace
+    * window that protects an in-flight publish, same rule as the
+    * Iceberg procedure), and prunes emptied snapshot dirs. Returns the
+    * number of files deleted. */
   def removeOrphans(tableDir: String, minAgeMs: Long = 0L): Int = {
     // no committed metadata = possibly a FIRST publish in flight
     // (publishPartitioned writes data/ before v1.metadata.json):
@@ -4058,16 +3654,21 @@ object IcebergMetadata {
     * engine builds before deciding which files to open. */
   def dataFileStats(tableDir: String,
                     asOfSnapshotId: Option[Long] = None): Seq[DataFileStat] = {
-    val (_, meta) = currentMetadata(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version at $tableDir"))
-    val snapId = asOfSnapshotId.getOrElse(
-      meta.get("current-snapshot-id").asLong)
-    val snap = meta.withArray[ArrayNode]("snapshots").asScala
+    val b = committedHead(tableDir)
+    asOfSnapshotId.fold(b.stats())(b.stats(_))
+  }
+
+  /** The snapshot node `snapId` of a table's metadata. */
+  private def snapshotNode(meta: JsonNode, snapId: Long,
+                           tableDir: String): JsonNode =
+    meta.withArray[ArrayNode]("snapshots").asScala
       .find(_.get("snapshot-id").asLong == snapId).getOrElse(
         throw new IllegalArgumentException(
           s"snapshot $snapId not in table history at $tableDir"))
-    val listFile = TableIO(snap.get("manifest-list").asText)
-    readAvro(listFile).flatMap { mf =>
+
+  /** Live manifest entries of a snapshot node. */
+  private def snapshotStats(snap: JsonNode): Seq[DataFileStat] =
+    readAvro(TableIO(snap.get("manifest-list").asText)).flatMap { mf =>
       val (rows, manifestSpecId) =
         readManifestRows(TableIO(mf.get("manifest_path").toString))
       rows.collect {
@@ -4075,7 +3676,6 @@ object IcebergMetadata {
           entryToStat(e, manifestSpecId)
       }
     }
-  }
 
   private def avroLongMap(df: GenericRecord,
                           field: String): Map[Int, Long] =
@@ -4126,9 +3726,6 @@ object IcebergMetadata {
           .asScala.map(_.intValue).toSeq).getOrElse(Nil))
   }
 
-  /** Live (path, sequence) data entries and (path, sequence, content)
-    * delete entries — content 1 = positional, 2 = equality — of a
-    * snapshot (current unless `asOfSnapshotId` time-travels). */
   /** Live DATA-file paths of the current snapshot of the metadata file
     * at `metadataJsonPath` — the CATALOG-POINTER read path: JDBC and
     * REST catalogs address a table by metadata location, not by the
@@ -4150,6 +3747,9 @@ object IcebergMetadata {
     }
   }
 
+  /** Live (path, sequence) data entries and (path, sequence, content)
+    * delete entries — content 1 = positional, 2 = equality — of a
+    * snapshot (current unless `asOfSnapshotId` time-travels). */
   def manifestEntries(tableDir: String,
                       asOfSnapshotId: Option[Long] = None)
       : (Seq[(String, Long)], Seq[(String, Long, Int)]) = {
@@ -4158,7 +3758,6 @@ object IcebergMetadata {
      all.collect { case e if e.content != 0 => (e.path, e.seq, e.content) })
   }
 
-  /** Field id of a top-level column in the CURRENT committed schema. */
   /** Field ids of every TOP-LEVEL column of the current schema — ONE
     * metadata read (the per-plan streaming pushdown path must not pay
     * a version-hint + metadata.json read per column per microbatch). */
@@ -4172,6 +3771,7 @@ object IcebergMetadata {
       .map(f => f.get("name").asText -> f.get("id").asInt).toMap
   }
 
+  /** Field id of a top-level column in the CURRENT committed schema. */
   def currentFieldId(tableDir: String, name: String): Int = {
     val (_, meta) = currentMetadata(tableDir).getOrElse(
       throw new IllegalStateException(s"no committed version at $tableDir"))

@@ -58,6 +58,32 @@ class CdcSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(del.head.typeOids == Seq(20, 25))
   }
 
+  test("pgoutput: truncated, length-inflated or unknown-relation messages raise DecodeError at their offset") {
+    val dec = new PgOutput.StreamDecoder
+    dec.decode(PgOutput.encodeRelation(rel), 0L)
+    val ins = PgOutput.encodeInsert(7, Seq("12", "hello"))
+    assert(dec.decode(ins, 1L).toSeq.head.values == Seq("12", "hello"))
+    for (n <- 0 until ins.length) {
+      val e = intercept[PgOutput.DecodeError](dec.decode(ins.take(n), 1L))
+      assert(e.offset >= 0 && e.offset <= n, s"cut at $n: $e")
+    }
+    // 'I', relation id, 'N', column count, kind 't': the first value's
+    // Int32 length — inflated past the message, then negative
+    val lenAt = 1 + 4 + 1 + 2 + 1
+    for (bad <- Seq(Int.MaxValue, 100, -1)) {
+      val msg = ins.clone()
+      java.nio.ByteBuffer.wrap(msg).putInt(lenAt, bad)
+      val e = intercept[PgOutput.DecodeError](dec.decode(msg, 2L))
+      assert(e.offset == lenAt, s"length $bad: $e")
+    }
+    val unknown = intercept[PgOutput.DecodeError](
+      dec.decode(PgOutput.encodeInsert(8, Seq("1", "x")), 3L))
+    assert(unknown.offset == 1 && unknown.reason.contains("relation id 8"))
+    val noTuple = intercept[PgOutput.DecodeError](
+      dec.decode(PgOutput.encodeDelete(7, Seq("1", "x")).updated(5, 'X'.toByte), 4L))
+    assert(noTuple.offset == 5)
+  }
+
   test("pgoutput: XLogData unframe extracts walStart; keepalive → None") {
     val body = PgOutput.encodeBegin(0L, 1)
     val frame = java.nio.ByteBuffer.allocate(25 + body.length)

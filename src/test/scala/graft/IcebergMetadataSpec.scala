@@ -1093,6 +1093,99 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(keyField.get("id").asInt == ids.get(0).asInt)
     assert(keyField.get("required").asBoolean,
       "identifier fields must be required (spec §Schemas)")
+    // republishing the unchanged data schema keeps the current schema,
+    // identifier-field-ids included, and appends no schema
+    for (n <- 2 to 3) {
+      IcebergMetadata.publishMoR(spark, ice, table)
+      val (_, m) = IcebergMetadata.currentMetadata(ice).get
+      assert(m.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("schemas").size == 1,
+        s"publish $n appended a schema for an unchanged data schema")
+      assert(IcebergMetadata.identifierColumns(ice) ==
+          Seq(SystemColumns.OlakeId -> ids.get(0).asInt),
+        s"publish $n dropped the identifier-field-ids")
+    }
+  }
+
+  test("every snapshot commit carries tags, properties, the sort order and identifier-field-ids forward") {
+    import graft.operators.SystemColumns.{OlakeId, OpType, CdcTimestamp}
+    import org.apache.spark.sql.functions._
+    import scala.jdk.CollectionConverters._
+    val table = Files.createTempDirectory("graft_carry_t").toString
+    val ice = Files.createTempDirectory("graft_carry_i").toString
+    val data = Files.createTempDirectory("graft_carry_d").toString
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(
+      col("id").cast("string").as(OlakeId), col("id").as("v"))
+    rows(0, 50).write.parquet(s"$table/base")
+    IcebergMetadata.publishMoR(spark, ice, table)
+    val keyId = IcebergMetadata.identifierColumns(ice)
+    assert(keyId.map(_._1) == Seq(OlakeId))
+    IcebergMetadata.sortRewrite(spark, ice, targetBytes = 1L << 20,
+      sortCols = Seq("v"))
+    val (_, sorted) = IcebergMetadata.currentMetadata(ice).get
+    val sortId = sorted.get("default-sort-order-id").asInt
+    assert(sortId != 0)
+    val tagged = sorted.get("current-snapshot-id").asLong
+    IcebergMetadata.setRef(ice, "trained-run", tagged)
+    IcebergMetadata.setTableProperties(ice, Map("owner" -> "ingest"))
+
+    def counts = {
+      val (_, m) = IcebergMetadata.currentMetadata(ice).get
+      (m.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("metadata-log").size,
+        m.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots").size)
+    }
+    def carried(op: String)(commit: => Unit): Unit = {
+      val (logs, snaps) = counts
+      commit
+      val (_, m) = IcebergMetadata.currentMetadata(ice).get
+      assert(counts == (logs + 1, snaps + 1),
+        s"$op: metadata-log/snapshots ${(logs, snaps)} -> $counts")
+      assert(IcebergMetadata.refSnapshotId(ice, "trained-run") ==
+        Some(tagged), s"$op dropped the tag")
+      assert(IcebergMetadata.tableProperties(ice).get("owner") ==
+        Some("ingest"), s"$op dropped the property")
+      assert(m.get("default-sort-order-id").asInt == sortId &&
+        m.get("sort-orders").elements.asScala
+          .exists(_.get("order-id").asInt == sortId),
+        s"$op dropped the sort order")
+      assert(IcebergMetadata.identifierColumns(ice) == keyId,
+        s"$op dropped the identifier-field-ids")
+    }
+
+    DeltaSegments.writeSegment(rows(0, 5).withColumn(OpType, lit("u"))
+      .withColumn(CdcTimestamp, current_timestamp()), table, 1L)
+    carried("publishMoR 1")(IcebergMetadata.publishMoR(spark, ice, table))
+    carried("publishMoR 2")(IcebergMetadata.publishMoR(spark, ice, table))
+    rows(100, 110).write.parquet(s"$data/commit")
+    carried("commit")(IcebergMetadata.commit(spark, ice, s"$data/commit"))
+    rows(110, 120).write.parquet(s"$data/append")
+    carried("appendCommit")(
+      IcebergMetadata.appendCommit(spark, ice, s"$data/append"))
+    rows(120, 130).write.parquet(s"$data/branch")
+    var staged = 0L
+    carried("commitToBranch") {
+      staged = IcebergMetadata.commitToBranch(spark, ice, s"$data/branch",
+        "audit").snapshotId
+    }
+    carried("cherrypickSnapshot")(
+      IcebergMetadata.cherrypickSnapshot(ice, staged))
+    carried("rewriteManifests")(IcebergMetadata.rewriteManifests(spark, ice))
+    carried("truncateCommit")(IcebergMetadata.truncateCommit(spark, ice))
+  }
+
+  test("commitAgainst: metadata-log names the catalog-staged file the version was built on") {
+    val tmp = Files.createTempDirectory("graft_stagelog").toString
+    spark.range(5).write.parquet(s"$tmp/d1")
+    spark.range(5, 9).write.parquet(s"$tmp/d2")
+    val c1 = IcebergMetadata.commitAgainst(spark, s"$tmp/t", s"$tmp/d1", None)
+    val c2 = IcebergMetadata.commitAgainst(spark, s"$tmp/t", s"$tmp/d2",
+      Some(c1.metadataPath))
+    val log = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new File(c2.metadataPath)).get("metadata-log")
+    assert(log.size == 1)
+    val logged = new File(log.get(0).get("metadata-file").asText)
+    assert(logged.exists &&
+      logged.getCanonicalPath == new File(c1.metadataPath).getCanonicalPath,
+      s"metadata-log names $logged, the base was ${c1.metadataPath}")
   }
 
   test("commitAgainst: a failed-CAS orphan never leaks into the retry's history") {

@@ -987,17 +987,24 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("imageNearDup: the hamming<=3 predicate sits BELOW the distinct " +
        "exchange — far pairs never shuffle (r17 filter-before-distinct)") {
     val lines = plan(q("q_image_neardup")).linesIterator.toVector
-    // tree prints top-down: the dedup Exchange line must come BEFORE
-    // (i.e. above) the line carrying the bit_count hamming predicate
-    val exchangeIdx = lines.indexWhere(l =>
-      l.contains("Exchange hashpartitioning"))
-    val hammingIdx = lines.indexWhere(l =>
-      l.contains("bit_count") && l.contains("<= 3"))
-    assert(exchangeIdx >= 0, s"no distinct exchange:\n${lines.mkString("\n")}")
-    assert(hammingIdx >= 0,
-      s"no hamming predicate:\n${lines.mkString("\n")}")
-    assert(exchangeIdx < hammingIdx,
+    val shown = lines.mkString("\n")
+    // the distinct is the first key-only HashAggregate; its OWN exchange
+    // is the one hash-partitioned on exactly its keys (another exchange
+    // elsewhere in the plan must not satisfy the pin)
+    val distinct = """HashAggregate\(keys=\[([^\]]*)\], functions=\[\]""".r
+    val (aggIdx, keys) = lines.zipWithIndex.collectFirst(Function.unlift {
+      case (l, i) => distinct.findFirstMatchIn(l).map(m => (i, m.group(1)))
+    }).getOrElse(fail(s"no distinct aggregate:\n$shown"))
+    val exchangeIdx = lines.indexWhere(
+      _.contains(s"Exchange hashpartitioning($keys, "), aggIdx)
+    assert(exchangeIdx >= 0, s"no exchange on the distinct keys:\n$shown")
+    // the tree prints a node's subtree below it, indented deeper: the
+    // hamming predicate must sit inside the exchange's subtree
+    def column(l: String) = l.indexWhere(c => !" :+-".contains(c))
+    val below = lines.drop(exchangeIdx + 1)
+      .takeWhile(l => column(l) > column(lines(exchangeIdx)))
+    assert(below.exists(l => l.contains("bit_count") && l.contains("<= 3")),
       "hamming filter evaluates above the distinct exchange — far " +
-        s"pairs shuffle again:\n${lines.mkString("\n")}")
+        s"pairs shuffle again:\n$shown")
   }
 }

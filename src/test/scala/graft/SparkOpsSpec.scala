@@ -344,6 +344,32 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(allPairs.nonEmpty)
   }
 
+  /** `body` with session conf `key` set to `value`, unset after. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    spark.conf.set(key, value)
+    try body finally spark.conf.unset(key)
+  }
+
+  test("a malformed jaccardPrefix.materializeRows fails naming the key and value") {
+    import spark.implicits._
+    val key = "spark.graft.jaccardPrefix.materializeRows"
+    val docs = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException](withConf(key, "2k")(
+      graft.llm.Dedup.jaccardPairsPrefix(docs, "text", "doc_id", 0.5)))
+    assert(e.getMessage.contains(key) && e.getMessage.contains("'2k'"),
+      e.getMessage)
+  }
+
+  test("a malformed bpe.localVocabRows fails naming the key and value") {
+    import spark.implicits._
+    val key = "spark.graft.bpe.localVocabRows"
+    val docs = Seq("ab ab", "ba").toDF("text")
+    val e = intercept[IllegalArgumentException](withConf(key, "1e5")(
+      graft.llm.TextAnalysis.bpeTrain(docs, "text", rounds = 2)))
+    assert(e.getMessage.contains(key) && e.getMessage.contains("'1e5'"),
+      e.getMessage)
+  }
+
   test("cosinePairsLsh recalls a usable fraction of exact cosine pairs") {
     val emb = Tables.load(spark, "/root/testdata/sf0.01", "embeddings")
       .where(col("vec_id") < 300)
