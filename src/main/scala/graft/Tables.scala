@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.sinks.ParquetFooters
+
 /** Loaders for the driver-generated test tables (see TESTDATA.md). */
 object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
@@ -16,7 +18,7 @@ object Tables {
     // lossy-but-deliberate mapping the reference applies (all timestamps →
     // microsecond UTC, types/data_types.go:116-133).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+    val raw = ParquetFooters.read(spark, Seq(s"$sfDir/$name.parquet"))
     val df =
       if (name == "events" && raw.schema("ts").dataType == LongType)
         // integer division — `/` would go through double and lose precision

@@ -36,7 +36,9 @@ import graft.operators.{Merge, SystemColumns}
   * resolved with a skew-resistant `max_by` aggregate over the (small)
   * delta set, then applied to base as a left-anti join + union. The
   * delta side is tiny relative to base, so AQE broadcasts the key set —
-  * the base table is never shuffled to serve a read.
+  * the base table is never shuffled to serve a read. The view's
+  * schema is read from the segment and base parquet footers on the
+  * driver ([[ParquetFooters]]), so building it starts no Spark job.
   *
   * Compaction (`compact`): when the delta set exceeds `maxSegments` or
   * `maxDeltaRatio` × base bytes, the merged view is rewritten as the
@@ -76,17 +78,16 @@ object DeltaSegments {
 
   /** Newest change per key across all delta segments. Within a segment
     * keys are already unique, so `_delta_seq` alone is a total order
-    * per key. `mergeSchema` lets segments carry EVOLVED schemas (a
-    * source ALTER TABLE mid-stream adds a column in later segments —
-    * the reference renders the matching sink ALTER,
-    * `IcebergSql`/`utils/typeutils` evolution): earlier segments read
-    * the new column as null. */
+    * per key. The segments' footer schemas are merged, so segments can
+    * carry EVOLVED schemas (a source ALTER TABLE mid-stream adds a
+    * column in later segments — the reference renders the matching
+    * sink ALTER, `IcebergSql`/`utils/typeutils` evolution): earlier
+    * segments read the new column as null. */
   private def latestDelta(spark: SparkSession, tablePath: String): Option[DataFrame] = {
     val segs = listSegments(tablePath)
     if (segs.isEmpty) None
     else {
-      val df = spark.read.option("mergeSchema", "true")
-        .parquet(segs.map(_.getPath): _*)
+      val df = ParquetFooters.read(spark, segs.map(_.getPath), merge = true)
       Some(Merge.dedupKeepLatestAgg(df, orderCols = Seq(col(SeqCol))))
     }
   }
@@ -101,7 +102,7 @@ object DeltaSegments {
     // discovery columns are layout metadata, not data columns
     val baseDf =
       if (base.exists) Some {
-        val raw = spark.read.parquet(base.getPath)
+        val raw = ParquetFooters.read(spark, Seq(base.getPath))
         raw.drop(raw.columns.filter(_.startsWith("__p_")).toIndexedSeq: _*)
       } else None
     latestDelta(spark, tablePath) match {

@@ -442,10 +442,7 @@ object IcebergMetadata {
   private def footerInfo(spark: SparkSession, path: String,
                          fieldIds: Map[String, Int]): (Long, ColStats) = {
     import org.apache.parquet.column.statistics.Statistics
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path),
-      spark.sparkContext.hadoopConfiguration)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = ParquetFooters.open(spark, path)
     try {
       if (fieldIds.isEmpty) (r.getRecordCount, ColStats())
       else {
@@ -1178,8 +1175,8 @@ object IcebergMetadata {
     * reconciles against the committed schema. */
   private def filesSchema(spark: SparkSession, dataDir: String,
                           onlyFiles: Option[Set[String]] = None): String =
-    schemaJson(onlyFiles.fold(spark.read.parquet(dataDir))(fs =>
-      spark.read.parquet(fs.toSeq: _*)).schema)
+    schemaJson(ParquetFooters.read(spark,
+      onlyFiles.fold(Seq(dataDir))(_.toSeq)).schema)
 
   /** Stage `dataDir`'s parquet files as a snapshot at `sequenceNumber`
     * without touching metadata.json — pair with
@@ -1435,7 +1432,7 @@ object IcebergMetadata {
       return regexIfFirst match {
         case Some(_) =>
           commitPartitionedStaged(spark, tableDir, dataRoot,
-            spark.read.parquet(onlyData.get.toSeq: _*).schema,
+            ParquetFooters.read(spark, onlyData.get.toSeq).schema,
             onlyFiles = onlyData, summary = summary,
             regexIfFirst = regexIfFirst, groupSize = groupSize)
         case None =>
@@ -2731,7 +2728,7 @@ object IcebergMetadata {
         }.map(_.get("file_path").toString)
       }
     require(keptFiles.nonEmpty, "no files survive partition pruning")
-    spark.read.parquet(keptFiles: _*)
+    ParquetFooters.read(spark, keptFiles)
   }
 
   /** Publish a `DeltaSegments` table as ONE merge-on-read snapshot.
@@ -2746,7 +2743,11 @@ object IcebergMetadata {
     * also gets a POSITIONAL-delete file for the occurrences that must
     * not survive; whether a key repeats is read from footers (the
     * eq-delete file's row count = distinct keys vs the segment's row
-    * count), so a key-unique segment costs no positional pass. `summary`
+    * count), so a key-unique segment costs no positional pass. Every
+    * schema it needs (the view's, each segment's) is read from parquet
+    * footers on the driver ([[ParquetFooters]]), so a key-unique
+    * segment's only Spark jobs are its two writes, and a publish with
+    * no segment (right after a compaction) starts none. `summary`
     * should carry the 2PC state (`olake_2pc`), recoverable via
     * `commitState` — the reference's restart path reads the same
     * property back (iceberg.go:521-545). */
@@ -2815,7 +2816,7 @@ object IcebergMetadata {
     derived.mkdirs()
     val segResults = segs.zipWithIndex.map { case (seg, k) =>
       val seq = seqBase + k + 2L
-      val segDf = spark.read.parquet(seg.getPath)
+      val segDf = ParquetFooters.read(spark, Seq(seg.getPath))
       def projected(df: DataFrame) = df.select(dataCols.map(c =>
         if (df.columns.contains(c)) col(c) else lit(null).as(c)): _*)
       // the equality-delete file first: its footer row count (distinct
@@ -2855,9 +2856,10 @@ object IcebergMetadata {
         if (parts.isEmpty) Nil else partitionedLeaves(dataDir, parts)
       val writtenOpt =
         if (keyUnique) None
-        else if (parts.isEmpty) Some(spark.read.parquet(dataDir.abs))
+        else if (parts.isEmpty)
+          Some(ParquetFooters.read(spark, Seq(dataDir.abs)))
         else if (dataLeaves.isEmpty) None
-        else Some(spark.read.parquet(dataLeaves.map(_._2.abs): _*))
+        else Some(ParquetFooters.read(spark, dataLeaves.map(_._2.abs)))
       val posEntries = writtenOpt.toSeq.flatMap { raw =>
         val written = raw.select(
           col(keyCol),
@@ -2870,7 +2872,7 @@ object IcebergMetadata {
         // segment write order) is a delete leaves NO live row: equality
         // deletes never apply at their own sequence, so its data rows
         // must die positionally — all n of them, not n−1
-        val lastOp = spark.read.parquet(seg.getPath).select(
+        val lastOp = segDf.select(
             col(keyCol), col(SystemColumns.OpType).as("__op"),
             struct(col("_metadata.file_path"),
               col("_metadata.row_index")).as("__ord"))
@@ -3021,7 +3023,7 @@ object IcebergMetadata {
       val perSeq = files.groupBy(_._2).toSeq
       if (perSeq.size <= unionSeqLimit)
         perSeq.map { case (seq, fs) =>
-          val raw = spark.read.parquet(fs.map(_._1): _*)
+          val raw = ParquetFooters.read(spark, fs.map(_._1))
           val df =
             if (withPos) raw.select(col("*"),
               col("_metadata.file_path").as("__fp"),
@@ -3040,8 +3042,7 @@ object IcebergMetadata {
         val seqMap = broadcast(files
           .map { case (p, s) => (p.replaceFirst(SchemeRe, "/"), s) }
           .toDF("__fpn", "__seq"))
-        val raw = spark.read.option("mergeSchema", "true")
-          .parquet(files.map(_._1): _*)
+        val raw = ParquetFooters.read(spark, files.map(_._1), merge = true)
         val baseCols = cols.map(_.map(col)).getOrElse(Seq(col("*")))
         val metaCols =
           Seq(regexp_replace(col("_metadata.file_path"),
@@ -3066,7 +3067,7 @@ object IcebergMetadata {
     val data =
       if (posFiles.isEmpty) data0
       else {
-        val pd = spark.read.parquet(posFiles.map(_._1): _*)
+        val pd = ParquetFooters.read(spark, posFiles.map(_._1))
           .select(col("file_path").as("__fp"), col("pos").as("__pos"))
         data0.join(pd, Seq("__fp", "__pos"), "left_anti")
           .drop("__fp", "__pos")
@@ -3844,8 +3845,8 @@ object IcebergMetadata {
       .filter(e => e.content == 0 && laterIds.contains(e.addedSnapshotId))
       .map(_.path)
     if (files.isEmpty)
-      spark.read.parquet(dataFilePaths(tableDir): _*).limit(0)
-    else spark.read.parquet(files: _*)
+      ParquetFooters.read(spark, dataFilePaths(tableDir)).limit(0)
+    else ParquetFooters.read(spark, files)
   }
 
   /** Snapshot nodes on the CURRENT head's ancestry chain — the MAIN
@@ -3915,7 +3916,7 @@ object IcebergMetadata {
     else {
       val paths = stats.collect { case e if e.content == 0 => e.path }
       require(paths.nonEmpty, s"no live data files at $tableDir")
-      spark.read.parquet(paths: _*)
+      ParquetFooters.read(spark, paths)
     }
   }
 
@@ -4210,9 +4211,9 @@ object IcebergMetadata {
           val added = (curData -- prevData).toSeq.sorted
           val removed = (prevData -- curData).toSeq.sorted
           def rows(ps: Seq[String], other: Seq[String]) =
-            if (ps.nonEmpty) Some(spark.read.parquet(ps: _*))
+            if (ps.nonEmpty) Some(ParquetFooters.read(spark, ps))
             else if (other.nonEmpty)
-              Some(spark.read.parquet(other: _*).limit(0))
+              Some(ParquetFooters.read(spark, other).limit(0))
             else None
           (rows(added, removed), rows(removed, added)) match {
             case (Some(a), Some(r)) =>
@@ -4243,7 +4244,7 @@ object IcebergMetadata {
       else if (appendAdds.map(_._3).distinct.size <= unionSnapLimit)
         appendAdds.groupBy(a => (a._2, a._3)).toSeq.sortBy(_._1._1)
           .map { case ((ord, id), as) =>
-            tag(spark.read.parquet(as.map(_._1).toSeq: _*),
+            tag(ParquetFooters.read(spark, as.map(_._1).toSeq),
               "insert", ord, id)
           }
       else {
@@ -4258,8 +4259,7 @@ object IcebergMetadata {
         // LEFT join + loud failure, same guard as readMoR's seqMap
         // join: a normalization miss must error, never silently drop
         // every row of that file
-        Seq(spark.read.option("mergeSchema", "true")
-          .parquet(appendAdds.map(_._1).toSeq: _*)
+        Seq(ParquetFooters.read(spark, appendAdds.map(_._1).toSeq, merge = true)
           .withColumn("__fpn",
             regexp_replace(col("_metadata.file_path"), SchemeRe, "/"))
           .join(broadcast(tags), Seq("__fpn"), "left")

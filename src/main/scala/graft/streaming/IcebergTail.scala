@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sinks.{IcebergMetadata, TableIO}
+import graft.sinks.{IcebergMetadata, ParquetFooters, TableIO}
 
 /** STREAMING TABLE TAIL — the consumption half of the Iceberg sink:
   * a downstream pipeline (training-data curation, a feature store, a
@@ -108,8 +108,7 @@ object IcebergTail {
           writeState(statePath, st)
           Some(st)
         } else {
-          val batch = spark.read.option("mergeSchema", "true")
-            .parquet(files: _*)
+          val batch = ParquetFooters.read(spark, files, merge = true)
           val batchId = prev.batchId + 1
           fn(batch, batchId)
           val st = TailState(curId, batchId)

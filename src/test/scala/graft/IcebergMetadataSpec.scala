@@ -3413,7 +3413,8 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll {
       .unionByName(change(40 until 50, "d"))
       .unionByName(change(50 until 60, "c")), table, 1L)
     val (_, jobs) = jobsOf(IcebergMetadata.publishMoR(spark, ice, table))
-    assert(jobs <= 6, s"key-unique publish ran $jobs Spark jobs")
+    // the eq-delete write and the data write: schemas come from footers
+    assert(jobs <= 3, s"key-unique publish ran $jobs Spark jobs")
     assert(posDirs(ice).isEmpty, "key-unique segment wrote pos deletes")
     assert(IcebergMetadata.dataFileStats(ice).forall(_.content != 1))
     assert(snap(IcebergMetadata.readMoR(spark, ice)) ==
@@ -3433,6 +3434,67 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(posDirs(ice2).length == 1)
     val got = snap(IcebergMetadata.readMoR(spark, ice2)).toMap
     assert(!got.contains("7") && got("8") == 800L && got.size == 49)
+  }
+
+  test("no Spark job opens a table: Tables.load of a Spark-written " +
+    "directory, commit, readTable") {
+    import org.apache.spark.sql.functions._
+    val src = Files.createTempDirectory("graft_nojob_src").toString
+    spark.range(25).select(col("id").as("n_nationkey"),
+        concat(lit("nation-"), col("id")).as("n_name"),
+        timestamp_micros(col("id")).as("n_ts"))
+      .write.parquet(s"$src/nation.parquet")
+    val (nation, loadJobs) = jobsOf(Tables.load(spark, src, "nation"))
+    assert(loadJobs == 0, s"Tables.load ran $loadJobs Spark jobs")
+    val data = Files.createTempDirectory("graft_nojob_data").toString
+    nation.write.mode("overwrite").parquet(data)
+    val ice = Files.createTempDirectory("graft_nojob_ice").toString
+    val (_, commitJobs) = jobsOf(IcebergMetadata.commit(spark, ice, data))
+    assert(commitJobs == 0, s"commit ran $commitJobs Spark jobs")
+    val (table, readJobs) = jobsOf(IcebergMetadata.readTable(spark, ice))
+    assert(readJobs == 0, s"building readTable ran $readJobs Spark jobs")
+    assert(table.count() == 25)
+  }
+
+  test("no Spark job builds a merge-on-read view or a post-compaction " +
+    "publish: DeltaSegments.read, readMoR, readTable") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.operators.SystemColumns.{OlakeId, OpType, CdcTimestamp}
+    val table = Files.createTempDirectory("graft_nojob_mor").toString
+    val ice = Files.createTempDirectory("graft_nojob_morice").toString
+    spark.range(20).select(
+      col("id").cast("string").as(OlakeId), col("id").as("v"))
+      .write.parquet(s"$table/base")
+    DeltaSegments.writeSegment(spark.range(0, 5).select(
+      col("id").cast("string").as(OlakeId), (col("id") + 100).as("v"),
+      lit("u").as(OpType), current_timestamp().as(CdcTimestamp)), table, 1L)
+    // a key written then deleted in one segment: a positional delete
+    DeltaSegments.writeSegment(Seq(("7", 700L, "u", 1L), ("7", -1L, "d", 2L))
+      .toDF(OlakeId, "v", OpType, "ord")
+      .withColumn(CdcTimestamp, current_timestamp())
+      .coalesce(1).sortWithinPartitions("ord").drop("ord"), table, 2L)
+    IcebergMetadata.publishMoR(spark, ice, table): Unit
+    assert(IcebergMetadata.dataFileStats(ice).exists(_.content == 1))
+    def snap(df: org.apache.spark.sql.DataFrame) = df
+      .select(OlakeId, "v").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    val views = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "DeltaSegments.read" -> (() => DeltaSegments.read(spark, table)),
+      "readMoR" -> (() => IcebergMetadata.readMoR(spark, ice)),
+      "readMoR, one scan" ->
+        (() => IcebergMetadata.readMoR(spark, ice, unionSeqLimit = 1)),
+      "readTable" -> (() => IcebergMetadata.readTable(spark, ice)))
+    val want = snap(DeltaSegments.read(spark, table))
+    views.foreach { case (name, build) =>
+      val (df, jobs) = jobsOf(build())
+      assert(jobs == 0, s"building $name ran $jobs Spark jobs")
+      assert(snap(df) == want, name)
+    }
+    DeltaSegments.compact(spark, table)
+    val (_, jobs) = jobsOf(IcebergMetadata.publishMoR(spark, ice, table))
+    assert(jobs == 0, s"post-compaction publish ran $jobs Spark jobs")
+    assert(snap(IcebergMetadata.readMoR(spark, ice)) == want)
   }
 
   test("publishMoR: sequence numbers never decrease across a " +
