@@ -68,6 +68,13 @@ object Merge {
     *
     * `orderCols` must be non-null, max-wins (e.g. `_cdc_timestamp`,
     * `opPriority(_op_type)`, arrival id).
+    *
+    * The key column is emitted as the grouping key `_k` itself, not as
+    * the packed row's copy of it: the value is the same, but only the
+    * grouping key lets the optimizer prove the output unique on
+    * `keyCol` (`optimizedPlan.distinctKeys`), which is how
+    * `DeltaSegments.writeSegment` earns a segment's `_unique_keys`
+    * marker.
     */
   def dedupKeepLatestAgg(changes: DataFrame,
                          keyCol: String = SystemColumns.OlakeId,
@@ -79,7 +86,8 @@ object Merge {
     val packed = changes.groupBy(col(keyCol).as("_k"))
       .agg(max_by(struct(cols.map(col).toIndexedSeq: _*),
         struct(ord: _*)).as("_row"))
-    packed.select(cols.map(c => org.apache.spark.sql.functions.col(s"_row.$c")).toIndexedSeq: _*)
+    packed.select(cols.map(c =>
+      if (c == keyCol) col("_k").as(c) else col(s"_row.$c")).toIndexedSeq: _*)
   }
 
   /** Apply a deduped change batch to a base table (the MERGE semantic):

@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Merge, SystemColumns}
@@ -23,20 +23,31 @@ import graft.operators.{Merge, SystemColumns}
   * delete tombstones (`_op_type = 'd'`), stamped with a monotone
   * `_delta_seq` (the micro-batch id). `CdcStream.applyBatch` hands it
   * the batch's dedup-keep-latest survivors, so its segments hold one
-  * row per key. Nothing here checks that: a frame that repeats a key
+  * row per key. Nothing here enforces that: a frame that repeats a key
   * is written as given. `read` orders changes by `_delta_seq` alone,
   * so which of a key's occurrences inside one segment it keeps is
   * unspecified; `IcebergMetadata.publishMoR` keeps the last-written
-  * one through positional deletes, and tells the two shapes apart
-  * from footer row counts, so a key-unique segment pays no positional
-  * pass. A CDC micro-batch therefore writes O(batch) bytes — never
-  * O(base).
+  * one through positional deletes. A CDC micro-batch therefore writes
+  * O(batch) bytes — never O(base).
+  *
+  * The `_unique_keys` marker: `writeSegment` writes this zero-byte
+  * file into a segment after its parquet write succeeds, and only when
+  * the frame's optimized plan proves `_olake_id` unique (a distinct-key
+  * set of the plan lies within `{_olake_id}`; `applyBatch`'s
+  * `Merge.dedupKeepLatestAgg` is such a plan). It records a proof, not
+  * a setting: a segment without it (a frame whose plan proves nothing,
+  * or a crash between the write and the marker) may repeat keys, and
+  * `publishMoR` then finds out from footer row counts, as it always
+  * did. A marked segment publishes its equality deletes as a map-only
+  * projection, with no shuffle and no positional pass. Spark's file
+  * index skips `_`-prefixed names, so no reader sees the marker.
   *
   * Read side (`read`): the newest row per key across segments is
   * resolved with a skew-resistant `max_by` aggregate over the (small)
-  * delta set, then applied to base as a left-anti join + union. The
-  * delta side is tiny relative to base, so AQE broadcasts the key set —
-  * the base table is never shuffled to serve a read. The view's
+  * delta set, then applied to base as a left-anti join (against every
+  * key the segments hold) + union. The delta side is tiny relative to
+  * base, so AQE broadcasts the key set — the base table is never
+  * shuffled to serve a read. The view's
   * schema is read from the segment and base parquet footers on the
   * driver ([[ParquetFooters]]), so building it starts no Spark job.
   *
@@ -68,34 +79,71 @@ object DeltaSegments {
       .sortBy(_.getName).toSeq
   }
 
+  /** Name of the zero-byte file a segment carries when its rows are
+    * proven unique on `_olake_id` (see the object doc). */
+  val UniqueKeysMarker = "_unique_keys"
+
   /** Write one deduped micro-batch as a delta segment. The path is
     * deterministic in `batchId` and the write is mode=overwrite, so a
     * replayed batch (crash before the position commit) rewrites the
-    * same segment instead of duplicating it. */
-  def writeSegment(deduped: DataFrame, tablePath: String, batchId: Long): Unit =
-    deduped.withColumn(SeqCol, lit(batchId))
-      .write.mode("overwrite").parquet(segDir(tablePath, batchId).getPath)
+    * same segment instead of duplicating it (and drops a marker the
+    * earlier write left).
+    *
+    * With `maxOf`, the maximum of that column over the written rows is
+    * taken by an `Observation` on the write job itself, with no second
+    * pass over the frame; None when the frame has no row (the segment
+    * is still written). After the write succeeds, the segment gets
+    * its `_unique_keys` marker iff the frame's optimized plan proves
+    * `_olake_id` unique. */
+  def writeSegment(deduped: DataFrame, tablePath: String, batchId: Long,
+                   maxOf: Option[String] = None): Option[Long] = {
+    val dir = segDir(tablePath, batchId)
+    val seg = deduped.withColumn(SeqCol, lit(batchId))
+    // decided before the observation is attached: Spark's distinct-key
+    // analysis sees nothing below a CollectMetrics node
+    val unique = provenKeyUnique(seg)
+    val obs = Observation()
+    maxOf.fold(seg)(c => seg.observe(obs, max(col(c)).as("max")))
+      .write.mode("overwrite").parquet(dir.getPath)
+    if (unique) new File(dir, UniqueKeysMarker).createNewFile(): Unit
+    maxOf.flatMap(_ => Option(obs.get("max"))).map(_.toString.toLong)
+  }
 
-  /** Newest change per key across all delta segments. Within a segment
-    * keys are already unique, so `_delta_seq` alone is a total order
-    * per key. The segments' footer schemas are merged, so segments can
-    * carry EVOLVED schemas (a source ALTER TABLE mid-stream adds a
-    * column in later segments — the reference renders the matching
-    * sink ALTER, `IcebergSql`/`utils/typeutils` evolution): earlier
-    * segments read the new column as null. */
-  private def latestDelta(spark: SparkSession, tablePath: String): Option[DataFrame] = {
-    val segs = listSegments(tablePath)
-    if (segs.isEmpty) None
-    else {
-      val df = ParquetFooters.read(spark, segs.map(_.getPath), merge = true)
-      Some(Merge.dedupKeepLatestAgg(df, orderCols = Seq(col(SeqCol))))
+  /** Whether `df`'s optimized plan proves at most one row per
+    * `_olake_id`: some distinct-key set of the plan lies within
+    * `{_olake_id}` (the grouping key of a dedup aggregate qualifies). */
+  private def provenKeyUnique(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.optimizedPlan
+    plan.output.find(_.name == SystemColumns.OlakeId).exists { k =>
+      plan.distinctKeys.exists(_.forall(_.semanticEquals(k)))
     }
   }
 
+  /** Whether segment `seg` carries the `_unique_keys` marker. */
+  def markedKeyUnique(seg: File): Boolean =
+    new File(seg, UniqueKeysMarker).isFile
+
+  /** Remove segment `batchId`, if it exists. */
+  def dropSegment(tablePath: String, batchId: Long): Unit =
+    deleteRecursive(segDir(tablePath, batchId))
+
+  /** Every delta segment's rows. The segments' footer schemas are
+    * merged, so segments can carry EVOLVED schemas (a source ALTER
+    * TABLE mid-stream adds a column in later segments — the reference
+    * renders the matching sink ALTER, `IcebergSql`/`utils/typeutils`
+    * evolution): earlier segments read the new column as null. */
+  private def deltaRows(spark: SparkSession, tablePath: String): Option[DataFrame] = {
+    val segs = listSegments(tablePath)
+    if (segs.isEmpty) None
+    else Some(ParquetFooters.read(spark, segs.map(_.getPath), merge = true))
+  }
+
   /** The merged (merge-on-read) view of the table: base with all delta
-    * segments applied. Plan shape: base is scanned once, never
-    * shuffled; the delta side (small) is aggregated and broadcast into
-    * a left-anti join. */
+    * segments applied. The newest change per key comes from a `max_by`
+    * aggregate over the delta set: within a segment keys are already
+    * unique, so `_delta_seq` alone is a total order per key. Plan shape:
+    * base is scanned once, never shuffled; the segments' key column
+    * (small) is broadcast into a left-anti join. */
   def read(spark: SparkSession, tablePath: String): DataFrame = {
     val base = baseDir(tablePath)
     // a partition-aware-compacted base is hive-laid-out; its `__p_*`
@@ -105,11 +153,12 @@ object DeltaSegments {
         val raw = ParquetFooters.read(spark, Seq(base.getPath))
         raw.drop(raw.columns.filter(_.startsWith("__p_")).toIndexedSeq: _*)
       } else None
-    latestDelta(spark, tablePath) match {
+    deltaRows(spark, tablePath) match {
       case None =>
         baseDf.getOrElse(
           throw new IllegalStateException(s"no base or delta under $tablePath"))
-      case Some(latest) =>
+      case Some(rows) =>
+        val latest = Merge.dedupKeepLatestAgg(rows, orderCols = Seq(col(SeqCol)))
         // data columns = union of base's and the (possibly evolved)
         // segments' — a column added mid-stream surfaces with nulls for
         // rows that predate it (the reference's add-column evolution)
@@ -126,9 +175,12 @@ object DeltaSegments {
           else lit(null).as(c)).toIndexedSeq: _*)
         val survivors = proj(latest
           .where(col(SystemColumns.OpType) =!= SystemColumns.OpDelete))
+        // every key a segment touched leaves the base, whatever its
+        // newest change: the anti join's build side is the segments'
+        // raw key column, broadcast without a shuffle or a dedup
         baseDf match {
           case Some(b) =>
-            proj(b.join(latest.select(col(SystemColumns.OlakeId)),
+            proj(b.join(rows.select(col(SystemColumns.OlakeId)),
               Seq(SystemColumns.OlakeId), "left_anti"))
               .unionByName(survivors)
           case None => survivors

@@ -2739,15 +2739,22 @@ object IcebergMetadata {
     * key the segment touched — an upsert is delete+insert at the same
     * sequence, exactly the reference writer's per-batch eq-delete
     * emission) and a derived data file (the segment's non-tombstone
-    * rows, internal columns dropped). A segment that repeats a key
-    * also gets a POSITIONAL-delete file for the occurrences that must
-    * not survive; whether a key repeats is read from footers (the
-    * eq-delete file's row count = distinct keys vs the segment's row
-    * count), so a key-unique segment costs no positional pass. Every
-    * schema it needs (the view's, each segment's) is read from parquet
-    * footers on the driver ([[ParquetFooters]]), so a key-unique
-    * segment's only Spark jobs are its two writes, and a publish with
-    * no segment (right after a compaction) starts none. `summary`
+    * rows, internal columns dropped; a column the segment predates is
+    * a typed null). A segment that repeats a key also gets a
+    * POSITIONAL-delete file for the occurrences that must not survive.
+    * A segment carrying the `_unique_keys` marker (written by
+    * `DeltaSegments.writeSegment` when the segment frame's plan proved
+    * `_olake_id` unique, as `CdcStream.applyBatch`'s dedup does) is
+    * taken as key-unique: its equality-delete file is its key column,
+    * written map-only with no `distinct()` shuffle, and it gets no
+    * positional pass. For an unmarked segment, whether a key repeats is
+    * read from footers (the eq-delete file's row count = distinct keys
+    * vs the segment's row count), so a key-unique one still costs no
+    * positional pass. Every schema it needs (the view's, each
+    * segment's) is read from parquet footers on the driver
+    * ([[ParquetFooters]]), so a key-unique segment's only Spark jobs
+    * are its two writes, and a publish with no segment (right after a
+    * compaction) starts none. `summary`
     * should carry the 2PC state (`olake_2pc`), recoverable via
     * `commitState` — the reference's restart path reads the same
     * property back (iceberg.go:521-545). */
@@ -2817,13 +2824,22 @@ object IcebergMetadata {
     val segResults = segs.zipWithIndex.map { case (seg, k) =>
       val seq = seqBase + k + 2L
       val segDf = ParquetFooters.read(spark, Seq(seg.getPath))
+      // a column the segment predates is null OF THE VIEW'S TYPE: an
+      // untyped null would write a VOID parquet column that no later
+      // schema merge (readMoR's one-scan shape) accepts
       def projected(df: DataFrame) = df.select(dataCols.map(c =>
-        if (df.columns.contains(c)) col(c) else lit(null).as(c)): _*)
-      // the equality-delete file first: its footer row count (distinct
-      // keys) against the segment's footer row count (rows) decides
-      // below whether the positional pass can find anything at all
+        if (df.columns.contains(c)) col(c)
+        else lit(null).cast(viewSchema(c).dataType).as(c)): _*)
+      // a segment marked `_unique_keys` (DeltaSegments) holds each key
+      // once, so its key column IS the equality-delete file: a map-only
+      // projection, no shuffle. Otherwise the equality-delete file is
+      // the distinct keys, and its footer row count against the
+      // segment's footer row count decides below whether the
+      // positional pass can find anything at all
+      val marked = DeltaSegments.markedKeyUnique(seg)
       val delDir = derived.child(s"${seg.getName}-deletes")
-      segDf.select(col(keyCol)).distinct()
+      val keys = segDf.select(col(keyCol))
+      (if (marked) keys else keys.distinct())
         .write.mode("overwrite").parquet(delDir.abs)
       val eqEntries = entriesFor(spark, delDir.abs, seq, content = 2,
         equalityIds = eqIds, fieldIds = statIds)
@@ -2845,13 +2861,12 @@ object IcebergMetadata {
       // (a partitioned all-delete segment writes NO data files — hive
       // layout has no empty-file carrier — so the positional pass has
       // nothing to read and nothing to kill; eq-deletes do all the work)
-      // A key-unique segment (as many distinct keys as rows — the
-      // shape `CdcStream.applyBatch`'s dedup writes) has no earlier
-      // occurrence to kill, and its tombstones carry no data row, so
-      // the pass is skipped; both counts are footer reads, no job.
-      val segRows = segDf.inputFiles.toSeq
-        .map(f => footerInfo(spark, f, Map.empty)._1).sum
-      val keyUnique = eqEntries.map(_.rows).sum == segRows
+      // A key-unique segment (marked, or as many distinct keys as rows)
+      // has no earlier occurrence to kill, and its tombstones carry no
+      // data row, so the pass is skipped; both counts are footer reads,
+      // no job.
+      val keyUnique = marked || eqEntries.map(_.rows).sum ==
+        segDf.inputFiles.toSeq.map(f => footerInfo(spark, f, Map.empty)._1).sum
       val dataLeaves =
         if (parts.isEmpty) Nil else partitionedLeaves(dataDir, parts)
       val writtenOpt =

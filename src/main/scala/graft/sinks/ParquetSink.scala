@@ -41,10 +41,8 @@ object ParquetSink {
     import org.apache.spark.sql.functions._
     val obs = Observation()
     val withCols = PartitionTransforms.withPartitionColumns(df, fields)
-    val metrics = Seq(count(lit(1)).as("records_written"),
-      sum(when(col(withCols.columns.head).isNull, 1).otherwise(0))
-        .as("null_first_col")) ++ extraMetrics
-    var w = withCols.observe(obs, metrics.head, metrics.tail: _*).write
+    var w = withCols.observe(obs, count(lit(1)).as("records_written"),
+        extraMetrics: _*).write
       .mode(if (append) "append" else "overwrite")
     if (fields.nonEmpty) w = w.partitionBy(fields.map(_.outputName): _*)
     w.parquet(path)

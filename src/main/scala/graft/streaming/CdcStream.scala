@@ -96,7 +96,14 @@ object CdcStream {
     * compaction triggers, amortizing write amplification over
     * `maxDeltaRatio` of the base size. Position commit is keyed on
     * batchId so replayed batches are no-ops; a replay that crashed
-    * before the commit rewrites the same deterministic segment path. */
+    * before the commit rewrites the same deterministic segment path.
+    *
+    * Up to the compaction, the segment write is the batch's only Spark
+    * action: the decode, replay filter and dedup run inside it, and it
+    * observes the max LSN to commit; the segment it leaves carries the
+    * `_unique_keys` marker (see `DeltaSegments`), so the publish writes
+    * its equality deletes without a shuffle. A batch with no row above
+    * the committed LSN leaves no segment. */
   def applyBatch(batch: DataFrame, batchId: Long, tablePath: String,
                  statePath: String, stream: String,
                  policy: DeltaSegments.CompactionPolicy =
@@ -120,19 +127,22 @@ object CdcStream {
       .withColumn(SystemColumns.OpType,
         CdcWindow.opType(col("kind"), dedupInserts = ss.dedupInserts))
       .drop("kind")
-    // aggregate form: partial-combines hot keys map-side (SCALING.md)
+    // aggregate form: partial-combines hot keys map-side (SCALING.md);
+    // its plan proves one row per key, so the segment gets the
+    // `_unique_keys` marker and publishes without a shuffle
     val deduped = Merge.dedupKeepLatestAgg(stamped,
       orderCols = Seq(col(SystemColumns.CdcTimestamp),
-        Merge.opPriority(col(SystemColumns.OpType)), col("lsn"))).cache()
-    val maxLsn = deduped.agg(max(col("lsn"))).head().get(0)
-
-    if (maxLsn != null)
-      DeltaSegments.writeSegment(deduped, tablePath, batchId)
-    deduped.unpersist()
+        Merge.opPriority(col(SystemColumns.OpType)), col("lsn")))
+    // the position to commit is observed on the segment write itself:
+    // one job runs the dedup and the write, nothing is cached or probed
+    val maxLsn = DeltaSegments.writeSegment(deduped, tablePath, batchId,
+      maxOf = Some("lsn"))
+    // no row survived the replay filter: the batch leaves no segment
+    if (maxLsn.isEmpty) DeltaSegments.dropSegment(tablePath, batchId)
 
     val committed = StateStore.closeDedupWindow(ss.copy(
       offsets = ss.offsets + ("batchId" -> batchId) ++
-        Option(maxLsn).map(l => "lsn" -> l.toString.toLong)))
+        maxLsn.map("lsn" -> _)))
     // update, not save: only this stream's writer touches `stream`'s
     // entry (batches are serialized per query), but concurrent streams
     // share the map — writing back the batch-start snapshot `st` would
@@ -154,7 +164,7 @@ object CdcStream {
       // the insert-dedup-window flag, like the reference's
       // MetadataState JSON {id, state, dedup_inserts}
       // (types/metadata_state.go:9-16) riding the table metadata
-      val lsnPart = Option(maxLsn).map(l => s""","lsn":$l""").getOrElse("")
+      val lsnPart = maxLsn.map(l => s""","lsn":$l""").getOrElse("")
       val stateJson = s"""{"stream":"$stream","batchId":$batchId$lsnPart""" +
         s""","dedup_inserts":${committed.dedupInserts}}"""
       // partitionRegex (the reference's per-stream `partition_regex`,

@@ -9,7 +9,8 @@ import graft.cdc.{ChangeLogFixture, PgOutput, PollingCdc, Wal2Json}
 /** CDC decoder specs: byte-level pgoutput details the oracle queries
   * can't reach (TOAST recovery, framing, relation caching) plus the
   * declarative decoders' corner cases. */
-class CdcSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CdcSpec extends AnyFunSuite with BeforeAndAfterAll
+    with SparkJobCounting {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -547,5 +548,44 @@ class CdcSpec extends AnyFunSuite with BeforeAndAfterAll {
         .otherwise("insert").as("k")).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(kinds == expected)
+  }
+
+  test("pgoutput -> decode -> applyBatch with an Iceberg publish: the " +
+    "decode and dedup ride the segment write, at most 4 Spark jobs") {
+    import graft.sinks.{DeltaSegments, IcebergMetadata}
+    import graft.streaming.CdcStream
+    // events in `pgoutputLog`'s shape: a view inserts, a purchase
+    // updates, an error deletes
+    val ev = spark.range(1, 401).select(col("id").as("event_id"),
+      (col("id") % 7).as("user_id"),
+      element_at(array(lit("view"), lit("purchase"), lit("error")),
+        (col("id") % 3 + 1).cast("int")).as("event_type"),
+      (col("id") * 1.5).as("value"),
+      timestamp_seconds(col("id") + 1700000000L).as("ts"))
+    // decoder output -> the apply shape, as `CdcStream.runSocket`'s
+    // `project` does
+    def batch(part: DataFrame): DataFrame = PgOutput.decode(
+        ChangeLogFixture.pgoutputLog(part), "lsn", "msg").select(
+      element_at(col("values"), 1).as("_olake_id"), col("lsn"), col("kind"),
+      timestamp_micros(col("commit_ts_micros")).as("_cdc_timestamp"),
+      element_at(col("values"), 3).as("event_type"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_pgapply").toString
+    val (table, state, ice) = (s"$tmp/t", s"$tmp/s.json", s"$tmp/ice")
+    val policy = DeltaSegments.CompactionPolicy(maxSegments = 100,
+      maxDeltaRatio = 1e9)
+    CdcStream.applyBatch(batch(ev.where(col("event_id") <= 200)), 0L, table,
+      state, "events", policy, icebergDir = Some(ice)) // bootstrap fold
+    val (_, jobs) = jobsOf(CdcStream.applyBatch(
+      batch(ev.where(col("event_id") > 200)), 1L, table, state, "events",
+      policy, icebergDir = Some(ice)))
+    assert(jobs <= 4, s"applyBatch ran $jobs Spark jobs")
+    val segs = DeltaSegments.listSegments(table)
+    assert(segs.size == 1 && DeltaSegments.markedKeyUnique(segs.head))
+    def snap(df: DataFrame) = df.select("_olake_id", "event_type").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    val t = snap(CdcStream.readTable(spark, table))
+    assert(snap(IcebergMetadata.readMoR(spark, ice)) == t)
+    // every event but the deleted ("error") ones is live
+    assert(t.size == 267 && !t.exists(_._2 == "error"))
   }
 }

@@ -15,7 +15,8 @@ import graft.sinks.{DeltaSegments, IcebergMetadata}
   * public table spec — metadata.json fields, manifest-list and manifest
   * Avro with the spec's field-ids, sequence-number chaining across
   * commits, and the reader walk from version-hint down to data files. */
-class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll
+    with SparkJobCounting {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -3355,36 +3356,6 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(log.exists(_._3 == "delete"), "eq-delete row not emitted")
   }
 
-  /** Spark jobs `body` starts, counted by a listener. A marker job run
-    * after `body` is awaited: listener events arrive in order, so once
-    * the marker is seen every job of `body` has been counted. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val counted = new java.util.concurrent.atomic.AtomicInteger(0)
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-          .foreach { g =>
-            if (g == group) counted.incrementAndGet()
-            else if (g == marker) done.countDown()
-          }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener never saw the marker job")
-      (out, counted.get)
-    } finally sc.removeSparkListener(l)
-  }
-
   test("publishMoR: a key-unique segment skips the positional pass " +
     "(no pos-delete file, at most 6 jobs); a key that repeats only " +
     "through its tombstone still dies positionally") {
@@ -3434,6 +3405,81 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(posDirs(ice2).length == 1)
     val got = snap(IcebergMetadata.readMoR(spark, ice2)).toMap
     assert(!got.contains("7") && got("8") == 800L && got.size == 49)
+  }
+
+  test("publishMoR: a segment marked _unique_keys publishes its " +
+    "equality deletes without a shuffle (at most 2 jobs); without the " +
+    "marker the footer proof gives the same table") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.Merge
+    import graft.operators.SystemColumns.{OlakeId, OpType, CdcTimestamp}
+    val table = Files.createTempDirectory("graft_marked").toString
+    spark.range(50).select(
+      col("id").cast("string").as(OlakeId), col("id").as("v"))
+      .write.parquet(s"$table/base")
+    def change(ids: Range, op: String, vOff: Long = 0) =
+      spark.range(ids.start, ids.end).select(
+        col("id").cast("string").as(OlakeId), (col("id") + vOff).as("v"),
+        lit(op).as(OpType), current_timestamp().as(CdcTimestamp))
+    // keys 0-9 and 40-59 change twice (a day-old read, then the change
+    // that wins the dedup); keys 10-39 only through the read
+    val changes = change(0 until 10, "u", vOff = 100)
+      .unionByName(change(40 until 50, "d"))
+      .unionByName(change(50 until 60, "c"))
+    DeltaSegments.writeSegment(Merge.dedupKeepLatestAgg(
+      changes.unionByName(change(0 until 60, "r", vOff = -1)
+        .withColumn(CdcTimestamp, col(CdcTimestamp) - expr("INTERVAL 1 DAY")))),
+      table, 1L)
+    val seg = DeltaSegments.segDir(table, 1L)
+    assert(DeltaSegments.markedKeyUnique(seg), "dedup segment not marked")
+    def snap(df: org.apache.spark.sql.DataFrame) = df
+      .select(OlakeId, "v").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    def posDirs(ice: String) = new File(s"$ice/data").listFiles
+      .flatMap(_.listFiles).map(_.getName).filter(_.endsWith("-posdeletes"))
+    val want = snap(DeltaSegments.read(spark, table))
+    assert(want.size == 50 && want.contains(("3", 103L)) &&
+      !want.exists(_._1 == "45") && want.contains(("55", 55L)))
+
+    val ice = Files.createTempDirectory("graft_markedice").toString
+    val (_, jobs) = jobsOf(IcebergMetadata.publishMoR(spark, ice, table))
+    // the map-only eq-delete write and the data write
+    assert(jobs <= 2, s"marked publish ran $jobs Spark jobs")
+    assert(posDirs(ice).isEmpty, "marked segment wrote pos deletes")
+    assert(snap(IcebergMetadata.readMoR(spark, ice)) == want)
+
+    // the marker only records the proof: without it the footer counts
+    // find the segment key-unique and publish the same table
+    assert(new File(seg, DeltaSegments.UniqueKeysMarker).delete())
+    val ice2 = Files.createTempDirectory("graft_unmarkedice").toString
+    IcebergMetadata.publishMoR(spark, ice2, table): Unit
+    assert(posDirs(ice2).isEmpty)
+    assert(snap(IcebergMetadata.readMoR(spark, ice2)) == want)
+  }
+
+  test("publishMoR: a segment that predates an added column publishes " +
+    "it typed, so readMoR's one-scan shape merges the data files") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.SystemColumns.{OlakeId, OpType, CdcTimestamp}
+    val table = Files.createTempDirectory("graft_typednull").toString
+    val ice = Files.createTempDirectory("graft_typednullice").toString
+    spark.range(10).select(
+      col("id").cast("string").as(OlakeId), col("id").as("v"))
+      .write.parquet(s"$table/base")
+    def change(ids: Range) = spark.range(ids.start, ids.end).select(
+      col("id").cast("string").as(OlakeId), (col("id") + 100).as("v"),
+      lit("u").as(OpType), current_timestamp().as(CdcTimestamp))
+    DeltaSegments.writeSegment(change(0 until 2), table, 1L)
+    DeltaSegments.writeSegment(change(2 until 4)
+      .withColumn("note", lit("n")), table, 2L)
+    IcebergMetadata.publishMoR(spark, ice, table): Unit
+    def snap(df: org.apache.spark.sql.DataFrame) = df
+      .select(OlakeId, "v", "note").collect()
+      .map(r => (r.getString(0), r.getLong(1), Option(r.getString(2)))).toSet
+    // every column of every row: the scan, not just the plan, must work
+    val oneScan = IcebergMetadata.readMoR(spark, ice, unionSeqLimit = 1)
+    assert(snap(oneScan) == snap(DeltaSegments.read(spark, table)))
+    assert(snap(oneScan).collect { case (k, _, Some("n")) => k } == Set("2", "3"))
   }
 
   test("no Spark job opens a table: Tables.load of a Spark-written " +

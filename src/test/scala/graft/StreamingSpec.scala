@@ -14,7 +14,8 @@ import graft.state.StateStore
 /** Structured-Streaming CDC pipeline: change log in, merged table out,
   * with replay-safe commits (reference cdc.go:117-179 + postgres
   * cdc.go:160-202 recovery semantics). */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll
+    with SparkJobCounting {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -183,6 +184,118 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = CdcStream.readTable(spark, table).orderBy("_olake_id").collect()
     assert(t.map(r => (r.getAs[String]("_olake_id"), r.getAs[Long]("v"))).toSeq ==
       Seq(("a", 10L), ("c", 3L)))
+  }
+
+  /** A batch frame over a JSON change-log file holding `rows`. */
+  private def jsonBatch(rows: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val p = java.nio.file.Files.createTempFile("seg", ".json")
+    java.nio.file.Files.write(p, rows.mkString("\n").getBytes)
+    spark.read.schema(schema).json(p.toString)
+  }
+
+  // fixed timestamp: `line` only renders lsn 0-9; lsn breaks the ties
+  private def lsnLine(id: String, lsn: Long, kind: String, v: Long): String =
+    s"""{"_olake_id":"$id","lsn":$lsn,"kind":"$kind","_cdc_timestamp":"2024-01-01 00:00:00","v":$v}"""
+
+  test("applyBatch with an Iceberg publish runs at most 4 Spark jobs on " +
+    "a batch that does not compact and 5 on one that does; its segment " +
+    "carries _unique_keys") {
+    import graft.sinks.{DeltaSegments, IcebergMetadata}
+    val (table, state, ice) = (tmp() + "/t", tmp() + "/s.json", tmp())
+    // folds only at the second live segment (and at the bootstrap)
+    val policy = DeltaSegments.CompactionPolicy(maxSegments = 2,
+      maxDeltaRatio = 1e9)
+    def apply(id: Long, rows: Seq[String]): Int = jobsOf(
+      CdcStream.applyBatch(jsonBatch(rows), id, table, state, "ev", policy,
+        icebergDir = Some(ice)))._2
+    apply(0L, (1 to 200).map(i => lsnLine(s"k$i", i, "insert", i)))
+    assert(DeltaSegments.listSegments(table).isEmpty) // bootstrap fold
+    // every batch repeats keys: the dedup, not the input, makes the
+    // segment key-unique
+    def changes(lsn0: Long): Seq[String] = (0 until 60).map { j =>
+      val lsn = lsn0 + j
+      val k = s"k${1 + j % 30}"
+      if (j % 7 == 0) lsnLine(k, lsn, "delete", 0)
+      else lsnLine(k, lsn, "update", lsn)
+    } :+ lsnLine(s"n$lsn0", lsn0 + 60, "insert", 1)
+    val jobs1 = apply(1L, changes(1000))
+    val segs = DeltaSegments.listSegments(table)
+    assert(segs.size == 1 && DeltaSegments.markedKeyUnique(segs.head),
+      s"segment not marked _unique_keys: ${segs.map(_.list.toSeq)}")
+    assert(jobs1 <= 4, s"non-compacting batch ran $jobs1 Spark jobs")
+    val jobs2 = apply(2L, changes(2000))
+    assert(DeltaSegments.listSegments(table).isEmpty) // folded
+    assert(jobs2 <= 5, s"compacting batch ran $jobs2 Spark jobs")
+    def snap(df: org.apache.spark.sql.DataFrame) = df
+      .select("_olake_id", "v").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    val t = snap(CdcStream.readTable(spark, table))
+    assert(snap(IcebergMetadata.readMoR(spark, ice)) == t)
+    // one timestamp: a key with a delete in the batch ends deleted (op
+    // priority), the others at their later update (lsn)
+    val deleted = Set(1, 6, 8, 13, 15, 20, 22, 27, 29).map(i => s"k$i")
+    assert(t.contains(("k30", 2059L)) && t.contains(("n2000", 1L)) &&
+      t.contains(("n1000", 1L)) && t.size == 193 &&
+      !t.exists(r => deleted(r._1)))
+    assert(StateStore.load(state).get.streams("ev").offsets("lsn") == 2060L)
+  }
+
+  test("writeSegment marks only a frame whose plan proves unique keys " +
+    "and observes the max of a column on the write") {
+    import graft.operators.Merge
+    import graft.sinks.DeltaSegments
+    import spark.implicits._
+    val table = tmp()
+    val dup = Seq(("a", 1L, "u"), ("a", 2L, "u"), ("b", 3L, "u"))
+      .toDF("_olake_id", "lsn", "_op_type")
+    def marked(id: Long) =
+      DeltaSegments.markedKeyUnique(DeltaSegments.segDir(table, id))
+    assert(DeltaSegments.writeSegment(dup, table, 1L,
+      maxOf = Some("lsn")) == Some(3L))
+    assert(!marked(1L), "a frame that repeats a key was marked")
+    // unique rows, but nothing in the plan proves it
+    DeltaSegments.writeSegment(dup.where($"lsn" > 1), table, 2L): Unit
+    assert(!marked(2L))
+    val deduped = Merge.dedupKeepLatestAgg(dup, orderCols = Seq($"lsn"))
+    assert(DeltaSegments.writeSegment(deduped, table, 3L) == None)
+    assert(marked(3L))
+    assert(deduped.orderBy("_olake_id").as[(String, Long, String)]
+      .collect().toSeq == Seq(("a", 2L, "u"), ("b", 3L, "u")))
+    // a replay that proves nothing overwrites the marker away
+    DeltaSegments.writeSegment(dup, table, 3L): Unit
+    assert(!marked(3L))
+    // no row: the observed max is None
+    assert(DeltaSegments.writeSegment(deduped.where($"lsn" > 9), table, 4L,
+      maxOf = Some("lsn")).isEmpty)
+  }
+
+  test("a batch with no change above the committed LSN leaves no " +
+    "segment, advances batchId and keeps lsn") {
+    import graft.sinks.DeltaSegments
+    val (table, state) = (tmp() + "/t", tmp() + "/s.json")
+    val policy = DeltaSegments.CompactionPolicy(maxSegments = 100,
+      maxDeltaRatio = 1e9)
+    def offsets = StateStore.load(state).get.streams("ev").offsets
+    CdcStream.applyBatch(jsonBatch(Seq(lsnLine("a", 10, "insert", 1),
+      lsnLine("b", 11, "insert", 2))), 0L, table, state, "ev", policy)
+    CdcStream.applyBatch(jsonBatch(Seq(lsnLine("a", 12, "update", 3))),
+      1L, table, state, "ev", policy)
+    assert(DeltaSegments.listSegments(table).size == 1)
+    // a replay of lsn 11-12 only
+    CdcStream.applyBatch(jsonBatch(Seq(lsnLine("a", 12, "update", 99),
+      lsnLine("b", 11, "insert", 99))), 2L, table, state, "ev", policy)
+    assert(!DeltaSegments.segDir(table, 2L).exists)
+    assert(offsets("batchId") == 2L && offsets("lsn") == 12L)
+    // a batch frame with no partition at all
+    CdcStream.applyBatch(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
+      3L, table, state, "ev", policy)
+    assert(DeltaSegments.listSegments(table).map(_.getName) ==
+      Seq(DeltaSegments.segDir(table, 1L).getName))
+    assert(offsets("batchId") == 3L && offsets("lsn") == 12L)
+    val t = CdcStream.readTable(spark, table).orderBy("_olake_id").collect()
+    assert(t.map(r => (r.getAs[String]("_olake_id"), r.getAs[Long]("v"))).toSeq ==
+      Seq(("a", 3L), ("b", 2L)))
   }
 
   test("schema evolution through delta segments: column added mid-stream reads as null for older rows") {
