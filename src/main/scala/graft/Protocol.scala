@@ -204,7 +204,9 @@ object Protocol {
 
     val cursorParsed = cfg.cursor.map(Incremental.Cursor.parse)
     // previous committed cursor as a typed literal (shared between the
-    // delta predicate and the cursor-max observation)
+    // delta predicate and the cursor-max observation); a literal, not a
+    // BatchConstant, because the scan takes the delta predicate as a
+    // pushed filter (parquet row groups, the JDBC query)
     def lastColOf(c: Incremental.Cursor): Option[Column] =
       ss.cursor.get(c.primary).map { last =>
         src.schema(c.primary).dataType match {
@@ -307,19 +309,6 @@ object Protocol {
   // elsewhere (same monitor, reentrant for the nested saves inside)
   private def stateLock: Object = StateStore.lock
 
-  /** `sync` ALL selected streams concurrently through a bounded pool
-    * with retry — the reference's connection-group execution
-    * (`drivers/abstract/abstract.go:86`,
-    * `utils.ConcurrentInGroupWithRetry` bounded by MaxConnections).
-    * One SparkSession schedules the per-stream jobs in parallel;
-    * per-stream state entries are disjoint and commits serialize
-    * through `stateLock`. Returns rows synced per stream; the first
-    * stream failure (after retries) aborts the sync like the
-    * reference's group error, and the await is BOUNDED: a hung stream
-    * fails the whole sync after `timeoutMillis` with the pool
-    * interrupted (`shutdownNow`), mirroring the reference's context
-    * cancellation — never an indefinite block. `runStream` is the
-    * per-stream body (overridable for fault-injection tests). */
   /** The reference's periodic monitoring line (`logger.StatsLogger`,
     * `utils/logger`): a daemon ticker prints running streams, synced
     * records, records/s and an ETA as one JSON line per interval until
@@ -359,6 +348,19 @@ object Protocol {
     }
   }
 
+  /** `sync` ALL selected streams concurrently through a bounded pool
+    * with retry — the reference's connection-group execution
+    * (`drivers/abstract/abstract.go:86`,
+    * `utils.ConcurrentInGroupWithRetry` bounded by MaxConnections).
+    * One SparkSession schedules the per-stream jobs in parallel;
+    * per-stream state entries are disjoint and commits serialize
+    * through `stateLock`. Returns rows synced per stream; the first
+    * stream failure (after retries) aborts the sync like the
+    * reference's group error, and the await is BOUNDED: a hung stream
+    * fails the whole sync after `timeoutMillis` with the pool
+    * interrupted (`shutdownNow`), mirroring the reference's context
+    * cancellation — never an indefinite block. `runStream` is the
+    * per-stream body (overridable for fault-injection tests). */
   def syncAll(spark: SparkSession, sourceDir: String, destDir: String,
               cfgs: Seq[StreamConfig], statePath: String,
               parallelism: Int = 4, attempts: Int = 3,

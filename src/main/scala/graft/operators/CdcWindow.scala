@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** CDC op-type mapping + the insert-dedup window state machine.
@@ -52,16 +52,4 @@ object CdcWindow {
     def restore(persisted: Map[String, Boolean]): DedupState =
       DedupState(persisted)
   }
-
-  /** Attach CDC system columns for one micro-batch of changes.
-    * `kindCol` holds insert/update/delete; op type depends on the window
-    * state for this stream.
-    */
-  def attachCdc(batch: DataFrame, primaryKeys: Seq[String], kindCol: String,
-                cdcTimestamp: Column, dedupInserts: Boolean): DataFrame =
-    batch
-      .withColumn(SystemColumns.OlakeId, SystemColumns.olakeId(batch, primaryKeys))
-      .withColumn(SystemColumns.OpType, opType(col(kindCol), dedupInserts))
-      .withColumn(SystemColumns.CdcTimestamp, cdcTimestamp)
-      .withColumn(SystemColumns.OlakeTimestamp, current_timestamp())
 }

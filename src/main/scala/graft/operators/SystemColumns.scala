@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.BatchConstant
+
 /** The destination system columns every synced row carries.
   *
   * Reference: `drivers/abstract/abstract.go:30-35` (column set),
@@ -59,6 +61,12 @@ object SystemColumns {
     * `cdcTimestamp` is only attached in CDC mode (None ⇒ column omitted,
     * matching the reference where `_cdc_timestamp` exists only for CDC
     * streams).
+    *
+    * The default `_olake_timestamp` of a batch frame is the time `attach`
+    * builds the plan, one value for every row, bound as a
+    * [[graft.functions.BatchConstant]] so each sync reuses the compiled
+    * code of the last. A streaming frame keeps `current_timestamp()`,
+    * which each micro-batch evaluates anew.
     */
   def attach(df: DataFrame,
              primaryKeys: Seq[String],
@@ -69,7 +77,9 @@ object SystemColumns {
       .withColumn(OlakeId, olakeId(df, primaryKeys))
       .withColumn(OpType, lit(opType))
       .withColumn(OlakeTimestamp,
-        ingestTimestamp.getOrElse(current_timestamp()))
+        ingestTimestamp.getOrElse(
+          if (df.isStreaming) current_timestamp()
+          else BatchConstant.of(java.time.Instant.now())))
     cdcTimestamp.fold(base)(c => base.withColumn(CdcTimestamp, c))
   }
 

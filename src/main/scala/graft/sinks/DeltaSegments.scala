@@ -5,6 +5,7 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.BatchConstant
 import graft.operators.{Merge, SystemColumns}
 
 /** Merge-on-read delta-segment table layout — the parquet-sink analog of
@@ -98,7 +99,7 @@ object DeltaSegments {
   def writeSegment(deduped: DataFrame, tablePath: String, batchId: Long,
                    maxOf: Option[String] = None): Option[Long] = {
     val dir = segDir(tablePath, batchId)
-    val seg = deduped.withColumn(SeqCol, lit(batchId))
+    val seg = deduped.withColumn(SeqCol, BatchConstant.of(batchId))
     // decided before the observation is attached: Spark's distinct-key
     // analysis sees nothing below a CollectMetrics node
     val unique = provenKeyUnique(seg)

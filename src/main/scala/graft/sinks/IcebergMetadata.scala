@@ -13,6 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.BatchConstant
+
 /** Iceberg **v2 table-format metadata writer**, from the public table
   * spec (https://iceberg.apache.org/spec/): `vN.metadata.json` +
   * manifest-list Avro + manifest Avro with the spec's field-ids, over
@@ -3044,7 +3046,7 @@ object IcebergMetadata {
               col("_metadata.file_path").as("__fp"),
               col("_metadata.row_index").as("__pos"))
             else cols.fold(raw)(cs => raw.select(cs.map(col): _*))
-          df.withColumn("__seq", lit(seq))
+          df.withColumn("__seq", BatchConstant.of(seq))
         }.reduce(_.unionByName(_, allowMissingColumns = true))
       else {
         // high-commit-count shape: ONE scan, sequence numbers rejoined

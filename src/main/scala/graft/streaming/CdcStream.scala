@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.BatchConstant
 import graft.operators.{CdcWindow, Merge, SystemColumns}
 import graft.sinks.DeltaSegments
 import graft.state.StateStore
@@ -120,9 +121,12 @@ object CdcStream {
     DeltaSegments.recoverSwap(tablePath)
 
     // global replay filter: everything at or below the committed LSN
-    // was already applied — no per-key state needed for this guarantee
+    // was already applied — no per-key state needed for this guarantee.
+    // The bound is a BatchConstant, so the stage compiles once: below it
+    // sit a decode or a JSON change-log scan, neither of which prunes
+    // I/O on it, and a literal would recompile the stage every batch
     val fresh = ss.offsets.get("lsn")
-      .fold(batch)(l => batch.where(col("lsn") > l))
+      .fold(batch)(l => batch.where(col("lsn") > BatchConstant.of(l)))
     val stamped = fresh
       .withColumn(SystemColumns.OpType,
         CdcWindow.opType(col("kind"), dedupInserts = ss.dedupInserts))

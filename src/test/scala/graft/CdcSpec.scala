@@ -588,4 +588,37 @@ class CdcSpec extends AnyFunSuite with BeforeAndAfterAll
     // every event but the deleted ("error") ones is live
     assert(t.size == 267 && !t.exists(_._2 == "error"))
   }
+
+  test("applyBatch with an Iceberg publish: a third batch compiles no " +
+    "generated class (the replay bound and the segment's sequence are " +
+    "references, not source text)") {
+    import graft.sinks.{DeltaSegments, IcebergMetadata}
+    import graft.streaming.CdcStream
+    import spark.implicits._
+    // each batch's events are a local relation: the input itself puts
+    // no per-batch value into generated code
+    def batch(ids: Range): DataFrame = {
+      val ev = ids.map(i => (i.toLong, i % 7L, Seq("view", "purchase",
+        "error")(i % 3), i * 1.5,
+        new java.sql.Timestamp((1700000000L + i) * 1000)))
+        .toDF("event_id", "user_id", "event_type", "value", "ts")
+      PgOutput.decode(ChangeLogFixture.pgoutputLog(ev), "lsn", "msg").select(
+        element_at(col("values"), 1).as("_olake_id"), col("lsn"), col("kind"),
+        timestamp_micros(col("commit_ts_micros")).as("_cdc_timestamp"),
+        element_at(col("values"), 3).as("event_type"))
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft_pgcompile").toString
+    val (table, state, ice) = (s"$tmp/t", s"$tmp/s.json", s"$tmp/ice")
+    val policy = DeltaSegments.CompactionPolicy(maxSegments = 100,
+      maxDeltaRatio = 1e9)
+    def apply(id: Long, ids: Range): Unit = CdcStream.applyBatch(batch(ids),
+      id, table, state, "events", policy, icebergDir = Some(ice))
+    apply(0L, 1 to 200) // bootstrap fold
+    apply(1L, 201 to 300)
+    val (_, compiles) = codegenCompilesOf(apply(2L, 301 to 400))
+    assert(compiles == 0, s"the third batch compiled $compiles classes")
+    val live = IcebergMetadata.readMoR(spark, ice)
+      .select("_olake_id", "event_type").as[(String, String)].collect()
+    assert(live.length == 267 && !live.exists(_._2 == "error"))
+  }
 }

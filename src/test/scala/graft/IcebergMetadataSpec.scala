@@ -3457,6 +3457,42 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(snap(IcebergMetadata.readMoR(spark, ice2)) == want)
   }
 
+  test("readMoR: a read after a further publish compiles no generated " +
+    "class (each file's sequence is a reference, not source text)") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.SystemColumns.{OlakeId, OpType, CdcTimestamp}
+    val table = Files.createTempDirectory("graft_readcg").toString
+    val ice = Files.createTempDirectory("graft_readcgice").toString
+    spark.range(50).select(
+      col("id").cast("string").as(OlakeId), col("id").as("v"))
+      .write.parquet(s"$table/base")
+    def change(ids: Range, op: String) =
+      spark.range(ids.start, ids.end).select(
+        col("id").cast("string").as(OlakeId), (col("id") + 100).as("v"),
+        lit(op).as(OpType), current_timestamp().as(CdcTimestamp))
+    def read() = IcebergMetadata.readMoR(spark, ice).select(OlakeId, "v")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    // each publish follows a compaction, as in a CDC apply's cycle, so
+    // every read sees the compacted base and one segment: one more live
+    // sequence would widen the read's union, which renumbers its
+    // codegen stages and so changes the generated source anyway
+    def publish(seq: Long): Unit = {
+      val lo = (seq.toInt - 1) * 10
+      DeltaSegments.compact(spark, table)
+      DeltaSegments.writeSegment(change(lo until lo + 10, "u")
+        .unionByName(change(lo + 45 until lo + 50, "d")), table, seq)
+      IcebergMetadata.publishMoR(spark, ice, table): Unit
+    }
+    publish(1L)
+    publish(2L)
+    read(): Unit
+    publish(3L)
+    val (rows, compiles) = codegenCompilesOf(read())
+    assert(compiles == 0, s"the read compiled $compiles classes")
+    assert(rows == (0 until 45).map(i =>
+      (i.toString, if (i < 30) i + 100L else i.toLong)).toSet)
+  }
+
   test("publishMoR: a segment that predates an added column publishes " +
     "it typed, so readMoR's one-scan shape merges the data files") {
     import org.apache.spark.sql.functions._

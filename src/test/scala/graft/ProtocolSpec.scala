@@ -11,7 +11,8 @@ import graft.state.StateStore
 
 /** Lifecycle verbs end-to-end: check → discover → sync (backfill, then
   * cursor delta) → clear, all resumable through StateStore. */
-class ProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ProtocolSpec extends AnyFunSuite with BeforeAndAfterAll
+    with SparkJobCounting {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -154,6 +155,18 @@ class ProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
     Protocol.clear(spark, dest, state, Seq("orders"))
     assert(!new java.io.File(s"$dest/orders").exists)
     assert(!StateStore.load(state).get.streams.contains("orders"))
+  }
+
+  test("sync: a second full sync of a stream compiles no generated " +
+    "class (its _olake_timestamp is a reference, not source text)") {
+    val dest = Files.createTempDirectory("graft_sync_codegen").toString
+    val state = s"$dest/state.json"
+    val cfg = Protocol.StreamConfig("nation", primaryKeys = Seq("n_nationkey"))
+    Protocol.syncStream(spark, src, dest, cfg, state): Unit
+    val (rows, compiles) = codegenCompilesOf(
+      Protocol.syncStream(spark, src, dest, cfg, state))
+    assert(rows == 25)
+    assert(compiles == 0, s"the second sync compiled $compiles classes")
   }
 
   test("sync attempt is idempotent: stale staged data is discarded, a committed promote completes once") {

@@ -38,4 +38,15 @@ trait SparkJobCounting { this: Suite =>
       (out, counted.get)
     } finally sc.removeSparkListener(l)
   }
+
+  /** Classes Spark's code generator compiles while `body` runs: the
+    * change in its JVM-wide compile counter, so it holds only while no
+    * other suite runs in the JVM (suites run one at a time). A plan
+    * whose generated source is already cached compiles nothing. */
+  def codegenCompilesOf[T](body: => T): (T, Long) = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val out = body
+    (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+  }
 }
