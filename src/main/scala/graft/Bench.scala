@@ -98,7 +98,7 @@ import org.apache.spark.sql.SparkSession
   *    stream-checkpoint) roundtrips into tempdirs like the other
   *    q_iceberg_* exclusions; the scan paths they exercise are measured
   *    by `ScaleCheck dsv2batch` at 10× rows (incl. the columnar MoR
-  *    leg, ≤1.3× readMoR pinned).
+  *    leg, ≤1.3× readMoR's join algebra pinned).
   *  - q_cdc_binlog_ssh / q_cdc_binlog_tls / q_cdc_pgoutput_tls /
   *    q_cdc_pgoutput_scram_cb / q_cdc_mongo_tls / q_ssl_modes /
   *    q_config_decrypt / q_source_config / q_type_maps /

@@ -3318,12 +3318,12 @@ object SparkEntry {
     //      (equality AND positional deletes) through the DSv2 catalog
     //      — the engine's flagship output queried with no engine API.
     //      The scan serves the merge-on-read ALGEBRA: the tiny delete
-    //      side ships once per executor inside the reader factory
-    //      (readMoR's broadcast premise); each data-file partition
-    //      filters its own rows by (position, key-sequence) — zero
-    //      shuffle, zero driver data flow. Spec-pins: the SQL face
-    //      equals readMoR row-for-row, and manifest-bounds file
-    //      pruning still happens under MoR. ----
+    //      side ships once per executor inside the reader factory;
+    //      each data-file partition filters its own rows by (position,
+    //      key-sequence) — zero shuffle, zero driver data flow.
+    //      Spec-pins: the SQL face equals readMoR's join algebra (an
+    //      independent implementation) row-for-row, and manifest-bounds
+    //      file pruning still happens under MoR. ----
     "q_iceberg_sql_mor" -> ((s, dir) => {
       import graft.operators.SystemColumns
       val n = t(s, dir, "nation")
@@ -3363,14 +3363,14 @@ object SparkEntry {
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.replication.GraftCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-      // spec-pin 1: the SQL face equals the readMoR algebra
+      // spec-pin 1: the SQL face equals the join algebra
       val viaSql = s.sql(
         s"SELECT n_nationkey, n_name FROM $cat.lake.nation_mor")
-      val viaMor = IcebergMetadata.readMoR(s, ice)
+      val viaMor = IcebergMetadata.readMoRAlgebra(s, ice)
         .select("n_nationkey", "n_name")
       require(viaSql.exceptAll(viaMor).isEmpty &&
         viaMor.exceptAll(viaSql).isEmpty,
-        "SQL face diverges from readMoR")
+        "SQL face diverges from readMoR's join algebra")
       // spec-pin 2: manifest-bounds pruning still happens under MoR
       locally {
         import org.apache.spark.sql.sources.GreaterThanOrEqual

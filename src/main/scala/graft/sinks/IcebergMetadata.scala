@@ -13,8 +13,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.BatchConstant
-
 /** Iceberg **v2 table-format metadata writer**, from the public table
   * spec (https://iceberg.apache.org/spec/): `vN.metadata.json` +
   * manifest-list Avro + manifest Avro with the spec's field-ids, over
@@ -1604,8 +1602,8 @@ object IcebergMetadata {
 
   /** EQUALITY-DELETE minor compaction — the cadence op a long CDC run
     * needs between major compacts: every upsert batch adds one
-    * equality-delete file, and each one is a broadcast side in every
-    * [[readMoR]]. Consolidation uses the only rewrite the
+    * equality-delete file, and every [[readMoR]] reads each one.
+    * Consolidation uses the only rewrite the
     * strictly-smaller-sequence rule makes unconditionally safe:
     *
     *  - SUBSUMPTION: a key present in delete files at sequences
@@ -1989,8 +1987,8 @@ object IcebergMetadata {
     * [[binpackRewrite]]/[[sortRewrite]] on it (both refuse
     * delete-bearing trees). History stays time-travelable; the old
     * delete-bearing snapshots reclaim via the usual expire/orphans.
-    * Plan: ONE pass of the [[readMoR]] algebra (delete sides broadcast,
-    * data never shuffled) + a round-robin write exchange. */
+    * Plan: ONE [[readMoR]] pass (data never shuffled) + a round-robin
+    * write exchange. */
   def majorCompactMoR(spark: SparkSession, tableDir: String,
                       targetBytes: Long,
                       keyCol: String =
@@ -2828,7 +2826,7 @@ object IcebergMetadata {
       val segDf = ParquetFooters.read(spark, Seq(seg.getPath))
       // a column the segment predates is null OF THE VIEW'S TYPE: an
       // untyped null would write a VOID parquet column that no later
-      // schema merge (readMoR's one-scan shape) accepts
+      // schema merge (readMoRAlgebra's one scan) accepts
       def projected(df: DataFrame) = df.select(dataCols.map(c =>
         if (df.columns.contains(c)) col(c)
         else lit(null).cast(viewSchema(c).dataType).as(c)): _*)
@@ -2971,126 +2969,128 @@ object IcebergMetadata {
       specs = Some(if (parts.isEmpty) Seq(Nil) else Seq(Nil, parts)))
   } }
 
-  /** Merge-on-read READ from the manifests alone — the v2 algebra an
-    * Iceberg engine runs, both delete flavors:
+  /** Merge-on-read READ of a snapshot (current unless `asOfSnapshotId`
+    * time-travels), both v2 delete flavors: POSITIONAL deletes (content
+    * 1) kill exact (file_path, pos) rows; an EQUALITY delete (content 2)
+    * kills the rows of its key in data files of a STRICTLY smaller
+    * sequence (so an upsert's paired data row lives).
     *
-    *  - POSITIONAL deletes (content 1) name exact (file_path, pos) row
-    *    coordinates — applied first via an anti-join against the data
-    *    rows' own `_metadata` coordinates (they kill the n−1 earlier
-    *    occurrences of an intra-batch dup);
-    *  - EQUALITY deletes (content 2): a surviving data row lives iff no
-    *    equality delete on its key has a STRICTLY greater sequence
-    *    number (a delete never applies to files of its own sequence, so
-    *    the upsert's paired data row lives).
-    *
-    * Plan: per-sequence scans unioned with a literal seq column; both
-    * delete sides are tiny → AQE broadcasts them; the data side is
-    * never shuffled. A long-lived, never-maintained CDC table
-    * accumulates one live sequence per commit and the union plan grows
-    * one scan node per sequence — past `unionSeqLimit` distinct
-    * sequences the read switches to ONE scan plus a broadcast
-    * (file → sequence) map join, so plan WIDTH stays O(1) however long
-    * the commit history (the 10⁴-segment year-long table reads with
-    * the same plan as a 10-commit one; measured in ScaleCheck's
-    * `morseq` tier). */
+    * One reader serves it: the DSv2 batch scan (`graft-iceberg`), which
+    * builds the delete state once on the driver and filters each data
+    * file in its own partition — no shuffle, no join, one plan shape
+    * however many sequences are live. A state the scan cannot hold
+    * ([[scanServes]]), or a `prune`/`partPrune` read (whole-file
+    * skipping: a kept file returns all its rows, which no scan filter
+    * reproduces), reads through [[readMoRAlgebra]]. With equality
+    * deletes live the key column leads, as the algebra's key join
+    * orders it. */
   def readMoR(spark: SparkSession, tableDir: String,
               keyCol: String = graft.operators.SystemColumns.OlakeId,
               asOfSnapshotId: Option[Long] = None,
               prune: Option[(String, Long, Long)] = None,
-              partPrune: Option[(Long, Long)] = None,
-              unionSeqLimit: Int = 64)
+              partPrune: Option[(Long, Long)] = None)
       : DataFrame = {
-    val (dataFiles0, delFiles) = manifestEntries(tableDir, asOfSnapshotId)
-    // partition pruning on a partitioned (multi-spec) table: drop data
-    // files whose FIRST partition-field value falls outside [lo, hi].
-    // Spec-0 files (the unpartitioned base) carry no tuple and are
-    // always kept — that layout predates the spec, which is exactly
-    // why tables partition their ongoing writes. Manifest-LEVEL
-    // skipping (pruneManifests) is the planner's first level; this is
-    // the per-entry second level over the kept manifests.
-    val dataFilesP = partPrune.fold(dataFiles0) { case (lo, hi) =>
-      // the window is expressed in the DEFAULT spec's transform units —
-      // a file of any OTHER spec (the unpartitioned base, or a
-      // pre-evolution day-grain spec when the default is hour-grain)
-      // must never be compared against it: its first field is in
-      // different units. Other-spec files are conservatively kept.
-      val defaultSid = currentMetadata(tableDir)
-        .map(_._2.path("default-spec-id").asInt(0)).getOrElse(0)
-      val keep = dataFileStats(tableDir, asOfSnapshotId)
-        .filter(e => e.content == 0 &&
+    val stats = dataFileStats(tableDir, asOfSnapshotId)
+    if (prune.nonEmpty || partPrune.nonEmpty ||
+        !scanServes(tableDir, stats, keyCol))
+      return readMoRAlgebra(spark, tableDir, keyCol, asOfSnapshotId, prune,
+        partPrune)
+    val reader = spark.read.format("graft-iceberg")
+    val df = asOfSnapshotId.fold(reader)(id =>
+      reader.option("asOfSnapshot", id)).load(tableDir)
+    if (!stats.exists(_.content == 2)) df
+    else df.select((keyCol +: df.columns.filterNot(_ == keyCol))
+      .map(c => df.col("`" + c.replace("`", "``") + "`")): _*)
+  }
+
+  /** Whether the DSv2 scan serves this snapshot, from its manifest
+    * entries alone: at most `MorPlan.MaxDeleteRows` delete rows, and
+    * equality deletes keyed on `keyCol` alone, of a type the scan's key
+    * canonicalization encodes (string, integral, boolean). */
+  private def scanServes(tableDir: String, stats: Seq[DataFileStat],
+                         keyCol: String): Boolean = {
+    import graft.sources.replication.MorPlan
+    val dels = stats.filter(_.content != 0)
+    val eqIds = dels.filter(_.content == 2).map(_.equalityIds).distinct
+    dels.map(_.recordCount).sum <= MorPlan.MaxDeleteRows && (eqIds.isEmpty ||
+      eqIds == Seq(currentFieldIds(tableDir).get(keyCol).toSeq) &&
+        currentSparkSchema(tableDir).find(_.name == keyCol)
+          .exists(f => MorPlan.canonKeyType(f.dataType)))
+  }
+
+  /** The merge-on-read algebra as DataFrame joins: [[readMoR]]'s reader
+    * for the delete states the DSv2 scan cannot hold, and the
+    * independent implementation the scan is cross-checked against.
+    * Each side is ONE parquet scan whose rows take their file's sequence
+    * from a broadcast (file → sequence) map, so the plan's width does
+    * not grow with the live sequences (ScaleCheck `morseq`). Positional
+    * deletes apply by a broadcast anti-join on `_metadata` coordinates,
+    * equality deletes by a join on `keyCol`; the data never shuffles.
+    * `partPrune` skips data files whose first partition value (in the
+    * default spec's units) is outside [lo, hi], `prune` those whose
+    * manifest bounds on a column cannot overlap [lo, hi]; delete files
+    * are never skipped. */
+  private[graft] def readMoRAlgebra(spark: SparkSession, tableDir: String,
+      keyCol: String = graft.operators.SystemColumns.OlakeId,
+      asOfSnapshotId: Option[Long] = None,
+      prune: Option[(String, Long, Long)] = None,
+      partPrune: Option[(Long, Long)] = None): DataFrame = {
+    val stats = dataFileStats(tableDir, asOfSnapshotId)
+    // spec-0 files (no tuple) and other-spec files (other units) are kept
+    val dataFilesP = partPrune.fold(stats.filter(_.content == 0)) {
+      case (lo, hi) =>
+        val defaultSid = currentMetadata(tableDir)
+          .map(_._2.path("default-spec-id").asInt(0)).getOrElse(0)
+        stats.filter(e => e.content == 0 &&
           (e.specId != defaultSid || (e.partition.headOption match {
             case Some(i: Int) => i >= lo && i <= hi
             case Some(l: Long) => l >= lo && l <= hi
             case _ => true
-          }))).map(_.path).toSet
-      dataFiles0.filter(f => keep.contains(f._1))
+          })))
     }
-    // manifest-stats file skipping: drop data files whose column bounds
-    // cannot overlap the predicate — the scan-planning step that keeps
-    // a 100 TB table from full-scanning every query. Delete files are
-    // never pruned (a kept data file's deletes must all apply).
     val dataFiles = prune.fold(dataFilesP) { case (c, lo, hi) =>
       val keep = pruneDataFiles(tableDir, c, lo, hi, asOfSnapshotId).toSet
-      dataFilesP.filter(f => keep.contains(f._1))
+      dataFilesP.filter(f => keep.contains(f.path))
     }
-    val eqFiles = delFiles.collect { case (p, s, 2) => (p, s) }
-    val posFiles = delFiles.collect { case (p, s, 1) => (p, s) }
-    def bySeq(files: Seq[(String, Long)], cols: Option[Seq[String]],
-              withPos: Boolean = false) = {
-      val perSeq = files.groupBy(_._2).toSeq
-      if (perSeq.size <= unionSeqLimit)
-        perSeq.map { case (seq, fs) =>
-          val raw = ParquetFooters.read(spark, fs.map(_._1))
-          val df =
-            if (withPos) raw.select(col("*"),
-              col("_metadata.file_path").as("__fp"),
-              col("_metadata.row_index").as("__pos"))
-            else cols.fold(raw)(cs => raw.select(cs.map(col): _*))
-          df.withColumn("__seq", BatchConstant.of(seq))
-        }.reduce(_.unionByName(_, allowMissingColumns = true))
-      else {
-        // high-commit-count shape: ONE scan, sequence numbers rejoined
-        // from a broadcast map keyed on the file path. Manifest paths
-        // and `_metadata.file_path` render the scheme differently
-        // ("/x" vs "file:///x"), so both sides normalize to the path
-        // part before joining. mergeSchema reproduces the union path's
-        // allowMissingColumns semantics across evolved commits.
-        import spark.implicits._
-        val seqMap = broadcast(files
-          .map { case (p, s) => (p.replaceFirst(SchemeRe, "/"), s) }
-          .toDF("__fpn", "__seq"))
-        val raw = ParquetFooters.read(spark, files.map(_._1), merge = true)
-        val baseCols = cols.map(_.map(col)).getOrElse(Seq(col("*")))
-        val metaCols =
-          Seq(regexp_replace(col("_metadata.file_path"),
-            SchemeRe, "/").as("__fpn")) ++
-          (if (withPos)
-            Seq(col("_metadata.file_path").as("__fp"),
-              col("_metadata.row_index").as("__pos"))
-          else Nil)
-        // LEFT join + loud failure: a normalization miss (an exotic
-        // path rendering the two sides disagree on) must error, never
-        // silently drop every row of that file — an inner join here
-        // is results-change-with-commit-count data loss
-        raw.select(baseCols ++ metaCols: _*)
-          .join(seqMap, Seq("__fpn"), "left")
-          .withColumn("__seq", coalesce(col("__seq"), raise_error(
-            concat(lit("readMoR: no manifest sequence for data file "),
-              col("__fpn"))).cast("long")))
-          .drop("__fpn")
-      }
+    val eqFiles = stats.filter(_.content == 2)
+    val posFiles = stats.filter(_.content == 1)
+    // manifest paths and `_metadata.file_path` render the scheme
+    // differently ("/x" vs "file:///x"): the sequence join normalizes
+    def scan(files: Seq[DataFileStat], cols: Option[Seq[String]],
+             withSeq: Boolean, withPos: Boolean): DataFrame = {
+      val raw = ParquetFooters.read(spark, files.map(_.path), merge = true)
+      val picked = cols.fold(Seq(col("*")))(_.map(col)) ++
+        (if (withPos) Seq(col("_metadata.file_path").as("__fp"),
+          col("_metadata.row_index").as("__pos")) else Nil)
+      if (!withSeq) return raw.select(picked: _*)
+      import spark.implicits._
+      val seqMap = broadcast(files
+        .map(f => (f.path.replaceFirst(SchemeRe, "/"), f.seq))
+        .toDF("__fpn", "__seq"))
+      // LEFT join + loud failure: a normalization miss must error, never
+      // silently drop every row of that file
+      raw.select(picked :+
+          regexp_replace(col("_metadata.file_path"), SchemeRe, "/")
+            .as("__fpn"): _*)
+        .join(seqMap, Seq("__fpn"), "left")
+        .withColumn("__seq", coalesce(col("__seq"), raise_error(
+          concat(lit("readMoR: no manifest sequence for data file "),
+            col("__fpn"))).cast("long")))
+        .drop("__fpn")
     }
-    val data0 = bySeq(dataFiles, None, withPos = posFiles.nonEmpty)
+    val data0 = scan(dataFiles, None, withSeq = eqFiles.nonEmpty,
+      withPos = posFiles.nonEmpty)
     val data =
       if (posFiles.isEmpty) data0
       else {
-        val pd = ParquetFooters.read(spark, posFiles.map(_._1))
+        val pd = ParquetFooters.read(spark, posFiles.map(_.path))
           .select(col("file_path").as("__fp"), col("pos").as("__pos"))
         data0.join(pd, Seq("__fp", "__pos"), "left_anti")
           .drop("__fp", "__pos")
       }
-    if (eqFiles.isEmpty) return data.drop("__seq")
-    val dels = bySeq(eqFiles, Some(Seq(keyCol)))
+    if (eqFiles.isEmpty) return data
+    val dels = scan(eqFiles, Some(Seq(keyCol)), withSeq = true,
+        withPos = false)
       .groupBy(keyCol).agg(max(col("__seq")).as("__del_seq"))
     data.join(dels, Seq(keyCol), "left")
       .where(col("__del_seq").isNull || col("__seq") >= col("__del_seq"))
@@ -4197,8 +4197,7 @@ object IcebergMetadata {
     // `unionSnapLimit` snapshots each becomes its own tagged scan,
     // above it ALL append files read as ONE scan with the tags
     // rejoined from a broadcast map — plan WIDTH stays O(overwrites
-    // + 1) however long the tail (same shape as readMoR's
-    // high-commit-count path)
+    // + 1) however long the tail (same shape as readMoRAlgebra)
     val appendAdds =
       scala.collection.mutable.ArrayBuffer.empty[(String, Int, Long)]
     val parts = range.zipWithIndex.flatMap { case (s, i) =>
@@ -4273,7 +4272,7 @@ object IcebergMetadata {
         val tags = appendAdds.toSeq
           .map { case (p, o, i) => (p.replaceFirst(SchemeRe, "/"), o, i) }
           .toDF("__fpn", "change_ordinal", "commit_snapshot_id")
-        // LEFT join + loud failure, same guard as readMoR's seqMap
+        // LEFT join + loud failure, same guard as readMoRAlgebra's seqMap
         // join: a normalization miss must error, never silently drop
         // every row of that file
         Seq(ParquetFooters.read(spark, appendAdds.map(_._1).toSeq, merge = true)

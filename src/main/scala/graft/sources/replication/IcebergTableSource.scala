@@ -440,8 +440,7 @@ class IcebergStreamScan(tableDir: String, tableSchema: StructType,
     *
     * A table with LIVE delete files serves the merge-on-read ALGEBRA,
     * not a raw file scan (which would resurrect deleted rows): the
-    * delete side — tiny next to the data it guards, the same premise
-    * [[IcebergMetadata.readMoR]] broadcasts it on — is read ONCE at
+    * delete side — tiny next to the data it guards — is read ONCE at
     * plan time and shipped to executors in the reader factory (one
     * copy per executor via the task binary broadcast); each data-file
     * partition then filters its own rows by (position, equality-key
@@ -588,8 +587,8 @@ class IcebergBatchScan(tableDir: String, tableSchema: StructType,
       // the delete state ships as a REAL Spark broadcast: a task
       // binary is deserialized PER TASK, so embedding the map there
       // would rebuild a delete-sized structure for every file
-      // partition — the broadcast deserializes once per executor
-      // (readMoR's cost model), [[MorShared]] caches the built probe
+      // partition — the broadcast deserializes once per executor,
+      // [[MorShared]] caches the built probe
       // maps so tasks share them too, and the broadcast itself is
       // REUSED across queries over the same delete state (keyed by
       // the immutable delete-file set) so repeated plans never
@@ -977,27 +976,30 @@ case class IcebergFilePartition(path: String,
 /** The broadcast-sized MoR delete state shipped once per executor in
   * the reader factory (DSv2 serializes the factory into the task
   * binary, which Spark broadcasts): equality-key → max delete
-  * sequence, per state id. Same premise as
-  * [[IcebergMetadata.readMoR]]'s broadcast delete side — tiny next to
-  * the data it guards; [[MorPlan]] refuses past a row cap rather than
-  * ship an unbounded map. */
+  * sequence, per state id. The delete side is tiny next to the data it
+  * guards; [[MorPlan]] refuses past a row cap rather than ship an
+  * unbounded map. */
 case class MorSpec(keyFields: Seq[(String, DataType)],
                    eqStates: Map[Long, Map[String, Long]])
 
 /** Driver-side MoR planning: read the (small) delete files once,
   * canonicalize equality keys, build the per-file position sets. */
-private[replication] object MorPlan {
+private[graft] object MorPlan {
   import graft.sinks.IcebergMetadata.DataFileStat
 
   /** (column names, rows) of one delete parquet file. */
   type DeleteRows = (Seq[String], Seq[Array[Any]])
   type Cache = mutable.Map[String, DeleteRows]
 
-  /** Ship-to-executor cap: past this many delete rows the right read
-    * is [[IcebergMetadata.readMoR]] (whose broadcast the planner
-    * sizes) after `maintain` compaction — refuse loudly rather than
-    * serialize an unbounded map into every task binary. */
+  /** Ship-to-executor cap: past this many delete rows the scan refuses
+    * loudly rather than serialize an unbounded map into every task
+    * binary ([[IcebergMetadata.readMoR]] reads such a state through its
+    * join algebra). */
   val MaxDeleteRows = 5000000
+
+  /** Where a state this scan refuses is read instead. */
+  private val Refused =
+    " — IcebergMetadata.readMoR serves such a table through its join algebra"
 
   def norm(p: String): String =
     p.replaceFirst(IcebergMetadata.SchemeRe, "/")
@@ -1029,11 +1031,18 @@ private[replication] object MorPlan {
     case b: Boolean => "b:" + b
     case other => throw new UnsupportedOperationException(
       "equality-delete key type not supported for DSv2 MoR reads: " +
-        other.getClass.getName + " — read through IcebergMetadata.readMoR")
+        other.getClass.getName + Refused)
   }
 
-  /** Read one delete parquet file entirely on the DRIVER — the same
-    * cost model as readMoR, which broadcasts the delete side. Delete
+  /** The key types [[canon]] encodes. */
+  def canonKeyType(dt: DataType): Boolean = dt match {
+    case StringType | LongType | IntegerType | ShortType | ByteType |
+         BooleanType => true
+    case _ => false
+  }
+
+  /** Read one delete parquet file entirely on the DRIVER — delete
+    * files are tiny next to the data they guard. Delete
     * files are engine-written and flat: string/integral key columns
     * (equality) or (file_path, pos) coordinates (positional).
     *
@@ -1110,8 +1119,7 @@ private[replication] object MorPlan {
     if (eqFiles.isEmpty) return EqState(Nil, Map.empty)
     val idSets = eqFiles.map(_.equalityIds).distinct
     require(idSets.size == 1,
-      s"mixed equality-delete key sets at $tableDir: $idSets — read " +
-        "through IcebergMetadata.readMoR")
+      s"mixed equality-delete key sets at $tableDir: $idSets" + Refused)
     val byId = IcebergMetadata.currentFieldIds(tableDir).map(_.swap)
     val keyNames = idSets.head.map(id => byId.getOrElse(id,
       throw new IllegalStateException(
@@ -1126,8 +1134,8 @@ private[replication] object MorPlan {
       require(idx.forall(_ >= 0),
         s"equality-delete file ${f.path} lacks key columns $keyNames")
       require(byKey.size + rows.size <= MaxDeleteRows,
-        s"over $MaxDeleteRows live equality-delete rows at $tableDir — " +
-          "run maintain (compaction) or read through readMoR")
+        s"over $MaxDeleteRows live equality-delete rows at $tableDir " +
+          "(maintain compaction folds them)" + Refused)
       rows.foreach { r =>
         val k = idx.map(i => canon(r(i))).mkString("\u0000")
         val cur = byKey.getOrElse(k, Long.MinValue)
@@ -1154,8 +1162,8 @@ private[replication] object MorPlan {
         s"positional-delete file ${f.path} lacks (file_path, pos)")
       total += rows.size
       require(total <= MaxDeleteRows,
-        s"over $MaxDeleteRows live positional-delete rows — run " +
-          "maintain (compaction) or read through readMoR")
+        s"over $MaxDeleteRows live positional-delete rows " +
+          "(maintain compaction folds them)" + Refused)
       rows.foreach { r =>
         m.getOrElseUpdate(norm(r(fp).asInstanceOf[String]),
           mutable.ArrayBuffer.empty[Long]) += r(pp).asInstanceOf[Long]

@@ -117,7 +117,19 @@ object CdcStream {
     val st = StateStore.load(statePath).getOrElse(StateStore.State())
     val ss = st.streams.getOrElse(stream, StateStore.StreamState())
     val lastBatch = ss.offsets.getOrElse("batchId", Long.MinValue)
-    if (batchId <= lastBatch) return // replayed batch: already applied
+    if (batchId <= lastBatch) { // replayed batch: already applied
+      // a crash between the state commit and the publish left the
+      // table's olake_2pc batchId behind the state's: publish now
+      icebergDir.filter(d => graft.sinks.IcebergMetadata.commitState(d)
+          .forall(j => new com.fasterxml.jackson.databind.ObjectMapper()
+            .readTree(j).path("batchId").asLong(Long.MinValue) < lastBatch))
+        .foreach { dir =>
+          DeltaSegments.recoverSwap(tablePath)
+          publish(spark, dir, tablePath, stream, lastBatch,
+            ss.offsets.get("lsn"), ss.dedupInserts, partitionRegex)
+        }
+      return
+    }
     DeltaSegments.recoverSwap(tablePath)
 
     // global replay filter: everything at or below the committed LSN
@@ -164,19 +176,8 @@ object CdcStream {
     // Publish cost is O(current delta set), bounded by the compaction
     // policy, not O(base).
     icebergDir.foreach { dir =>
-      // the summary mirrors the committed StreamState — position plus
-      // the insert-dedup-window flag, like the reference's
-      // MetadataState JSON {id, state, dedup_inserts}
-      // (types/metadata_state.go:9-16) riding the table metadata
-      val lsnPart = maxLsn.map(l => s""","lsn":$l""").getOrElse("")
-      val stateJson = s"""{"stream":"$stream","batchId":$batchId$lsnPart""" +
-        s""","dedup_inserts":${committed.dedupInserts}}"""
-      // partitionRegex (the reference's per-stream `partition_regex`,
-      // iceberg.go:521-545) publishes the segments day/bucket/…-
-      // partitioned under a spec-1 layout with manifest summaries
-      graft.sinks.IcebergMetadata.publishMoR(spark, dir, tablePath,
-        summary = Map("olake_2pc" -> stateJson),
-        partitionRegex = partitionRegex)
+      publish(spark, dir, tablePath, stream, batchId, maxLsn,
+        committed.dedupInserts, partitionRegex)
       // LIVE TABLE SERVICE (production runs maintenance on a cadence,
       // not as an out-of-band CLI): every `maintainEvery` committed
       // batches the composed autoMaintain pass runs against the
@@ -194,6 +195,23 @@ object CdcStream {
           summary = fence.map("olake_2pc" -> _).toMap): Unit
       }
     }
+  }
+
+  /** Publish `tablePath` as `dir`'s next MoR snapshot. Its `olake_2pc`
+    * summary mirrors the committed StreamState, like the reference's
+    * MetadataState JSON {id, state, dedup_inserts}
+    * (types/metadata_state.go:9-16); `partitionRegex` is the reference's
+    * per-stream `partition_regex` (iceberg.go:521-545). */
+  private def publish(spark: SparkSession, dir: String, tablePath: String,
+                      stream: String, batchId: Long, lsn: Option[Long],
+                      dedupInserts: Boolean,
+                      partitionRegex: Option[String]): Unit = {
+    val lsnPart = lsn.map(l => s""","lsn":$l""").getOrElse("")
+    val stateJson = s"""{"stream":"$stream","batchId":$batchId$lsnPart""" +
+      s""","dedup_inserts":$dedupInserts}"""
+    graft.sinks.IcebergMetadata.publishMoR(spark, dir, tablePath,
+      summary = Map("olake_2pc" -> stateJson),
+      partitionRegex = partitionRegex): Unit
   }
 
   /** The merged (merge-on-read) view of a CDC table. */

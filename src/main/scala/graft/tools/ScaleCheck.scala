@@ -152,9 +152,9 @@ object ScaleCheck {
         f"DSv2 batch face exceeds 1.5x native: dsv2=${dsv2 / native}%.2f" +
           f" sql=${viaSql / native}%.2f")
       // MoR leg: a delete-bearing replica — the DSv2 scan (vectorized
-      // decode + per-row delete filter, no shuffle) vs readMoR (the
-      // broadcast-join plan). Both are legitimate MoR reads; the DSv2
-      // face must stay in the same band, not an order off.
+      // decode + per-row delete filter, no shuffle) vs readMoR's join
+      // algebra (broadcast joins). The scan must stay in the algebra's
+      // band, not an order off.
       locally {
         import graft.operators.SystemColumns.{OlakeId, OpType, CdcTimestamp}
         val morT = s"$tmp/mor_t"; val morI = s"$tmp/lake/lineitem_mor"
@@ -176,18 +176,18 @@ object ScaleCheck {
               .withColumn(CdcTimestamp, current_timestamp())),
           morT, 1L)
         IcebergMetadata.publishMoR(spark, morI, morT): Unit
-        val morNative = t2("readMoR full-agg") {
-          agg(IcebergMetadata.readMoR(spark, morI)
+        val morNative = t2("readMoRAlgebra full-agg") {
+          agg(IcebergMetadata.readMoRAlgebra(spark, morI)
             .select("l_quantity")) }
         val morDsv2 = t2("DSv2 MoR full-agg") {
           spark.sql("SELECT sum(l_quantity), count(1) " +
             "FROM gsc.lake.lineitem_mor").collect() }
-        println(f"dsv2batch MoR ratio dsv2/readMoR=" +
+        println(f"dsv2batch MoR ratio dsv2/readMoRAlgebra=" +
           f"${morDsv2 / morNative}%.2f")
         // r17: the MoR scan is COLUMNAR (row-id-mapped vectors) — it
-        // must stay in readMoR's band, not the old 1.7-1.8x row path
+        // must stay in the algebra's band, not the old 1.7-1.8x row path
         require(morDsv2 <= morNative * 1.3,
-          f"DSv2 MoR scan exceeds 1.3x readMoR: " +
+          f"DSv2 MoR scan exceeds 1.3x readMoRAlgebra: " +
             f"${morDsv2 / morNative}%.2f")
       }
       spark.stop(); return
@@ -574,22 +574,22 @@ object ScaleCheck {
     // exchange + per-file local sort — ~linear in table bytes. ----
     // ---- readMoR AT HIGH COMMIT COUNT (`ScaleCheck morseq`): a
     // never-maintained CDC table accumulates one live sequence per
-    // commit; the union-per-sequence plan grows one scan node per
-    // commit. Claim under test: past the unionSeqLimit the single-
-    // scan + broadcast-(file→seq)-map plan keeps PLANNING wall ~flat
-    // in sequence count (reads stay file-count-linear, never
-    // plan-width-superlinear). Table build uses one Spark write + raw
-    // file copies so the tier measures the read, not the build. ----
+    // commit. Claim under test: neither readMoR's DSv2 scan nor its
+    // join algebra (one scan per side + a broadcast (file→seq) map)
+    // plans slower than file-count-linear. One equality delete over
+    // every sequence keeps both on their merge-on-read plans. Table
+    // build uses one Spark write + raw file copies so the tier measures
+    // the read, not the build. ----
     if (args.headOption.contains("morseq")) {
       import graft.sinks.IcebergMetadata
+      import graft.operators.SystemColumns.OlakeId
       def timeR[A](label: String)(f: => A): Double = {
         val t0 = System.nanoTime(); f
         val s = (System.nanoTime() - t0) / 1e9
         println(f"$label: $s%.2f s"); s
       }
       val nat = Tables.load(spark, base, "nation")
-        .select(col("n_nationkey").cast("string")
-          .as(graft.operators.SystemColumns.OlakeId), col("n_name"))
+        .select(col("n_nationkey").cast("string").as(OlakeId), col("n_name"))
       def mkSeqTable(n: Int): String = {
         val tmp = java.nio.file.Files
           .createTempDirectory(s"scmor$n").toString
@@ -603,37 +603,40 @@ object ScaleCheck {
             new java.io.File(d, part.getName).toPath)
           IcebergMetadata.appendCommit(spark, tmp, s"$tmp/d$i"): Unit
         }
+        nat.where(col(OlakeId) === "0").select(OlakeId).coalesce(1)
+          .write.parquet(s"$tmp/del")
+        IcebergMetadata.rowDeltaCommitStaged(spark, tmp, None, None,
+          Some(s"$tmp/del"), None, deleteContent = 2,
+          equalityIds = Seq(IcebergMetadata.currentFieldId(tmp, OlakeId)))
         tmp
       }
       var dir100 = ""; var dir1000 = ""
       timeR("build 100-sequence table") { dir100 = mkSeqTable(100) }
       timeR("build 1000-sequence table") { dir1000 = mkSeqTable(1000) }
+      val readers = Seq[(String, String => DataFrame)](
+        "readMoR (DSv2 scan)" -> (d => IcebergMetadata.readMoR(spark, d)),
+        "readMoRAlgebra" -> (d => IcebergMetadata.readMoRAlgebra(spark, d)))
+      def drain(df: DataFrame): Unit =
+        df.write.format("noop").mode("overwrite").save()
       // warm pass (codegen/JIT) off-clock
-      IcebergMetadata.readMoR(spark, dir100).count(): Unit
-      def planWall(dir: String, limit: Int): Double = {
+      readers.foreach { case (_, r) => drain(r(dir100)) }
+      def planWall(df: => DataFrame): Double = {
         val t0 = System.nanoTime()
-        IcebergMetadata.readMoR(spark, dir, unionSeqLimit = limit)
-          .queryExecution.executedPlan: Unit
+        df.queryExecution.executedPlan: Unit
         (System.nanoTime() - t0) / 1e9
       }
-      val pUnion100 = timeR("plan wall, 100 seqs, union path") {
-        planWall(dir100, Int.MaxValue) }
-      val pMap100 = timeR("plan wall, 100 seqs, broadcast-map path") {
-        planWall(dir100, 64) }
-      val pMap1000 = timeR("plan wall, 1000 seqs, broadcast-map path") {
-        planWall(dir1000, 64) }
-      val pUnion1000 = timeR("plan wall, 1000 seqs, union path") {
-        planWall(dir1000, Int.MaxValue) }
-      println(f"union plan growth 100→1000 seqs: " +
-        f"${pUnion1000 / pUnion100}%.1f× (superlinear = the hazard)")
-      println(f"broadcast-map plan growth 100→1000 seqs: " +
-        f"${pMap1000 / pMap100}%.1f× (~flat = the claim)")
-      println(f"broadcast-map vs union at 1000 seqs: " +
-        f"${pUnion1000 / pMap1000}%.1f× faster planning")
-      val cMap = timeR("full read (count), 1000 seqs, broadcast-map") {
-        IcebergMetadata.readMoR(spark, dir1000).count() }
-      println(f"rows: ${nat.count() * 1000} expected; " +
-        f"read wall $cMap%.2f s (file-count-linear scan)")
+      val want = (nat.count() - 1) * 1000
+      readers.foreach { case (name, r) =>
+        val p100 = timeR(s"plan wall, 100 seqs, $name") {
+          planWall(r(dir100)) }
+        val p1000 = timeR(s"plan wall, 1000 seqs, $name") {
+          planWall(r(dir1000)) }
+        println(f"$name plan growth 100→1000 seqs: ${p1000 / p100}%.1f×")
+        timeR(s"full read (noop drain), 1000 seqs, $name") {
+          drain(r(dir1000)) }
+        val rows = r(dir1000).count()
+        require(rows == want, s"$name: $rows rows, expected $want")
+      }
       spark.stop()
       return
     }

@@ -2823,8 +2823,8 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll
     } finally srv.close()
   }
 
-  test("readMoR high-commit-count path: the single-scan + broadcast " +
-       "(file→seq) map plan resolves the SAME rows as the union plan") {
+  test("readMoR's join algebra at high commit count: one scan per side " +
+       "plus a broadcast (file→seq) map, the SAME rows as the DSv2 scan") {
     import org.apache.spark.sql.functions._
     import graft.operators.SystemColumns.{OlakeId, OpType, CdcTimestamp}
     val table = Files.createTempDirectory("graft_morseq_t").toString
@@ -2850,18 +2850,17 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll
         current_timestamp().as(CdcTimestamp), col("id").as("lsn")),
       table, 3L)
     IcebergMetadata.publishMoR(spark, ice, table): Unit
-    def rowsOf(limit: Int) =
-      IcebergMetadata.readMoR(spark, ice, unionSeqLimit = limit)
-        .select(col(OlakeId), col("v")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
-    val viaUnion = rowsOf(Int.MaxValue)
-    val viaMap = rowsOf(1) // force the broadcast-map plan
-    assert(viaMap == viaUnion)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df
+      .select(col(OlakeId), col("v")).collect()
+      .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
+    val viaScan = rowsOf(spark.read.format("graft-iceberg").load(ice))
+    val viaMap = rowsOf(IcebergMetadata.readMoRAlgebra(spark, ice))
+    assert(viaMap == viaScan)
     assert(viaMap.toMap.apply("0") == 100L)
     assert(viaMap.toMap.apply("22") == 222L)
     assert(!viaMap.exists(_._1 == "23"))
     // the plan claim itself: ONE parquet scan node, not one per seq
-    val plan = IcebergMetadata.readMoR(spark, ice, unionSeqLimit = 1)
+    val plan = IcebergMetadata.readMoRAlgebra(spark, ice)
       .queryExecution.optimizedPlan
     val scans = plan.collect {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
@@ -2870,6 +2869,54 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll
     // data single-scan + eq-delete single-scan + pos-delete side +
     // broadcast maps (local relations) — far below one-per-sequence
     assert(scans.size <= 6, s"plan width grew with commits: ${scans.size}")
+  }
+
+  test("readMoR reads through its join algebra every delete state the " +
+    "DSv2 scan cannot hold: a decimal key, a key that is not the " +
+    "equality field, mixed equality-id sets") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    import graft.operators.SystemColumns.OlakeId
+    def rowsOf(ids: org.apache.spark.sql.Column) = spark.range(10).where(ids).select(
+      col("id").cast("string").as(OlakeId), col("id").as("k"),
+      (col("id") / 4).cast("decimal(10,2)").as("amt")).coalesce(1)
+    def table(): String = {
+      val dir = Files.createTempDirectory("graft_morroute").toString
+      rowsOf(lit(true)).write.parquet(s"$dir/d0")
+      IcebergMetadata.commit(spark, s"$dir/ice", s"$dir/d0"): Unit
+      dir
+    }
+    // one equality-delete file keyed on `on`; it carries every column,
+    // so whichever key the algebra joins on is present
+    def deletes(dir: String, ids: Seq[Long], on: String): Unit = {
+      val d = Files.createTempDirectory(java.nio.file.Paths.get(dir), "del").toString
+      rowsOf(col("id").isin(ids: _*)).write.mode("overwrite").parquet(d)
+      IcebergMetadata.rowDeltaCommitStaged(spark, s"$dir/ice", None, None,
+        Some(d), None, deleteContent = 2,
+        equalityIds = Seq(IcebergMetadata.currentFieldIds(s"$dir/ice")(on)))
+        : Unit
+    }
+    def read(dir: String, keyCol: String = OlakeId) = {
+      val df = IcebergMetadata.readMoR(spark, s"$dir/ice", keyCol)
+      val scanned = df.queryExecution.optimizedPlan.collect {
+        case r: DataSourceV2ScanRelation => r }.nonEmpty
+      (scanned, df.select(OlakeId).collect().map(_.getString(0)).toSet)
+    }
+    def live(dead: Long*) =
+      (0L until 10L).filterNot(dead.contains).map(_.toString).toSet
+    // control: string equality key, the scan serves it
+    val fits = table(); deletes(fits, Seq(1L), OlakeId)
+    assert(read(fits) == ((true, live(1L))))
+    // a decimal key: the scan's key canonicalization refuses it
+    val dec = table(); deletes(dec, Seq(2L, 3L), "amt")
+    assert(read(dec, keyCol = "amt") == ((false, live(2L, 3L))))
+    // the equality field is `k`, the read is keyed on `_olake_id`
+    val other = table(); deletes(other, Seq(4L), "k")
+    assert(read(other) == ((false, live(4L))))
+    // two equality-id sets
+    val mixed = table()
+    deletes(mixed, Seq(5L), OlakeId); deletes(mixed, Seq(6L), "k")
+    assert(read(mixed) == ((false, live(5L, 6L))))
   }
 
   test("partition spec evolution day→hour: metadata-only commit, new " +
@@ -3457,8 +3504,9 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(snap(IcebergMetadata.readMoR(spark, ice2)) == want)
   }
 
-  test("readMoR: a read after a further publish compiles no generated " +
-    "class (each file's sequence is a reference, not source text)") {
+  test("readMoR: reads after further publishes compile no generated " +
+    "class, whether a publish follows a compaction or adds a live " +
+    "sequence") {
     import org.apache.spark.sql.functions._
     import graft.operators.SystemColumns.{OlakeId, OpType, CdcTimestamp}
     val table = Files.createTempDirectory("graft_readcg").toString
@@ -3470,27 +3518,34 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll
       spark.range(ids.start, ids.end).select(
         col("id").cast("string").as(OlakeId), (col("id") + 100).as("v"),
         lit(op).as(OpType), current_timestamp().as(CdcTimestamp))
-    def read() = IcebergMetadata.readMoR(spark, ice).select(OlakeId, "v")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select(OlakeId, "v")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    // each publish follows a compaction, as in a CDC apply's cycle, so
-    // every read sees the compacted base and one segment: one more live
-    // sequence would widen the read's union, which renumbers its
-    // codegen stages and so changes the generated source anyway
-    def publish(seq: Long): Unit = {
+    def read() = rows(IcebergMetadata.readMoR(spark, ice))
+    def liveSeqs() = IcebergMetadata.dataFileStats(ice)
+      .filter(_.content == 0).map(_.seq).distinct.size
+    // a publish after a compaction reads the compacted base and one
+    // segment; one without adds a live sequence to the read
+    def publish(seq: Long, compact: Boolean): Unit = {
       val lo = (seq.toInt - 1) * 10
-      DeltaSegments.compact(spark, table)
+      if (compact) DeltaSegments.compact(spark, table)
       DeltaSegments.writeSegment(change(lo until lo + 10, "u")
         .unionByName(change(lo + 45 until lo + 50, "d")), table, seq)
       IcebergMetadata.publishMoR(spark, ice, table): Unit
     }
-    publish(1L)
-    publish(2L)
+    publish(1L, compact = true)
+    publish(2L, compact = true)
     read(): Unit
-    publish(3L)
-    val (rows, compiles) = codegenCompilesOf(read())
-    assert(compiles == 0, s"the read compiled $compiles classes")
-    assert(rows == (0 until 45).map(i =>
-      (i.toString, if (i < 30) i + 100L else i.toLong)).toSet)
+    val seqsAfter = Seq(3L -> true, 4L -> false, 5L -> false).map {
+      case (seq, compact) =>
+        publish(seq, compact)
+        val want = rows(DeltaSegments.read(spark, table))
+        val (got, compiles) = codegenCompilesOf(read())
+        assert(compiles == 0,
+          s"the read after publish $seq compiled $compiles classes")
+        assert(got == want, s"publish $seq")
+        liveSeqs()
+    }
+    assert(seqsAfter == Seq(2, 3, 4), s"live sequences: $seqsAfter")
   }
 
   test("publishMoR: a segment that predates an added column publishes " +
@@ -3513,7 +3568,7 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll
       .select(OlakeId, "v", "note").collect()
       .map(r => (r.getString(0), r.getLong(1), Option(r.getString(2)))).toSet
     // every column of every row: the scan, not just the plan, must work
-    val oneScan = IcebergMetadata.readMoR(spark, ice, unionSeqLimit = 1)
+    val oneScan = IcebergMetadata.readMoRAlgebra(spark, ice)
     assert(snap(oneScan) == snap(DeltaSegments.read(spark, table)))
     assert(snap(oneScan).collect { case (k, _, Some("n")) => k } == Set("2", "3"))
   }
@@ -3564,8 +3619,7 @@ class IcebergMetadataSpec extends AnyFunSuite with BeforeAndAfterAll
     val views = Seq[(String, () => org.apache.spark.sql.DataFrame)](
       "DeltaSegments.read" -> (() => DeltaSegments.read(spark, table)),
       "readMoR" -> (() => IcebergMetadata.readMoR(spark, ice)),
-      "readMoR, one scan" ->
-        (() => IcebergMetadata.readMoR(spark, ice, unionSeqLimit = 1)),
+      "readMoRAlgebra" -> (() => IcebergMetadata.readMoRAlgebra(spark, ice)),
       "readTable" -> (() => IcebergMetadata.readTable(spark, ice)))
     val want = snap(DeltaSegments.read(spark, table))
     views.foreach { case (name, build) =>

@@ -401,7 +401,7 @@ class IcebergStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stats = IcebergMetadata.dataFileStats(ice)
     assert(stats.exists(_.content == 1), "fixture lost its pos-delete")
     assert(stats.exists(_.content == 2), "fixture lost its eq-deletes")
-    val expected = IcebergMetadata.readMoR(spark, ice)
+    val expected = IcebergMetadata.readMoRAlgebra(spark, ice)
       .select("id", "v").collect().toSet
     val got = spark.read.format("graft-iceberg").load(ice)
       .select("id", "v").collect().toSet
@@ -429,7 +429,7 @@ class IcebergStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.sql.catalog.gmor.warehouse", wh)
     val viaSql = spark.sql("SELECT id, v FROM gmor.ice")
       .collect().toSet
-    val expected = IcebergMetadata.readMoR(spark, ice)
+    val expected = IcebergMetadata.readMoRAlgebra(spark, ice)
       .select("id", "v").collect().toSet
     assert(viaSql == expected)
     // time travel on an append table through the same catalog
@@ -480,7 +480,7 @@ class IcebergStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0L until 1000L).map(_ * 10).sum)
     // MoR (r17): stays COLUMNAR — the delete filter becomes a row-id
     // mapping over the decoded batch (Iceberg's vectorized-MoR shape);
-    // results must equal the engine's readMoR broadcast plan
+    // results must equal the engine's join algebra
     val ice = publishMorFixture()
     val mScan = new graft.sources.replication.IcebergBatchScan(
       ice, IcebergMetadata.currentSparkSchema(ice), None, Array.empty,
@@ -492,7 +492,7 @@ class IcebergStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       "flat-schema MoR batch scan must answer columnar (row-id mapped)")
     val viaDsv2 = spark.read.format("graft-iceberg").load(ice)
       .select("id", "v").collect().toSet
-    val viaMor = IcebergMetadata.readMoR(spark, ice)
+    val viaMor = IcebergMetadata.readMoRAlgebra(spark, ice)
       .select("id", "v").collect().toSet
     assert(viaDsv2 == viaMor)
     // a projection dropping the key column still merges columnar
@@ -767,7 +767,7 @@ class IcebergStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getLong(1), r.getLong(2))).toSet
       -- d2.filter(_.getAs[String]("change_type") == "delete")
         .map(r => (r.getLong(1), r.getLong(2))).toSet) ++ ins
-    val expected = IcebergMetadata.readMoR(spark, ice)
+    val expected = IcebergMetadata.readMoRAlgebra(spark, ice)
       .select("id", "v").collect().map(r => (r.getLong(0), r.getLong(1)))
       .toSet
     assert(stateAfter == expected)
@@ -1329,12 +1329,13 @@ class IcebergStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(last.get("operation").asText == "delete")
     assert(Option(last.get("graft-sql-op"))
       .exists(_.asText == "delete-by-key"))
-    // IN (...) takes the same path; readMoR agrees with the DSv2 face
+    // IN (...) takes the same path; the join algebra agrees with the
+    // DSv2 face
     spark.sql(s"DELETE FROM $cat.$name WHERE _olake_id IN ('3', '4')")
     val after2 = spark.sql(s"SELECT id FROM $cat.$name").collect()
       .map(_.getLong(0)).toSet
     assert(after2 == before -- Set(2L, 3L, 4L), s"got $after2")
-    val viaMor = IcebergMetadata.readMoR(spark, ice)
+    val viaMor = IcebergMetadata.readMoRAlgebra(spark, ice)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(viaMor == after2)
   }

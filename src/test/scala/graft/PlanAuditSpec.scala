@@ -606,7 +606,8 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p.contains("SinglePartition"), p)
   }
 
-  test("readMoR applies positional deletes by broadcast anti-join — data files never shuffle") {
+  test("readMoR never shuffles data files: the scan filters each file, " +
+    "the join algebra applies positional deletes by broadcast anti-join") {
     import graft.sinks.{DeltaSegments, IcebergMetadata}
     import graft.operators.SystemColumns
     val table = java.nio.file.Files.createTempDirectory("graft_pos_t").toString
@@ -622,7 +623,11 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       .coalesce(1)
     DeltaSegments.writeSegment(seg, table, 1L)
     IcebergMetadata.publishMoR(spark, ice, table)
-    val p = plan(IcebergMetadata.readMoR(spark, ice))
+    assert(IcebergMetadata.dataFileStats(ice).exists(_.content == 1))
+    val scan = plan(IcebergMetadata.readMoR(spark, ice))
+    assert(scan.contains("BatchScan graft-iceberg"), scan)
+    assert(!scan.contains("Exchange") && !scan.contains("Join"), scan)
+    val p = plan(IcebergMetadata.readMoRAlgebra(spark, ice))
     assert(p.contains("BroadcastHashJoin") ||
       p.contains("BroadcastNestedLoopJoin"), p)
     // neither delete flavor may force a sort-merge shuffle of the data

@@ -269,6 +269,37 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll
       maxOf = Some("lsn")).isEmpty)
   }
 
+  test("a crash between the state commit and the publish: the replayed " +
+    "batch id publishes what the state holds") {
+    import graft.sinks.{DeltaSegments, IcebergMetadata}
+    val (table, state, ice) = (tmp() + "/t", tmp() + "/s.json", tmp())
+    val policy = DeltaSegments.CompactionPolicy(maxSegments = 100,
+      maxDeltaRatio = 1e9)
+    val b0 = Seq(lsnLine("a", 10, "insert", 1), lsnLine("b", 11, "insert", 2),
+      lsnLine("c", 12, "insert", 3))
+    val b1 = Seq(lsnLine("a", 13, "update", 4), lsnLine("b", 14, "delete", 0),
+      lsnLine("d", 15, "insert", 5))
+    CdcStream.applyBatch(jsonBatch(b0), 0L, table, state, "ev", policy,
+      icebergDir = Some(ice))
+    // batch 1 commits its state, then the process dies before the publish
+    CdcStream.applyBatch(jsonBatch(b1), 1L, table, state, "ev", policy)
+    def snap(df: org.apache.spark.sql.DataFrame) = df
+      .select("_olake_id", "v").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    val lastPerKey = Set(("a", 4L), ("c", 3L), ("d", 5L))
+    assert(snap(IcebergMetadata.readMoR(spark, ice)) != lastPerKey)
+    // the restarted stream re-delivers batch 1
+    CdcStream.applyBatch(jsonBatch(b1), 1L, table, state, "ev", policy,
+      icebergDir = Some(ice))
+    assert(snap(IcebergMetadata.readMoR(spark, ice)) == lastPerKey)
+    assert(IcebergMetadata.commitState(ice).exists(_.contains("\"batchId\":1")))
+    // a second replay finds the table current and commits nothing
+    val version = IcebergMetadata.currentMetadata(ice).map(_._1)
+    CdcStream.applyBatch(jsonBatch(b1), 1L, table, state, "ev", policy,
+      icebergDir = Some(ice))
+    assert(IcebergMetadata.currentMetadata(ice).map(_._1) == version)
+  }
+
   test("a batch with no change above the committed LSN leaves no " +
     "segment, advances batchId and keeps lsn") {
     import graft.sinks.DeltaSegments
